@@ -100,69 +100,6 @@ object Bench {
         // startup cost into the first measured query
         System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
-    // Also warm the WRITE-side machinery the flagship read query never
-    // touches — parquet committer, dynamic-partition writer, range
-    // sampling, window exec, merge anti-join, AQE stage compilation —
-    // on a ~200-row throwaway store. Without this, all of that JIT /
-    // codegen / classloading lands inside the first measured
-    // store-writing query (q34) instead of session startup, where it
-    // belongs: per-query numbers should measure the query, not which
-    // position in the sweep first exercised a Spark subsystem.
-    try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-benchwarm")
-      val store = new graft.io.ModelStore(tmp.toString)
-      val base = spark.range(200).selectExpr(
-        "cast(id as string) AS k", "id % 7 AS p", "id AS v")
-      store.write(base, "w", "t", partitionBy = Seq("p"),
-        zorderBy = Seq("k"))
-      store.write(base, "w", "z", zorderBy = Seq("k"))   // range sampling
-      val ex = store.read(spark, "w", "t").get
-      val upd = spark.range(100, 250).selectExpr(
-        "cast(id as string) AS k", "id % 7 AS p", "id AS v")
-      store.writeTouchedPartitions(
-        graft.io.MergeWriter.merge(ex, upd, "k"), "w", "t", Seq("p"))
-      store.vacuum(spark, "w", "t", keepLast = 1)
-      Harness.deleteRecursively(tmp.toFile)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] write warm-up failed: ${e.getMessage}")
-    }
-    // Warm the incremental-index machinery the same way: the sharded
-    // Bloom build/probe/merge (ObjectHashAggregate + BloomFilterAggregate
-    // codegen) and the signature-index fold (explode/min-agg, banded
-    // self-join, cluster fixpoint, localCheckpoint) are exercised by
-    // exactly one query each in the sweep, so without this their
-    // first-use JIT/codegen cost lands inside q86/q92's measured time
-    // instead of session startup, where every other subsystem's lives.
-    // ~200 rows: the warm-up measures nothing and costs <2 s.
-    try {
-      import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files.createTempDirectory("graft-incwarm")
-      val st = new graft.io.ModelStore(tmp.toString)
-      val d1 = spark.range(200).selectExpr(
-        "cast(id % 150 as string) AS content_fp", "id AS doc_id")
-      graft.analytics.IncrementalDedup.applyBatch(
-        spark, st, "w", "fps", d1, 0L).count()
-      graft.analytics.IncrementalDedup.applyBatch(
-        spark, st, "w", "fps",
-        spark.range(150, 350).selectExpr(
-          "cast(id as string) AS content_fp", "id AS doc_id"),
-        1L).count()
-      val docs = spark.range(40).selectExpr("id AS doc_id",
-        "concat('warm doc text number ', id, ' with shared shingle " +
-          "content that repeats across documents for banding') AS text")
-      graft.analytics.NearDupIndex.ingest(spark, st, "w", "nd",
-        docs, "doc_id", col("text"), 0L).count()
-      graft.analytics.NearDupIndex.ingest(spark, st, "w", "nd",
-        spark.range(40, 80).selectExpr("id AS doc_id",
-          "concat('warm doc text number ', id, ' with shared shingle " +
-            "content that repeats across documents for banding') AS text"),
-        "doc_id", col("text"), 1L).count()
-      Harness.deleteRecursively(tmp.toFile)
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] index warm-up failed: ${e.getMessage}")
-    }
     spark.catalog.clearCache()
     // Iteration aid: SPARK_GRAFT_ONLY=q34,q92 restricts the sweep to
     // queries whose name starts with one of the comma-separated
@@ -190,12 +127,10 @@ object Bench {
     // executing them once compiles and JIT-warms exactly the classes
     // the measured run will use (measured: identical work costs 5–10×
     // more CPU on its first execution), at ~1/100 of the data. This is
-    // the same principle as the subsystem warm-ups above taken to its
-    // conclusion: the sweep measures steady-state query execution, not
-    // each plan's first-compilation cliff. Disable with a NON-EMPTY
-    // SPARK_GRAFT_NOWARM (e.g. =1) to measure cold-start instead — an
-    // empty value (unset shell interpolation) must keep the warm-up,
-    // like the SPARK_GRAFT_ONLY parser above.
+    // what lets the sweep measure steady-state query execution, not
+    // each plan's first-compilation cliff — including the write, merge
+    // and index subsystems that only the store-writing queries
+    // (q34, q86, q92, ...) exercise.
     val warmDir = new java.io.File(sfDir).getParentFile match {
       case null => None
       case p =>
@@ -204,8 +139,7 @@ object Bench {
           new java.io.File(sfDir).getAbsolutePath) Some(w.getAbsolutePath)
         else None
     }
-    if (!sys.env.get("SPARK_GRAFT_NOWARM").exists(_.nonEmpty))
-      warmDir.foreach { wd =>
+    warmDir.foreach { wd =>
       val t0 = System.nanoTime()
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => selected(n) }

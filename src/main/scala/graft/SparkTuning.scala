@@ -6,14 +6,8 @@ import org.apache.spark.sql.SparkSession
   * Verify, tools, tests) so measured behavior is the shipped
   * behavior. */
 object SparkTuning {
-  /** A/B toggles for the session-global tunings, so each can be
-    * flipped for a clean benchmark comparison without a code edit:
-    * GRAFT_TUNE_COMMITTER=v2, GRAFT_TUNE_OBJHASH=default,
-    * GRAFT_TUNE_PLANCACHE=off (the last read by [[graft.io.Tables]]).
-    * Unset = the shipped configuration (the winners of the round-5
-    * 4-config × 3-sweep A/B recorded in BASELINE.md §round-5). */
-  private def env(k: String): Option[String] = sys.env.get(k)
-
+  /** One shipped configuration: the winners of the round-5
+    * 4-config × 3-sweep A/B recorded in BASELINE.md §round-5. */
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
     // One timezone for every entrypoint: correctness is verified under
     // UTC (the oracle compares timestamp/date bucketing values), so the
@@ -32,8 +26,7 @@ object SparkTuning {
     // task; the fallback stays on as the safety valve for tasks whose
     // groups all run at the cap.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      if (env("GRAFT_TUNE_OBJHASH").contains("default")) "128"
-      else "65536")
+      "65536")
     // FileOutputCommitter stays at v1 (the default). Round 4 shipped
     // v2 (task outputs rename at TASK commit, parallel, instead of the
     // driver's serial JOB-commit pass) on the theory that ModelStore's
@@ -45,10 +38,9 @@ object SparkTuning {
     // metadata move, so the serial pass the theory charges for is
     // microseconds per file. Keep-winners-only ⇒ revert. On a real
     // object-store deployment v2 (or a manifest committer) is worth
-    // re-measuring — flip GRAFT_TUNE_COMMITTER=v2 to A/B it there.
+    // re-measuring.
     .config(
-      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-      if (env("GRAFT_TUNE_COMMITTER").contains("v2")) "2" else "1")
+      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "1")
     // Timestamps write as INT64 TIMESTAMP_MICROS instead of Spark's
     // legacy INT96 default. INT96 is deprecated in the parquet format
     // and — decisively here — carries NO column statistics (parquet
@@ -56,12 +48,8 @@ object SparkTuning {
     // columns get neither row-group min/max skipping under watermark
     // predicates nor commit-time footer stats (graft.io.ParquetStats,
     // the O(1) high-watermark lookup). Micros matches Spark's own
-    // in-memory precision — no value change on round-trip. Flip
-    // GRAFT_TUNE_INT96=on to A/B the legacy behavior (stats lookups
-    // then fall back to scans by design).
-    .config("spark.sql.parquet.outputTimestampType",
-      if (env("GRAFT_TUNE_INT96").contains("on")) "INT96"
-      else "TIMESTAMP_MICROS")
+    // in-memory precision — no value change on round-trip.
+    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // AQE partition coalescing stays at the Spark default
     // (`parallelismFirst=true`). The `false`+16 MB-advisory variant —
     // attractive on paper for intermediate-small shuffles, and the

@@ -16,15 +16,22 @@ import graft.queries.Q
   * the index stores each surviving document's minhash signature and
   * its banded bucket rows in versioned [[ModelStore]] tables.
   *
-  * Scale shape (history never recomputes signatures, never shuffles):
+  * Scale shape (history never recomputes signatures, and never
+  * shuffles while the batch is under the broadcast bounds):
   *  1. batch signatures — one shuffle on the doc id (the codegen'd
   *     explode→min-agg form of q25);
   *  2. history probe — the stored signature table is scanned ONCE per
   *     ingest, its band hashes derived scan-locally (8 xxhash64 per
   *     row, codegen'd — cheaper than persisting and re-shuffling a
   *     band table), and hash-joined against the BROADCAST batch band
-  *     rows: history-side work is a scan, never an exchange (the
-  *     [[IncrementalDedup]] "history never shuffles" discipline);
+  *     rows. History-side work is a scan, never an exchange (the
+  *     [[IncrementalDedup]] "history never shuffles" discipline) only
+  *     below the bounds: the batch's band rows under
+  *     [[BroadcastMaxBandRows]], and its worst-case candidate frame
+  *     (`MaxCandidatesPerDoc` rows per doc) under the same bound.
+  *     Above the band bound the probe is a shuffle-hash join; above
+  *     the candidate bound AQE chooses the verify join. Either way the
+  *     history side may then be exchanged;
   *  3. per-doc candidate cap before verification (window row_number,
   *     smallest historical id first — deterministic) bounds the
   *     verify fan-out on degenerate buckets, the [[NearDup.MaxBucket]]

@@ -388,44 +388,31 @@ final class ModelStore(val root: String) {
     // hash layout.
     // A ranged (zorder) write EXECUTES its input twice: the
     // RangePartitioner's sketch pass samples the child plan to derive
-    // bucket bounds, then the write re-runs it for the data — for a
-    // model write that means the whole transform (window dedup, CASE
-    // ladders, money arithmetic) computes twice per write (guide §1.2:
-    // don't compute things you throw away). Persisting the input
-    // across the two passes (MEMORY_AND_DISK, dropped before commit
-    // returns) trades one cached materialization for that recompute.
-    // A/B at sf0.1 (round 12, targeted q34 min-of-3, quiet windows):
-    // persist 13.73 s vs recompute 13.18 s — the cache round-trip
-    // costs MORE than recomputing these cheap transforms, so the
-    // persist stays OFF by default. The trade reverses when the
-    // transform above the write is expensive relative to its output
-    // bytes (the ≈sf10 medallion bootstrap paid its 15M-row CDC-dedup
-    // window twice, +60 s measured), so the lever stays available for
-    // cluster re-tuning: GRAFT_TUNE_RANGEDPERSIST=on.
-    val ranged = zorderBy.nonEmpty &&
-      sys.env.get("GRAFT_TUNE_RANGEDPERSIST").contains("on")
-    val src =
-      if (ranged)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // bucket bounds, then the write re-runs it for the data. Persisting
+    // the input across the two passes was A/B-measured at sf0.1
+    // (round 12, targeted q34 min-of-3, quiet windows): persist
+    // 13.73 s vs recompute 13.18 s — the cache round-trip costs MORE
+    // than recomputing these cheap transforms, so the write recomputes.
+    // The trade reverses when the transform above the write is
+    // expensive relative to its output bytes (the ≈sf10 medallion
+    // bootstrap paid its 15M-row CDC-dedup window twice, +60 s
+    // measured); cluster re-tuning would revisit it there.
+    val clustered =
+      if (partitionBy.nonEmpty && zorderBy.nonEmpty)
+        df.repartitionByRange((partitionBy ++ zorderBy).map(col): _*)
+          .sortWithinPartitions((partitionBy ++ zorderBy).map(col): _*)
+      else if (partitionBy.nonEmpty)
+        df.repartition(partitionBy.map(col): _*)
+          .sortWithinPartitions(partitionBy.map(col): _*)
+      else if (zorderBy.nonEmpty)
+        df.repartitionByRange(zorderBy.map(col): _*)
+          .sortWithinPartitions(zorderBy.map(col): _*)
       else df
-    try {
-      val clustered =
-        if (partitionBy.nonEmpty && zorderBy.nonEmpty)
-          src.repartitionByRange((partitionBy ++ zorderBy).map(col): _*)
-            .sortWithinPartitions((partitionBy ++ zorderBy).map(col): _*)
-        else if (partitionBy.nonEmpty)
-          src.repartition(partitionBy.map(col): _*)
-            .sortWithinPartitions(partitionBy.map(col): _*)
-        else if (zorderBy.nonEmpty)
-          src.repartitionByRange(zorderBy.map(col): _*)
-            .sortWithinPartitions(zorderBy.map(col): _*)
-        else src
-      val writer = clustered.write.mode("overwrite")
-      val partitioned =
-        if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
-        else writer
-      partitioned.parquet(dest.toString)
-    } finally if (ranged) { src.unpersist(blocking = false); () }
+    val writer = clustered.write.mode("overwrite")
+    val partitioned =
+      if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
+      else writer
+    partitioned.parquet(dest.toString)
   }
 
   /** True iff the CURRENT version's data is laid out as

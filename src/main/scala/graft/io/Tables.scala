@@ -37,26 +37,23 @@ object Tables {
   private val planCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, String, String), CachedPlan]()
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (sys.env.get("GRAFT_TUNE_PLANCACHE").contains("off"))
-      loadUncached(spark, sfDir, name) // A/B toggle (SparkTuning doc)
-    else {
-      // opportunistic purge: entries of STOPPED sessions can never be
-      // reused (identity key) but would pin the session and grow the
-      // map for the JVM lifetime; the map is small (live sessions ×
-      // tables), so the scan is cheap
-      planCache.forEach((k, v) =>
-        if (v.session.sparkContext.isStopped) { planCache.remove(k); () })
-      val cached = planCache.computeIfAbsent(
-        (System.identityHashCode(spark), sfDir, name),
-        _ => CachedPlan(spark, loadUncached(spark, sfDir, name)))
-      // identityHashCode is not unique: if two LIVE sessions collide
-      // on the key, never serve one a plan bound to the other (wrong
-      // session confs, or a failure when that session stops) — the
-      // collider just pays the uncached load
-      if (cached.session eq spark) cached.df
-      else loadUncached(spark, sfDir, name)
-    }
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    // opportunistic purge: entries of STOPPED sessions can never be
+    // reused (identity key) but would pin the session and grow the
+    // map for the JVM lifetime; the map is small (live sessions ×
+    // tables), so the scan is cheap
+    planCache.forEach((k, v) =>
+      if (v.session.sparkContext.isStopped) { planCache.remove(k); () })
+    val cached = planCache.computeIfAbsent(
+      (System.identityHashCode(spark), sfDir, name),
+      _ => CachedPlan(spark, loadUncached(spark, sfDir, name)))
+    // identityHashCode is not unique: if two LIVE sessions collide
+    // on the key, never serve one a plan bound to the other (wrong
+    // session confs, or a failure when that session stops) — the
+    // collider just pays the uncached load
+    if (cached.session eq spark) cached.df
+    else loadUncached(spark, sfDir, name)
+  }
 
   private def loadUncached(spark: SparkSession, sfDir: String,
       name: String): DataFrame = {

@@ -308,21 +308,11 @@ object PipelineQuery {
     presentForOracle(runPipeline(s, d))
   }.copy(sideEffecting = true)
 
-  private def runPipeline(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    // A/B toggle (GRAFT_TUNE_PIPEAQE=off): run the medallion build
-    // without adaptive re-planning — its ~12 materializations are
-    // small fixed-shape plans where AQE's per-stage re-optimization
-    // rounds cost more wall than they save. Scoped to this run and
-    // restored after; measurement decides whether it ships as default.
-    val aqeOff = sys.env.get("GRAFT_TUNE_PIPEAQE").contains("off")
-    val priorAqe = s.conf.get("spark.sql.adaptive.enabled", "true")
-    if (aqeOff) s.conf.set("spark.sql.adaptive.enabled", "false")
-    try runPipelineInner(s, d)
-    finally if (aqeOff) s.conf.set("spark.sql.adaptive.enabled", priorAqe)
-  }
-
-  private def runPipelineInner(s: org.apache.spark.sql.SparkSession,
+  // The build runs under the session's AQE. Disabling it for this run
+  // lost its A/B (round 12, warm sf0.1): wall 17.3 → 21.6 s, task time
+  // 145 → 311 s — AQE's coalescing is worth more than its re-planning
+  // rounds cost on these ~12 materializations.
+  private def runPipeline(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val models = new ReferenceModels(clock)
     val store = new ModelStore(tempStoreDir())

@@ -20,7 +20,6 @@ object Explain {
     val spark = graft.SparkTuning(SparkSession.builder())
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
