@@ -80,17 +80,6 @@ object NearDup {
     * bounds candidate-pair fan-out, same role as LSH banding. */
   val MaxDf = 50
 
-  /** Pair intersection counts over a df-capped inverted index, WITHOUT
-    * the classic index self-join: `groupBy(s)` collects each shingle's
-    * complete doc list into a [[graft.functions.BoundedSetAgg]] buffer
-    * (map-side capped at maxDf+1, overflowed stop-shingles dropped),
-    * then in-group pairs explode from the sorted list — one shuffle of
-    * the index instead of three (window df-count + both self-join
-    * sides) and no index-sized join hash table. Returns
-    * `(a_id, b_id, n_inter)` with `a_id < b_id`, and the per-doc
-    * kept-shingle sizes `(id, n)` — both over the SAME capped index
-    * the self-join form used, so results are identical.
-    */
   /** Total entry volume (Σ|docs| over lists) of a posting-list table
     * — the measured quantity every per-doc `sizes` broadcast is gated
     * on (entries ≥ distinct docs, so it bounds the sizes row count
@@ -114,7 +103,18 @@ object NearDup {
     if (entries <= entryMax) (p: DataFrame) => broadcast(p)
     else (p: DataFrame) => p
 
-  /** Third element is the gated sizes-broadcast wrapper
+  /** Pair intersection counts over a df-capped inverted index, WITHOUT
+    * the classic index self-join: `groupBy(s)` collects each shingle's
+    * complete doc list into a [[graft.functions.BoundedSetAgg]] buffer
+    * (map-side capped at maxDf+1, overflowed stop-shingles dropped),
+    * then in-group pairs explode from the sorted list — one shuffle of
+    * the index instead of three (window df-count + both self-join
+    * sides) and no index-sized join hash table. Returns
+    * `(a_id, b_id, n_inter)` with `a_id < b_id`, and the per-doc
+    * kept-shingle sizes `(id, n)` — both over the SAME capped index
+    * the self-join form used, so results are identical.
+    *
+    * Third element is the gated sizes-broadcast wrapper
     * ([[sizedGate]] over the persisted lists' measured entry count —
     * a cache scan); fourth releases the internal posting-list cache —
     * call it once pairs/sizes are fully consumed (eager composers
@@ -786,15 +786,15 @@ object NearDup {
     labels
   }
 
-  /** Full dedup decision for a document corpus: exact duplicates (by
-    * normalized-text fingerprint) plus near-duplicates (capped-shingle
-    * exact Jaccard ≥ `threshold`), clustered, smallest doc_id kept. */
   /** Cluster threshold of the corpus dedup decision. Interpolated
     * into the stored-artifact staleness signatures — retuning it
     * rebuilds the artifacts instead of serving decisions computed
     * under the old threshold. */
   val DedupThreshold = 0.5
 
+  /** Full dedup decision for a document corpus: exact duplicates (by
+    * normalized-text fingerprint) plus near-duplicates (capped-shingle
+    * exact Jaccard ≥ `threshold`), clustered, smallest doc_id kept. */
   def dedupCorpus(docs: DataFrame, id: String, text: Column,
       threshold: Double = DedupThreshold,
       entryMax: Long = BroadcastShingleEntryMax): DataFrame = {
@@ -1264,15 +1264,11 @@ object NearDup {
   private def clusterDecisionFor(s: SparkSession,
       store: graft.io.ModelStore, docs: DataFrame, fp: String)
       : DataFrame = {
-    graft.io.ArtifactStore.ensure(s, store, "cluster", "decision",
-      decisionSig(fp)) {
-      store.write(
-        dedupCorpus(docs, "doc_id", col("text"), DedupThreshold),
-        "cluster", "decision",
-        description = "dedup cluster decision (doc_id -> keep_id)",
-        meta = Map("corpus_fp" -> decisionSig(fp)))
+    graft.io.ArtifactStore.stored(s, store, "cluster", "decision",
+      decisionSig(fp),
+      "dedup cluster decision (doc_id -> keep_id)") {
+      dedupCorpus(docs, "doc_id", col("text"), DedupThreshold)
     }
-    store.read(s, "cluster", "decision").get
   }
 
   /** Canonical representative ids as a second (tiny, derived)
@@ -1288,17 +1284,12 @@ object NearDup {
       d: String, docs: DataFrame): DataFrame = {
     val store = graft.io.ArtifactStore.forDir("cluster", d)
     val fp = docsFp(d, docs) // ONE corpus scan keys both artifacts
-    graft.io.ArtifactStore.ensure(s, store, "cluster", "canon_reps",
-      repsSig(fp)) {
-      store.write(
-        canonicalSelection(clusterDecisionFor(s, store, docs, fp), docs)
-          .select(col("canonical_id")),
-        "cluster", "canon_reps",
-        description = "canonical representatives (derived from the " +
-          "stored cluster decision)",
-        meta = Map("corpus_fp" -> repsSig(fp)))
+    graft.io.ArtifactStore.stored(s, store, "cluster", "canon_reps",
+      repsSig(fp), "canonical representatives (derived from the " +
+        "stored cluster decision)") {
+      canonicalSelection(clusterDecisionFor(s, store, docs, fp), docs)
+        .select(col("canonical_id"))
     }
-    store.read(s, "cluster", "canon_reps").get
   }
 
   /** The df-capped shingle posting lists as a corpus-keyed stored
@@ -1329,8 +1320,8 @@ object NearDup {
         shingleIndex(docs, "doc_id", col("text")), "doc_id").persist()
       try store.write(lists, "cluster", "postings",
         description = "df-capped shingle posting lists",
-        meta = Map("corpus_fp" -> listsSig(fp),
-          "entries" -> entriesOf(lists).toString))
+        meta = graft.io.ArtifactStore.stamp(listsSig(fp)) +
+          ("entries" -> entriesOf(lists).toString))
       finally { lists.unpersist(); () }
     }
     val lists = store.read(s, "cluster", "postings").get

@@ -156,14 +156,9 @@ object NgramOps {
       docs: DataFrame): DataFrame = {
     val store = graft.io.ArtifactStore.forDir("cluster", d)
     val fp = NearDup.docsFp(d, docs)
-    graft.io.ArtifactStore.ensure(s, store, "cluster", "doc_grams",
-      dgSig(fp)) {
-      store.write(docGrams(docs), "cluster", "doc_grams",
-        description = "distinct per-doc n-gram fingerprints " +
-          "(decontamination index)",
-        meta = Map("corpus_fp" -> dgSig(fp)))
-    }
-    store.read(s, "cluster", "doc_grams").get
+    graft.io.ArtifactStore.stored(s, store, "cluster", "doc_grams",
+      dgSig(fp), "distinct per-doc n-gram fingerprints " +
+        "(decontamination index)")(docGrams(docs))
   }
 
   /** The in-memory form of the stored relation: one row per distinct
@@ -453,13 +448,10 @@ object NgramOps {
       d: String, docs: DataFrame): DataFrame = {
     val store = graft.io.ArtifactStore.forDir("cluster", d)
     val fp = NearDup.docsFp(d, docs)
-    graft.io.ArtifactStore.ensure(s, store, "cluster",
-      "bigram_buckets", dbcSig(fp)) {
-      store.write(bigramBucketCounts(docs), "cluster", "bigram_buckets",
-        description = "per-doc bucketed-bigram counts (LM input)",
-        meta = Map("corpus_fp" -> dbcSig(fp)))
-    }
-    store.read(s, "cluster", "bigram_buckets").get
+    graft.io.ArtifactStore.stored(s, store, "cluster",
+      "bigram_buckets", dbcSig(fp),
+      "per-doc bucketed-bigram counts (LM input)")(
+      bigramBucketCounts(docs))
   }
 
   val qLmPerplexity: Q = {

@@ -325,7 +325,7 @@ object Pq {
       |WHERE rnk <= ${VectorOps.TopK} ORDER BY q_id, rnk""".stripMargin) {
     (s, d) =>
       // coarse tier from the shared staleness-keyed artifact store
-      // (AnnIndex.coarseArtifacts): the centroids/assignment this
+      // (AnnIndex.tierArtifacts): the centroids/assignment this
       // chain needs are bit-identical to what q32/q91/q113 already
       // persisted for this corpus (deterministic training, content
       // fingerprint), so the PQ TRAINING query — whose contract is
@@ -334,7 +334,8 @@ object Pq {
       // train fresh in-memory every run; the stored postings relation
       // carries exactly the (c_id, vec_id, qv, n2) the residual chain
       // consumes.
-      val (cents0, postings) = AnnIndex.coarseArtifacts(s, d)
+      val (cents0, postings) =
+        AnnIndex.tierArtifacts(s, d, AnnIndex.pinned)
       val cents = cents0.persist()
       val assigned = postings.persist()
       val subs = subspaces(residuals(assigned, cents)).persist()

@@ -138,26 +138,6 @@ object Temporal {
   }
 
   // --------------------------------------------- point-in-time join
-  /** PIT (point-in-time) dimension resolution — the companion of the
-    * SCD2 history builder ([[graft.ops.Scd2]], q72) and the as-of join
-    * (q43): every fact row is joined to the dimension VERSION whose
-    * validity interval contains the fact's timestamp, the lookup a
-    * reproducible feature store / training-data audit needs ("which
-    * dim version did this example see?"). Semantics = interval
-    * containment `valid_from <= t < valid_to`, which an as-of lookup
-    * alone does NOT give: a version whose interval was closed by a
-    * DELETE before the probe time must resolve to NO version, not to
-    * the stale latest-at-or-before row.
-    *
-    * Plan: the SCD2 intervals come from one per-key window pass; the
-    * containment probe is the union-and-fill [[AsOfJoin.asOf]] (one
-    * shuffle on the key, linear per key — no interval explosion)
-    * followed by a scan-local `v_to` check that nulls out probes whose
-    * matched interval had already closed. Versions are deduped to one
-    * per (key, valid_from) — max version id wins, exactly the row the
-    * oracle's zero-length-interval semantics would keep — so the
-    * as-of contract (unique right times per key) holds by
-    * construction. */
   /** Resolve each fact to the version whose `[v_from, v_to)` interval
     * contains the fact's `factTime` (NULL payload when no interval
     * does). `versions` must carry `v_from`/`v_to`; `payload` lists the
@@ -185,6 +165,26 @@ object Temporal {
       when(contained, col("v_from")).as("valid_from"): _*)
   }
 
+  /** PIT (point-in-time) dimension resolution — the companion of the
+    * SCD2 history builder ([[graft.ops.Scd2]], q72) and the as-of join
+    * (q43): every fact row is joined to the dimension VERSION whose
+    * validity interval contains the fact's timestamp, the lookup a
+    * reproducible feature store / training-data audit needs ("which
+    * dim version did this example see?"). Semantics = interval
+    * containment `valid_from <= t < valid_to`, which an as-of lookup
+    * alone does NOT give: a version whose interval was closed by a
+    * DELETE before the probe time must resolve to NO version, not to
+    * the stale latest-at-or-before row.
+    *
+    * Plan: the SCD2 intervals come from one per-key window pass; the
+    * containment probe is the union-and-fill [[AsOfJoin.asOf]] (one
+    * shuffle on the key, linear per key — no interval explosion)
+    * followed by a scan-local `v_to` check that nulls out probes whose
+    * matched interval had already closed. Versions are deduped to one
+    * per (key, valid_from) — max version id wins, exactly the row the
+    * oracle's zero-length-interval semantics would keep — so the
+    * as-of contract (unique right times per key) holds by
+    * construction. */
   val qPitJoin: Q = Q(
     "q101_pit_join",
     """WITH feed AS (

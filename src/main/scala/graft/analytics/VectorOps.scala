@@ -459,13 +459,8 @@ object VectorOps {
     * times per build. 4096 rows ≈ 2.2 MB at 64 dims — comfortably
     * bounded. Both arms are bit-identical by construction (same
     * plan, different physical placement) — spec-pinned by forcing
-    * the distributed arm at a small K. The system property exists so
-    * a scale probe can engage the distributed arm below its natural
-    * n ≳ 17M threshold (`-Dgraft.kmeans.flat.max.k=0`) — it changes
-    * WHERE the centroid table lives, never its values. */
-  val FlatCollectMaxK: Int =
-    sys.props.get("graft.kmeans.flat.max.k").flatMap(_.toIntOption)
-      .getOrElse(4096)
+    * the distributed arm at a small K (`maxCollectK = 0`). */
+  val FlatCollectMaxK: Int = 4096
 
   /** Deterministic distributed k-means over quantized vectors: Lloyd
     * iterations where each step is a broadcast-join assignment plus a
@@ -951,14 +946,6 @@ object VectorOps {
     embeddingDedupStored(s, d).orderBy("vec_id")
   }.copy(sideEffecting = true)
 
-  /** The q39 dedup decision (vec_id → keep_id) as a corpus-keyed
-    * stored artifact: the banded LSH → exact-verify → fixpoint
-    * clustering is a pure function of the embedding corpus, so it
-    * runs once per snapshot (staleness-keyed by content fingerprint
-    * PLUS the banding/threshold hyperparameters) and every invocation
-    * reads the decision — production dedup's own lifecycle, and the
-    * 100 TB shape: the global clustering is a snapshot job, not a
-    * per-query one. */
   /** q39 decision threshold and the corpus's embedding width —
     * NAMED so the staleness signature interpolates the values the
     * build actually uses (a retune moves the signature; hand-edited
@@ -969,6 +956,15 @@ object VectorOps {
   private def embDedupSig(fp: String): String =
     s"$fp|embdedup,b=$DedupBands,mb=$DedupMaxBucket," +
       s"t=$EmbDedupThreshold,d=$EmbDims"
+
+  /** The q39 dedup decision (vec_id → keep_id) as a corpus-keyed
+    * stored artifact: the banded LSH → exact-verify → fixpoint
+    * clustering is a pure function of the embedding corpus, so it
+    * runs once per snapshot (staleness-keyed by content fingerprint
+    * PLUS the banding/threshold hyperparameters) and every invocation
+    * reads the decision — production dedup's own lifecycle, and the
+    * 100 TB shape: the global clustering is a snapshot job, not a
+    * per-query one. */
   private[analytics] def embeddingDedupStored(s: SparkSession,
       d: String): DataFrame = {
     val store = graft.io.ArtifactStore.forDir("cluster", d)
@@ -979,15 +975,10 @@ object VectorOps {
     val fp = graft.io.ArtifactStore.bySource(d, "embeddings", "fp")(
       graft.io.ArtifactStore.contentFp(emb, col("vec_id"),
         col("embedding")))
-    graft.io.ArtifactStore.ensure(s, store, "cluster", "emb_dedup",
-      embDedupSig(fp)) {
-      store.write(
-        embeddingDedupCorpus(emb, EmbDims, EmbDedupThreshold),
-        "cluster", "emb_dedup",
-        description = "embedding dedup decision (vec_id -> keep_id)",
-        meta = Map("corpus_fp" -> embDedupSig(fp)))
+    graft.io.ArtifactStore.stored(s, store, "cluster", "emb_dedup",
+      embDedupSig(fp), "embedding dedup decision (vec_id -> keep_id)") {
+      embeddingDedupCorpus(emb, EmbDims, EmbDedupThreshold)
     }
-    store.read(s, "cluster", "emb_dedup").get
   }
 
   // ------------------------------------- corpus cluster profiling
@@ -1021,12 +1012,13 @@ object VectorOps {
       |  FROM ($assigned) a JOIN ($cents) c USING (c_id)
       |  GROUP BY a.c_id) t ORDER BY c_id""".stripMargin) { (s, d) =>
       // coarse tier from the shared staleness-keyed artifact store
-      // (AnnIndex.coarseArtifacts): the centroids/assignment are
+      // (AnnIndex.tierArtifacts): the centroids/assignment are
       // bit-identical to the in-memory chain (deterministic training,
       // content-fingerprint staleness), so the per-cluster profile
       // reads them instead of retraining; the oracle replays the full
       // Lloyd chain either way
-      val (cents, assigned) = AnnIndex.coarseArtifacts(s, d)
+      val (cents, assigned) =
+        AnnIndex.tierArtifacts(s, d, AnnIndex.pinned)
       assigned
         .join(broadcast(cents), "c_id")
         .withColumn("dot", dotQ(col("qv"), col("c_qv")))
@@ -1062,7 +1054,7 @@ object VectorOps {
 
   /** The within-cell dedup decision alone, over an already-computed
     * cell assignment (vec_id, c_id, qv, n2) — consumers of the stored
-    * coarse artifact ([[AnnIndex.coarseArtifacts]]) run only this
+    * coarse artifact ([[AnnIndex.tierArtifacts]]) run only this
     * Σ|cell|² pair pass per query. */
   private[analytics] def semDedupFromAssigned(assigned: DataFrame,
       threshold: Double = SemDedupThreshold): DataFrame = {
@@ -1114,7 +1106,8 @@ object VectorOps {
       // cell assignment from the shared stored coarse tier (identical
       // to the in-memory chain — see q80); only the within-cell pair
       // pass runs per query
-      semDedupFromAssigned(AnnIndex.coarseArtifacts(s, d)._2)
+      semDedupFromAssigned(
+        AnnIndex.tierArtifacts(s, d, AnnIndex.pinned)._2)
         .orderBy("vec_id")
     }.copy(sideEffecting = true)
   }
@@ -1123,10 +1116,11 @@ object VectorOps {
     * scale prescription ("k grown alongside the corpus") engaged the
     * way q119 engages it for the KNN graph: the within-cell pair pass
     * runs over the DERIVED-K stored assignment ([[AnnIndex
-    * .scaledArtifacts]]), so Σ|cell|² stays ~n^1.5 instead of n²/16,
-    * and the oracle replays the identical Lloyd chain at the same
-    * scalar-subquery K, certifying the decision at the non-default
-    * geometry. q96 remains the pinned-anchor twin. */
+    * .tierArtifacts]] at [[AnnIndex.scaled]]), so Σ|cell|² stays
+    * ~n^1.5 instead of n²/16, and the oracle replays the identical
+    * Lloyd chain at the same scalar-subquery K, certifying the
+    * decision at the non-default geometry. q96 remains the
+    * pinned-anchor twin. */
   val qSemDedupScaled: Q = {
     val (_, assigned) = trainedSqlAt(DerivedKSql)
     val cos = cosSql("a.qv", "b.qv", "a.n2", "b.n2")
@@ -1143,7 +1137,8 @@ object VectorOps {
         |    AS keep_flag
         |FROM assigned s LEFT JOIN drp d USING (vec_id)
         |ORDER BY s.vec_id""".stripMargin) { (s, d) =>
-      semDedupFromAssigned(AnnIndex.scaledArtifacts(s, d)._2)
+      semDedupFromAssigned(
+        AnnIndex.tierArtifacts(s, d, AnnIndex.scaled)._2)
         .orderBy("vec_id")
     }.copy(sideEffecting = true)
   }

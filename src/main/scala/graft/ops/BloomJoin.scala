@@ -106,11 +106,6 @@ object BloomJoin {
   def shardOf(key: Column, numShards: Int): Column =
     pmod(xxhash64(key), lit(numShards.toLong)).cast("int")
 
-  /** Build the sharded sketch table `(shard INT, sketch BINARY)` of
-    * `keys`: one map-side-combined aggregation, `numShards` output
-    * rows. Per-shard capacity is sized to `estKeys / numShards` at
-    * `numBits / numShards` bits, so total size and false-positive rate
-    * match the monolithic filter over the same population. */
   /** The EFFECTIVE per-shard parameters [[buildShardedSketch]] will
     * use for a given request: requested totals divided across shards,
     * then clamped to the session's runtime-bloomFilter conf limits.
@@ -126,6 +121,11 @@ object BloomJoin {
     (math.max(1L, clampedKeys), math.max(8L, clampedBits))
   }
 
+  /** Build the sharded sketch table `(shard INT, sketch BINARY)` of
+    * `keys`: one map-side-combined aggregation, `numShards` output
+    * rows. Per-shard capacity is sized to `estKeys / numShards` at
+    * `numBits / numShards` bits, so total size and false-positive rate
+    * match the monolithic filter over the same population. */
   def buildShardedSketch(df: DataFrame, key: Column, numShards: Int,
       estKeys0: Long = EstKeys, numBits0: Long = NumBits): DataFrame = {
     val (perShardKeys, perShardBits) =

@@ -252,7 +252,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-annstale").toString
     val emb = Tables.load(spark, Dir, "embeddings")
     emb.write.parquet(s"$dir/embeddings.parquet")
-    val (_, a1) = AnnIndex.coarseArtifacts(spark, dir)
+    val (_, a1) = AnnIndex.tierArtifacts(spark, dir, AnnIndex.pinned)
     val n1 = a1.count()
     assert(n1 == emb.count())
     // shrink the corpus in place (drop half the vectors). A LIVE
@@ -266,7 +266,7 @@ class AnnIndexSpec extends AnyFunSuite {
     half.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     spark.catalog.refreshByPath(s"$dir/embeddings.parquet")
     val s2 = spark.newSession()
-    val (_, a2) = AnnIndex.coarseArtifacts(s2, dir)
+    val (_, a2) = AnnIndex.tierArtifacts(s2, dir, AnnIndex.pinned)
     assert(a2.count() == nHalf,
       "stale postings served for changed corpus")
     // unchanged corpus: pure read — no version churn
@@ -277,7 +277,7 @@ class AnnIndexSpec extends AnyFunSuite {
           .getBytes("UTF-8")).map("%02x".format(_)).mkString)
     val v = store.currentVersion(s2, AnnIndex.Layer, "emb_postings")
     assert(v >= 2, s"rebuild must commit a new version, got $v")
-    AnnIndex.coarseArtifacts(s2, dir)._2.count()
+    AnnIndex.tierArtifacts(s2, dir, AnnIndex.pinned)._2.count()
     assert(store.currentVersion(s2, AnnIndex.Layer,
       "emb_postings") == v)
     half.unpersist(): Unit
@@ -473,7 +473,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // independent form: same cell-local candidates ranked by a window
     // row_number instead of the bounded TopKAgg — results must agree
     // exactly (ties: cos desc, then smaller neighbor id)
-    val (_, postings) = AnnIndex.coarseArtifacts(spark, Dir)
+    val (_, postings) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)
     val probe = postings.select(col("c_id"), col("vec_id").as("q_id"),
       col("qv").as("q_qv"), col("n2").as("q_n2"))
     val w = org.apache.spark.sql.expressions.Window
@@ -495,13 +495,14 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("stored KNN graph serves exactly the in-memory relation, and " +
       "a second read is a pure serve (no rebuild)") {
-    val mem = AnnIndex.knnGraphRaw(spark, Dir).collect()
+    val mem = AnnIndex.graphFromPostings(
+        AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)._2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val stored = AnnIndex.knnGraphStored(spark, Dir).collect()
+    val stored = AnnIndex.knnGraphStored(spark, Dir, AnnIndex.pinned).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     assert(stored.sorted.toSeq == mem.sorted.toSeq)
     graft.io.ArtifactStore.drainBuilds()
-    AnnIndex.knnGraphStored(spark, Dir).count()
+    AnnIndex.knnGraphStored(spark, Dir, AnnIndex.pinned).count()
     assert(!graft.io.ArtifactStore.drainBuilds()
       .exists(_.endsWith("emb_knn")), "second read rebuilt the graph")
   }

@@ -46,7 +46,7 @@ class KnnScaleSpec extends AnyFunSuite {
     val k = VectorOps.derivedK(n)
     assert(k != VectorOps.NumCentroids,
       "fixture must exercise a non-default K")
-    val stored = AnnIndex.knnGraphScaledStored(spark, Dir)
+    val stored = AnnIndex.knnGraphStored(spark, Dir, AnnIndex.scaled)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2), r.getInt(3))).toSet
     val base = quant(emb)
@@ -59,14 +59,15 @@ class KnnScaleSpec extends AnyFunSuite {
     assert(stored.nonEmpty && stored == mem)
     // and the stored geometry is genuinely the derived one: more
     // centroid rows than the pinned 16
-    val (scents, _, sk) = AnnIndex.scaledArtifacts(spark, Dir)
-    assert(sk == k && scents.count() > VectorOps.NumCentroids)
+    val (scents, _) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.scaled)
+    assert(AnnIndex.scaled(spark, Dir).k == k &&
+      scents.count() > VectorOps.NumCentroids)
   }
 
   test("ring seed: partition-local ring + boundary stitching ≡ the " +
       "global (c_id, vec_id) successor cycle; no unpartitioned " +
       "WindowExec in its plan or in q117's") {
-    val (_, posts) = AnnIndex.coarseArtifacts(spark, Dir)
+    val (_, posts) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)
     val ringDf = AnnIndex.ringSeed(posts)
     val got = ringDf.collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSet
@@ -91,7 +92,7 @@ class KnnScaleSpec extends AnyFunSuite {
   test("ring stitch distributed arm: forcing the range-chunked " +
       "stitch emits the identical edge set with no O(cells) driver " +
       "collect structure and no unpartitioned WindowExec") {
-    val (_, posts) = AnnIndex.coarseArtifacts(spark, Dir)
+    val (_, posts) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)
     val collectArm = AnnIndex.ringSeed(posts).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // maxCollectCells = 0 forces the distributed arm at the fixture's
@@ -167,7 +168,7 @@ class KnnScaleSpec extends AnyFunSuite {
     // strictly under it
     val (g, rounds) = AnnIndex.knnDescentConverged(spark, Dir, 20)
     assert(rounds < 20, s"descent did not converge in $rounds rounds")
-    val (_, posts) = AnnIndex.coarseArtifacts(spark, Dir)
+    val (_, posts) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)
     val again = AnnIndex.descentRound(g.select("vec_id", "nbr_id"),
       AnnIndex.ringSeed(posts), posts.select("vec_id", "qv", "n2"))
     assert(again.select("vec_id", "nbr_id", "rnk")
@@ -192,11 +193,11 @@ class KnnScaleSpec extends AnyFunSuite {
     // least-redundant: no unselected member of a cell has a strictly
     // lower nn_sim than a selected one (ties break by vec_id, so
     // compare on the (nn_sim, vec_id) key)
-    val nn = AnnIndex.knnGraphStored(spark, Dir)
+    val nn = AnnIndex.knnGraphStored(spark, Dir, AnnIndex.pinned)
       .filter(col("rnk") === 1)
       .select(col("vec_id"), col("cos_sim")).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val (_, posts) = AnnIndex.coarseArtifacts(spark, Dir)
+    val (_, posts) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)
     val members = posts.select("c_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val selected = sel.map(r => (r._1, r._2)).toSet
@@ -209,9 +210,10 @@ class KnnScaleSpec extends AnyFunSuite {
       assert(got == want, s"cell $c selected $got, want $want")
     }
     // derived-K tier: same selection, scaled artifacts
-    val (_, sposts, k) = AnnIndex.scaledArtifacts(spark, Dir)
+    val (_, sposts) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.scaled)
+    val k = AnnIndex.scaled(spark, Dir).k
     val scaledSel = AnnIndex.diversitySelect(
-      AnnIndex.knnGraphScaledStored(spark, Dir),
+      AnnIndex.knnGraphStored(spark, Dir, AnnIndex.scaled),
       sposts.select("c_id", "vec_id"))
     val byCell = scaledSel.groupBy("c_id")
       .agg(count(lit(1)).as("n"), first("quota").as("q")).collect()
@@ -265,7 +267,7 @@ class KnnScaleSpec extends AnyFunSuite {
     }
     // the round genuinely refines the scaled graph: descent must add
     // cross-cell edges the cell-local pass cannot see
-    val g0 = AnnIndex.knnGraphScaledStored(spark, Dir)
+    val g0 = AnnIndex.knnGraphStored(spark, Dir, AnnIndex.scaled)
       .select("vec_id", "nbr_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rows.exists(r => !g0.contains((r._1, r._2))),
@@ -274,9 +276,9 @@ class KnnScaleSpec extends AnyFunSuite {
 
   test("descent vector-lookup gate: broadcast and shuffle arms emit " +
       "identical rounds, and the gated arm genuinely broadcasts") {
-    val (_, posts) = AnnIndex.coarseArtifacts(spark, Dir)
+    val (_, posts) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)
     val vecs = posts.select("vec_id", "qv", "n2")
-    val g = AnnIndex.knnGraphStored(spark, Dir)
+    val g = AnnIndex.knnGraphStored(spark, Dir, AnnIndex.pinned)
       .select("vec_id", "nbr_id")
     val ring = AnnIndex.ringSeed(posts).localCheckpoint()
     val bcast = AnnIndex.descentRound(g, ring, vecs, vecCount = 1L)
@@ -438,7 +440,8 @@ class KnnScaleSpec extends AnyFunSuite {
       "postings carry the vectors (a drop-in cell-partitioned " +
       "relation)") {
     val posts = AnnIndex.hierArtifacts(spark, Dir)
-    val (cents, _, k) = AnnIndex.scaledArtifacts(spark, Dir)
+    val (cents, _) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.scaled)
+    val k = AnnIndex.scaled(spark, Dir).k
     val emb = Tables.load(spark, Dir, "embeddings")
     val fresh = VectorOps.hierAssign(quant(emb), cents,
         VectorOps.hierK1(k))

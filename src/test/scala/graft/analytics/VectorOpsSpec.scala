@@ -369,7 +369,7 @@ class VectorOpsSpec extends AnyFunSuite {
     val memA = VectorOps.ivfAssign(base, cents)
       .select("vec_id", "c_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (sc, sa) = AnnIndex.coarseArtifacts(spark, d)
+    val (sc, sa) = AnnIndex.tierArtifacts(spark, d, AnnIndex.pinned)
     assert(sc.collect()
       .map(r => (r.getLong(r.fieldIndex("c_id")),
         r.getSeq[Long](r.fieldIndex("c_qv")),

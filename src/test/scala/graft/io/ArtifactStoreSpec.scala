@@ -84,6 +84,38 @@ class ArtifactStoreSpec extends AnyFunSuite {
       "a staleness hit must record nothing")
   }
 
+  test("stored: a miss builds and stamps, a hit never evaluates the " +
+      "frame, a new signature rebuilds and keeps the old version") {
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-artstored").toString)
+    var evals = 0
+    def art(sig: String, v: String): Seq[String] =
+      ArtifactStore.stored(spark, store, "l", "t", sig, "spec artifact") {
+        evals += 1
+        Seq((1L, v)).toDF("k", "v")
+      }.collect().map(_.getString(1)).toSeq
+    def stamped(sig: String): Boolean =
+      ArtifactStore.stamp(sig).forall { case (k, v) =>
+        store.meta(spark, "l", "t", k).contains(v) }
+    assert(art("s1", "a") == Seq("a") && evals == 1 && stamped("s1"))
+    // same signature: served from the store, the frame never built
+    assert(art("s1", "b") == Seq("a") && evals == 1)
+    assert(store.currentVersion(spark, "l", "t") == 1)
+    // changed signature: rebuilt, stamped, previous version kept
+    assert(art("s2", "c") == Seq("c") && evals == 2 && stamped("s2"))
+    assert(store.currentVersion(spark, "l", "t") == 2)
+    assert(store.readVersion(spark, "l", "t", 1)
+      .collect().map(_.getString(1)).toSeq == Seq("a"))
+    // keepLast=2: one more rebuild ages v1 out
+    assert(art("s3", "d") == Seq("d") && evals == 3)
+    val fs = new org.apache.hadoop.fs.Path(store.versionDir("l", "t", 1))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(
+      store.versionDir("l", "t", 1))))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(
+      store.versionDir("l", "t", 2))))
+  }
+
   test("forDir roots on GRAFT_ARTIFACT_ROOT / graft.artifact.root " +
       "when set (the durable-storage production story)") {
     val durable = Files.createTempDirectory("graft-durable").toString
