@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Fold one query's per-pass samples into its reported time: the
     * MINIMUM over passes (co-tenant spikes are uncorrelated across
@@ -85,12 +84,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.SparkTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up the JVM / codegen / parquet reader once so the first
     // measured query isn't charged for session startup.
@@ -108,7 +102,7 @@ object Bench {
     // mean "everything", not "nothing" — a zero-query sweep would
     // print an empty result and skip the detail artifact silently
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+      .map(Harness.names)
       .filter(_.nonEmpty)
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))

@@ -19,6 +19,12 @@ object Harness {
     case c => c.toString
   } + "\""
 
+  /** A comma-separated name list, each name trimmed, empties dropped:
+    * "q34, q92" selects q92 and a trailing comma never injects a blank
+    * name. */
+  def names(s: String): Seq[String] =
+    s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+
   /** Recursive delete of a scratch dir (best-effort; does not follow
     * anything listFiles does not surface). */
   def deleteRecursively(f: java.io.File): Unit = {

@@ -61,4 +61,14 @@ object SparkTuning {
     // task launch is cheap and parallelism is everything; production
     // cluster deploys should re-tune advisoryPartitionSizeInBytes for
     // their shuffle sizes rather than inherit a local-mode setting.
+
+  /** The local session every entrypoint builds: `local[cpus]` with one
+    * shuffle partition per core and no UI. `cpus` defaults to
+    * `SPARK_GRAFT_CPUS` (4 when unset). */
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      : SparkSession.Builder =
+    apply(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,10 @@ object Verify {
     require(args.length >= 2,
       "usage: graft.Verify <sfDir> <outDir> [q1,q2,...]")
     val Array(sfDir, outDir) = args.take(2)
-    // trim + drop empties: "q34, q92" must select q92, and a stray
-    // trailing comma must not silently select nothing (Bench's
-    // SPARK_GRAFT_ONLY parser has the same contract)
-    val only: Option[Set[String]] =
-      if (args.length > 2)
-        Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-          .filter(_.nonEmpty)
-      else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.SparkTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // an all-empty list selects every query, never none
+    val only: Option[Set[String]] = Option.when(args.length > 2)(
+      Harness.names(args(2)).toSet).filter(_.nonEmpty)
+    val spark = SparkTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries

@@ -1246,36 +1246,23 @@ object AnnIndex {
       .filter(col("vec_id") =!= col("nbr_id"))
   }
 
-  /** Broadcast byte budget for [[descentRound]]'s score-side vector
-    * table (~1 GiB — comfortably inside a large-executor heap, far
-    * above Spark's 8 GB broadcast hard limit's safety margin). */
-  val DescentBroadcastMaxBytes: Long = 1L << 30
-
   /** Estimated bytes per (vec_id, qv, n2) row: EmbDims quantized
     * longs plus the two id/norm longs — 528 B at the corpus's 64-dim
     * embeddings, matching the round-10 measurement. DERIVED from the
     * dimensionality (the ADVICE round-10 fix): if the embedding width
-    * grows, the row-count ceiling below shrinks with it instead of
-    * silently forcing a multi-GB broadcast through a stale constant. */
+    * grows, the [[graft.ops.BroadcastGate]] row ceiling (~2M rows at
+    * 64 dims) shrinks with it instead of silently forcing a multi-GB
+    * broadcast through a stale constant. Under that ceiling
+    * [[descentRound]] BROADCASTS the vector table into its two
+    * score-side lookups: the candidate set is O(n·k²) bare id pairs —
+    * cheap to shuffle — but a shuffled lookup reshuffles every
+    * candidate row with its vector (the gate's round-10 measurement;
+    * the q107-class finding for this family). Past the ceiling the
+    * joins fall back to shuffles: a 1000-executor cluster has the
+    * aggregate spill disk a laptop doesn't, and a forced multi-GB
+    * broadcast would be the failure instead. Specs force the gate
+    * both ways and pin identical results. */
   def descentVecRowBytes: Long = 8L * (VectorOps.EmbDims + 2)
-
-  /** Corpus-size ceiling under which [[descentRound]] BROADCASTS the
-    * vector table into its two score-side lookups
-    * (= [[DescentBroadcastMaxBytes]] / [[descentVecRowBytes]], ~2M
-    * rows at 64 dims). The candidate set is O(n·k²) bare id pairs —
-    * cheap to shuffle — but a shuffled vector lookup makes the SECOND
-    * join reshuffle every candidate row carrying a ~520 B quantized
-    * vector: ~150 GB of shuffle write at the 2M-vector decade, which
-    * exceeded this node's disk (measured round 10; the q107-class
-    * finding for this family). Broadcasting the vecs table keeps both
-    * lookups map-side and pipelines scoring straight into the bounded
-    * TopKAgg partial — zero wide shuffles. Past the ceiling the joins
-    * fall back to shuffles: a 1000-executor cluster has the aggregate
-    * spill disk a laptop doesn't, and a forced multi-GB broadcast
-    * would be the failure instead. Specs force the gate both ways and
-    * pin identical results. */
-  val DescentBroadcastMaxVecs: Long =
-    DescentBroadcastMaxBytes / descentVecRowBytes
 
   /** Per-vector ceiling on REVERSE edges admitted into a descent
     * round's undirected working set — NN-Descent's reverse-neighbor
@@ -1302,7 +1289,7 @@ object AnnIndex {
     * every candidate exactly, keep top-k. Candidate volume is
     * ≤ (2k+3)² per vector REGARDLESS of cell size or in-degree — one
     * bounded-fan-out self-join + one distinct + two vector lookups,
-    * volume-gated per [[DescentBroadcastMaxVecs]] (`vecCount` is the
+    * volume-gated per [[descentVecRowBytes]] (`vecCount` is the
     * corpus size; negative = unknown = the shuffle arm). Monotone by
     * construction: the candidate set contains every current (forward)
     * neighbor, so a vector's neighborhood only improves round over
@@ -1311,12 +1298,7 @@ object AnnIndex {
   private[analytics] def descentRound(graph: DataFrame,
       ring: DataFrame, vecs: DataFrame,
       vecCount: => Long = -1L): DataFrame = {
-    val gate: DataFrame => DataFrame = {
-      val n = vecCount
-      if (n >= 0 && n <= DescentBroadcastMaxVecs)
-        (p: DataFrame) => broadcast(p)
-      else (p: DataFrame) => p
-    }
+    val gate = graft.ops.BroadcastGate(vecCount, descentVecRowBytes)
     val fwd = graph.select("vec_id", "nbr_id").unionByName(ring)
       .distinct()
     // reverse sampling: ≤ ReverseCap smallest-id reverse edges per

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.{ModelStore, Tables}
-import graft.ops.BloomJoin
+import graft.ops.{BloomJoin, BroadcastGate}
 import graft.queries.Q
 
 /** Incremental exact dedup against ALL of history — the batch-tier
@@ -78,13 +78,14 @@ object IncrementalDedup {
     * way, so start here and avoid rebuild churn on tiny histories. */
   val MinSketchKeys = 1L << 16
 
-  /** Batch-side row bound for the BROADCAST join arm: under it the
-    * candidate/existing key sets broadcast (history is hash-probed in
-    * place and never shuffles); over it — a TB-scale crawl no single
-    * executor could hold — the verify joins fall back to shuffle-hash
-    * (one key-shuffle of batch AND the matched slice of history; the
-    * unavoidable cost of exact verification at that batch size). */
-  val BroadcastMaxRows = 4000000L
+  /** [[graft.ops.BroadcastGate]] width of the candidate/existing key
+    * sets: one 32-char md5 hex content fingerprint. Under the budget
+    * they broadcast (history is hash-probed in place and never
+    * shuffles); over it — a TB-scale crawl no single executor could
+    * hold — the verify joins fall back to shuffle-hash (one key-shuffle
+    * of batch AND the matched slice of history; the unavoidable cost
+    * of exact verification at that batch size). */
+  val KeyRowBytes: Long = 8L + 8 + 32
 
   /** Fold one batch into the fingerprint history at `layer`.`name`;
     * returns the kept (first-copy) rows. `batch` must carry `keyCol`
@@ -96,7 +97,7 @@ object IncrementalDedup {
       estKeys: Long = AutoSize,
       numBits: Long = AutoSize,
       numShards: Int = SketchShards,
-      broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+      broadcastCap: Long = BroadcastGate.MaxBytes): DataFrame = {
     require(batch.columns.contains(keyCol), s"batch lacks $keyCol")
     // Half-explicit sizing derives the missing twin at the standard
     // 8-bits-per-key ratio: passing only estKeys used to leave
@@ -125,9 +126,9 @@ object IncrementalDedup {
     try {
       // materializes the cache and gates the join arms below
       val nWinners = winners.count()
-      def gate(df: DataFrame): DataFrame =
-        if (nWinners <= broadcastMaxRows) broadcast(df)
-        else df.hint("shuffle_hash")
+      // key sets are one row per fingerprint: uniform build sides
+      val gate = BroadcastGate(nWinners, KeyRowBytes, broadcastCap,
+        uniform = true)
       val history = store.read(spark, layer, name)
       // the sharded sketch table is read ONCE per fold: its shard map
       // is collected (sketch-sized — the sanctioned bounded scalar)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.ops.Exact
+import graft.ops.{BroadcastGate, Exact}
 import graft.queries.Q
 
 /** Near-duplicate detection for LLM training-data pipelines.
@@ -88,20 +88,15 @@ object NearDup {
     lists.agg(coalesce(sum(size(col("docs"))), lit(0L)))
       .head().getLong(0)
 
-  /** Broadcast-or-shuffle wrapper for the per-doc `sizes` lookup
-    * joins, volume-gated like [[invertedSimJoinReleasable]]'s (the
-    * q107 discipline, applied to EVERY sizes join): a sizes table is
-    * one 16-byte row per corpus doc — trivially broadcastable at gate
-    * SFs but unbounded by any design constant, and a FORCED broadcast
-    * on a ~10⁹-doc corpus (~16–32 GB) aborts the job. Below
-    * `entryMax` the joins broadcast; past it they run as shuffles —
-    * still O(candidates) rows. Both plans emit identical results
-    * (specs force the gate both ways per family). */
-  private[analytics] def sizedGate(entries: => Long,
-      entryMax: Long = BroadcastShingleEntryMax)
-      : DataFrame => DataFrame =
-    if (entries <= entryMax) (p: DataFrame) => broadcast(p)
-    else (p: DataFrame) => p
+  /** [[graft.ops.BroadcastGate]] width of a per-doc `sizes` row
+    * (doc_id, n). Every sizes lookup join is volume-gated (the q107
+    * discipline): entries ≥ docs, so `entries` rows of this width
+    * bound the table from above. A sizes table is trivially
+    * broadcastable at gate SFs but unbounded by any design constant;
+    * past the budget the joins run as shuffles — still O(candidates)
+    * rows. Both plans emit identical results (specs force the gate
+    * both ways per family). */
+  val SizesRowBytes: Long = 8L * 2 + 8
 
   /** Pair intersection counts over a df-capped inverted index, WITHOUT
     * the classic index self-join: `groupBy(s)` collects each shingle's
@@ -114,19 +109,20 @@ object NearDup {
     * kept-shingle sizes `(id, n)` — both over the SAME capped index
     * the self-join form used, so results are identical.
     *
-    * Third element is the gated sizes-broadcast wrapper
-    * ([[sizedGate]] over the persisted lists' measured entry count —
-    * a cache scan); fourth releases the internal posting-list cache —
-    * call it once pairs/sizes are fully consumed (eager composers
-    * like [[dedupCorpus]] do; lazy query entries leave it to the
-    * harness-level cache clear). */
+    * Third element is the gated sizes-broadcast wrapper (as many
+    * [[SizesRowBytes]] rows as the persisted lists' measured entry
+    * count — a cache scan); fourth releases the internal posting-list
+    * cache — call it once pairs/sizes are fully consumed (eager
+    * composers like [[dedupCorpus]] do; lazy query entries leave it
+    * to the harness-level cache clear). */
   private[analytics] def invertedPairCounts(sh: DataFrame, id: String,
-      maxDf: Int = MaxDf, entryMax: Long = BroadcastShingleEntryMax)
+      maxDf: Int = MaxDf, broadcastCap: Long = BroadcastGate.MaxBytes)
       : (DataFrame, DataFrame, DataFrame => DataFrame, () => Unit) = {
     // persist: feeds pair explosion, per-doc sizes, AND the gate count
     val lists = postingLists(sh, id, maxDf).persist()
     val (pairs, sizes) = pairCountsFromLists(lists, id)
-    (pairs, sizes, sizedGate(entriesOf(lists), entryMax),
+    (pairs, sizes,
+      BroadcastGate(entriesOf(lists), SizesRowBytes, broadcastCap),
       () => { lists.unpersist(); () })
   }
 
@@ -207,7 +203,7 @@ object NearDup {
   /** The Jaccard ≥ 0.5 pair test alone, over already-computed
     * pair/size counts — consumers of the stored posting lists run
     * only this part per query. `sized` is the gated broadcast wrapper
-    * ([[sizedGate]]) for the two per-doc sizes lookup joins; specs
+    * ([[SizesRowBytes]]) for the two per-doc sizes lookup joins; specs
     * force it both ways and assert identical pair sets. */
   private[analytics] def jaccardFromCounts(pairs: DataFrame,
       sizes: DataFrame, sized: DataFrame => DataFrame): DataFrame = {
@@ -243,7 +239,7 @@ object NearDup {
   /** The directional containment tests alone, over already-computed
     * pair/size counts — consumers of the stored posting lists run
     * only this part per query. `sized` is the gated broadcast wrapper
-    * ([[sizedGate]]) for the two per-doc sizes lookup joins; specs
+    * ([[SizesRowBytes]]) for the two per-doc sizes lookup joins; specs
     * force it both ways and assert identical pair sets. */
   private[analytics] def containmentFromCounts(pairs: DataFrame,
       sizes: DataFrame, sized: DataFrame => DataFrame): DataFrame = {
@@ -797,10 +793,10 @@ object NearDup {
     * exact Jaccard ≥ `threshold`), clustered, smallest doc_id kept. */
   def dedupCorpus(docs: DataFrame, id: String, text: Column,
       threshold: Double = DedupThreshold,
-      entryMax: Long = BroadcastShingleEntryMax): DataFrame = {
+      broadcastCap: Long = BroadcastGate.MaxBytes): DataFrame = {
     val (inter, sizes, sized, releaseLists) =
       invertedPairCounts(shingleIndex(docs, id, text), id,
-        entryMax = entryMax)
+        broadcastCap = broadcastCap)
     val pairs = inter
       .join(sized(sizes.select(col(id).as("a_id"), col("n").as("na"))),
         Seq("a_id"))
@@ -1051,9 +1047,13 @@ object NearDup {
   /** [[prefixSimJoin]] plus a release hook for the internal shingle
     * cache — the [[invertedPairCounts]]/[[invertedSimJoinReleasable]]
     * contract: eager composers call it once the result is consumed;
-    * lazy query entries leave it to the harness-level cache clear. */
+    * lazy query entries leave it to the harness-level cache clear.
+    * `broadcastCap` caps the verify-array broadcast (specs force it
+    * both ways; both plans are the same pair set). */
   private[analytics] def prefixSimJoinReleasable(docs: DataFrame,
-      tauNum: Int = 3, tauDen: Int = 5): (DataFrame, () => Unit) = {
+      tauNum: Int = 3, tauDen: Int = 5,
+      broadcastCap: Long = BroadcastGate.MaxBytes)
+      : (DataFrame, () => Unit) = {
     import org.apache.spark.sql.expressions.Window
     // full distinct shingle index: feeds df, ranking, and BOTH verify
     // sides — tokenized once. Shingles shuffle as 8-byte xxhash64
@@ -1116,12 +1116,9 @@ object NearDup {
     // a sub-200k-doc corpus of very long documents would blow past the
     // budget a doc-count gate assumes, and sh is already cached so
     // this count is a cache scan, not a second pass over the table
-    val gate = sh.count() <= BroadcastShingleEntryMax
-    def side(as: String) = {
-      val p = docArrs.select(col("doc_id").as(as + "_id"),
-        col("arr").as(as))
-      if (gate) broadcast(p) else p
-    }
+    val gate = BroadcastGate(sh.count(), ArrEntryBytes, broadcastCap)
+    def side(as: String) = gate(
+      docArrs.select(col("doc_id").as(as + "_id"), col("arr").as(as)))
     val nInter = size(array_intersect(col("a"), col("b"))).cast("long")
     val na = size(col("a")).cast("long")
     val nb = size(col("b")).cast("long")
@@ -1135,12 +1132,14 @@ object NearDup {
     (out, () => { sh.unpersist(); () })
   }
 
-  /** Above this many distinct (doc, shingle) entries the q107 verify
-    * arrays stop broadcasting (16M × ~10 B ≈ 150 MB of shingle
-    * arrays) and the two candidate lookups run as shuffle joins
-    * instead. Measured on the persisted index itself, so long-document
-    * corpora hit the gate by volume, not by row count. */
-  val BroadcastShingleEntryMax = 16000000L
+  /** Broadcast bytes per distinct (doc, shingle) entry of the q107
+    * verify arrays (doc_id, arr): 8 B of array payload per entry, and
+    * at worst one entry per doc, whose id slot, array slot and header
+    * and null bitset it then carries alone. Past the budget the two
+    * candidate lookups run as shuffle joins instead. Gated on the
+    * persisted index itself, so long-document corpora hit the gate by
+    * volume, not by row count. */
+  val ArrEntryBytes: Long = 8L * 2 + 8 + (8 + 8)
 
   val qPrefixSimJoin: Q = Q(
     "q107_prefix_simjoin",
@@ -1308,9 +1307,7 @@ object NearDup {
     * construction — the artifact rebuilds whenever the corpus does),
     * with a one-scan fallback for pre-stamp stores. */
   private[analytics] def postingListsStored(s: SparkSession,
-      d: String, docs: DataFrame,
-      entryMax: Long = BroadcastShingleEntryMax)
-      : (DataFrame, DataFrame => DataFrame) = {
+      d: String, docs: DataFrame): (DataFrame, DataFrame => DataFrame) = {
     val store = graft.io.ArtifactStore.forDir("cluster", d)
     val fp = docsFp(d, docs)
     graft.io.ArtifactStore.ensure(s, store, "cluster", "postings",
@@ -1325,9 +1322,9 @@ object NearDup {
       finally { lists.unpersist(); () }
     }
     val lists = store.read(s, "cluster", "postings").get
-    (lists, sizedGate(
+    (lists, BroadcastGate(
       store.meta(s, "cluster", "postings", "entries").map(_.toLong)
-        .getOrElse(entriesOf(lists)), entryMax))
+        .getOrElse(entriesOf(lists)), SizesRowBytes))
   }
 
   /** Exact τ-similarity join via the plain inverted index — the right
@@ -1336,18 +1333,18 @@ object NearDup {
     * ANY lossless low-τ join — the output itself approaches that
     * bound), so run it on a deduped/rep tier, not a raw corpus. */
   def invertedSimJoin(docs: DataFrame, tauNum: Int, tauDen: Int,
-      entryMax: Long = BroadcastShingleEntryMax): DataFrame =
-    invertedSimJoinReleasable(docs, tauNum, tauDen, entryMax)._1
+      broadcastCap: Long = BroadcastGate.MaxBytes): DataFrame =
+    invertedSimJoinReleasable(docs, tauNum, tauDen, broadcastCap)._1
 
   /** [[invertedSimJoin]] plus a release hook for the internal shingle
     * cache — the [[invertedPairCounts]] contract: eager composers call
     * it once the result is consumed; lazy query entries leave it to
-    * the harness-level cache clear. `entryMax` caps the per-doc sizes
-    * broadcast (specs force it both ways; both plans are the same
-    * pair set). */
+    * the harness-level cache clear. `broadcastCap` caps the per-doc
+    * sizes broadcast (specs force it both ways; both plans are the
+    * same pair set). */
   private[analytics] def invertedSimJoinReleasable(docs: DataFrame,
       tauNum: Int, tauDen: Int,
-      entryMax: Long = BroadcastShingleEntryMax)
+      broadcastCap: Long = BroadcastGate.MaxBytes)
       : (DataFrame, () => Unit) = {
     // persisted: feeds BOTH self-join sides, the sizes aggregate, and
     // the gate count — without it the window-heavy shingleIndex
@@ -1356,16 +1353,10 @@ object NearDup {
       .select(col("doc_id"), xxhash64(col("s")).as("s"))
       .persist()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // broadcast gate, the q107 discipline: sizes is one 16-byte row
-    // per doc — trivially broadcastable on a deduped rep tier at gate
-    // SFs, but unbounded by any design constant (a 10⁹-doc rep tier
-    // would abort the job on a forced broadcast). Measure the
-    // persisted index (entries ≥ docs, already cached, so the count
-    // is a cache scan) against the same budget the verify arrays use;
-    // past it the two sizes joins run as shuffles — still
-    // O(candidates) rows.
-    val gate = sh.count() <= entryMax
-    def sized(p: DataFrame) = if (gate) broadcast(p) else p
+    // sizes broadcast gate (SizesRowBytes): measure the persisted
+    // index (entries ≥ docs, already cached, so the count is a cache
+    // scan) against the same budget the verify arrays use.
+    val sized = BroadcastGate(sh.count(), SizesRowBytes, broadcastCap)
     val inter = sh.select(col("doc_id").as("a_id"), col("s"))
       .join(sh.select(col("doc_id").as("b_id"), col("s")), "s")
       .filter(col("a_id") < col("b_id"))

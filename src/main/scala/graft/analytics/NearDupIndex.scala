@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.{ModelStore, Tables}
+import graft.ops.BroadcastGate
 import graft.queries.Q
 
 /** Persisted MinHash-LSH signature index: incremental NEAR-dup against
@@ -26,12 +27,12 @@ import graft.queries.Q
   *     band table), and hash-joined against the BROADCAST batch band
   *     rows. History-side work is a scan, never an exchange (the
   *     [[IncrementalDedup]] "history never shuffles" discipline) only
-  *     below the bounds: the batch's band rows under
-  *     [[BroadcastMaxBandRows]], and its worst-case candidate frame
-  *     (`MaxCandidatesPerDoc` rows per doc) under the same bound.
-  *     Above the band bound the probe is a shuffle-hash join; above
-  *     the candidate bound AQE chooses the verify join. Either way the
-  *     history side may then be exchanged;
+  *     below the [[graft.ops.BroadcastGate]] byte budget: the batch's
+  *     band rows ([[IdRowBytes]] wide), and its worst-case candidate
+  *     frame (`MaxCandidatesPerDoc` rows per doc, [[SigRowBytes]]
+  *     wide). Above it the probe is a shuffle-hash join and AQE
+  *     chooses the verify join; either way the history side may then
+  *     be exchanged;
   *  3. per-doc candidate cap before verification (window row_number,
   *     smallest historical id first — deterministic) bounds the
   *     verify fan-out on degenerate buckets, the [[NearDup.MaxBucket]]
@@ -75,13 +76,12 @@ object NearDupIndex {
   val SigFamily: String =
     s"minhash2-k${NearDup.NumHashes}-b${NearDup.NumBands}"
 
-  /** Batch-side BAND-row bound for the broadcast probe arm: under it
-    * the batch band rows broadcast against the scan-local history
-    * bands (history never shuffles); over it — a TB-scale crawl — the
-    * probe joins fall back to shuffle-hash, the unavoidable exchange
-    * at that batch size (same adaptive discipline as
-    * [[IncrementalDedup.BroadcastMaxRows]]). */
-  val BroadcastMaxBandRows = 4000000L
+  /** [[graft.ops.BroadcastGate]] row widths: id-only sides carry at
+    * most three id/hash fields (the band row: band_idx, band_hash,
+    * doc_id); sig-carrying sides at most two ids and the
+    * NumHashes-long sig (the candidate row: doc_id, old_id, sig). */
+  val IdRowBytes: Long = 8L * 3 + 8
+  val SigRowBytes: Long = 8L * 3 + 8 + (8 + 8L * NumHashes)
 
   // Signature, band, and agreement definitions live in NearDup (the
   // withSimhash one-definition convention): this index PERSISTS
@@ -99,12 +99,12 @@ object NearDupIndex {
   def ingest(spark: SparkSession, store: ModelStore, layer: String,
       name: String, docs: DataFrame, id: String, text: Column,
       batchId: Long, threshold: Double = SigAgreeThreshold,
-      broadcastMaxBandRows: Long = BroadcastMaxBandRows): DataFrame = {
+      broadcastCap: Long = BroadcastGate.MaxBytes): DataFrame = {
     val sigs = signatures(docs, id, text)
       .withColumnRenamed(id, "doc_id").persist()
     try {
       ingestWithSigs(spark, store, layer, name, docs, id, sigs,
-        batchId, threshold, broadcastMaxBandRows)
+        batchId, threshold, broadcastCap)
     } finally sigs.unpersist(): Unit
   }
 
@@ -119,33 +119,26 @@ object NearDupIndex {
   private def ingestWithSigs(spark: SparkSession, store: ModelStore,
       layer: String, name: String, docs: DataFrame, id: String,
       sigs: DataFrame, batchId: Long, threshold: Double,
-      broadcastMaxBandRows: Long): DataFrame = {
+      broadcastCap: Long): DataFrame = {
     val bands = bandRows(sigs, "doc_id")
-    // materializes the sigs cache; gates the probe-join arm (bands are
-    // exactly NumBands rows per signed doc)
-    val nBandRows = timed(spark, "sig-count")(sigs.count()) * NumBands
-    // Three gates, by what bounds the gated side:
-    //  - gateProbe: the bands probe only. Band rows are uniformly
-    //    NumBands per doc (no inflation), and above the broadcast
-    //    bound the shuffle-hash hint keeps the history scan the probe
-    //    side of that one join.
-    //  - gate: doc-bounded sides (≤ one row per batch doc — sigs,
-    //    labels, anchors, histMin, survivors). Broadcast under the
-    //    bound; ABOVE it fall back to AQE, never a forced shuffle-hash
-    //    build — a skewed or wide side must stay free to sort-merge.
+    // materializes the sigs cache; the signed-doc count bounds every
+    // gated side below
+    val nSigs = timed(spark, "sig-count")(sigs.count())
+    // Four gates, by what bounds the gated side:
+    //  - gateProbe: the band rows, exactly NumBands per doc (uniform);
+    //  - gate / gateSig: doc-bounded sides (≤ one row per batch doc),
+    //    id-only (labels, anchors, histMin, survivors) or carrying a
+    //    sig (sigs and the sa/sb lookups);
     //  - gateCand: the candidate-verify frame, which can inflate to
-    //    MaxCandidatesPerDoc rows per doc EACH carrying a 32-long sig.
-    //    Its broadcast is pinned only when that worst case is itself
-    //    under the bound (a degenerate-bucket batch must not pin a
-    //    multi-GB broadcast that AQE's sized plan would have avoided).
-    def gateProbe(df: DataFrame): DataFrame =
-      if (nBandRows <= broadcastMaxBandRows) broadcast(df)
-      else df.hint("shuffle_hash")
-    def gate(df: DataFrame): DataFrame =
-      if (nBandRows <= broadcastMaxBandRows) broadcast(df) else df
-    val candBound = nBandRows / NumBands * MaxCandidatesPerDoc
-    def gateCand(df: DataFrame): DataFrame =
-      if (candBound <= broadcastMaxBandRows) broadcast(df) else df
+    //    MaxCandidatesPerDoc sig-carrying rows per doc — a
+    //    degenerate-bucket batch must not pin a multi-GB broadcast
+    //    that AQE's sized plan would have avoided.
+    val gateProbe = BroadcastGate(nSigs * NumBands, IdRowBytes,
+      broadcastCap, uniform = true)
+    val gate = BroadcastGate(nSigs, IdRowBytes, broadcastCap)
+    val gateSig = BroadcastGate(nSigs, SigRowBytes, broadcastCap)
+    val gateCand = BroadcastGate(nSigs * MaxCandidatesPerDoc,
+      SigRowBytes, broadcastCap)
 
     // ---- history probe: ONE column-pruned scan of the stored sigs,
     // band hashes derived scan-locally, batch side broadcast under the
@@ -171,11 +164,11 @@ object NearDupIndex {
         .filter(col("__rn") <= MaxCandidatesPerDoc).drop("__rn")
       val oldSigs = hist
         .select(col("doc_id").as("old_id"), col("sig").as("old_sig"))
-      // the verify join: batch sigs broadcast under the doc gate; the
+      // the verify join: batch sigs broadcast under the sig gate; the
       // candidate frame (≤ MaxCandidatesPerDoc × batch rows, each
       // carrying a sig array) broadcasts only under its OWN bound —
       // above it the history-side join is left to AQE's sized plan
-      gateCand(cands.join(gate(sigs), Seq("doc_id")))
+      gateCand(cands.join(gateSig(sigs), Seq("doc_id")))
         .join(oldSigs, Seq("old_id"))
         .filter(sigAgree(col("sig"), col("old_sig")) >= threshold)
         .groupBy("doc_id").agg(min("old_id").as("h_dup"))
@@ -193,9 +186,9 @@ object NearDupIndex {
       // sig attachment under the gate too (batch-bounded by
       // definition): two broadcast lookups instead of two exchanges
       // of the pair set
-      .join(gate(sigs.select(col("doc_id").as("a_id"),
+      .join(gateSig(sigs.select(col("doc_id").as("a_id"),
         col("sig").as("sa"))), Seq("a_id"))
-      .join(gate(sigs.select(col("doc_id").as("b_id"),
+      .join(gateSig(sigs.select(col("doc_id").as("b_id"),
         col("sig").as("sb"))), Seq("b_id"))
       .filter(sigAgree(col("sa"), col("sb")) >= threshold)
       .select("a_id", "b_id")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.queries.Registry
 
 /** Plan-inspection utility: dump `explain("formatted")` for the named
@@ -11,17 +9,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names: Set[String] =
-      // trim + drop empties: "q34, q92" must select q92 and a trailing
-      // comma must not inject an empty name (same contract as the
-      // Verify/Bench selectors)
-      if (args.length > 1)
-        args(1).split(",").map(_.trim).filter(_.nonEmpty).toSet
+      if (args.length > 1) graft.Harness.names(args(1)).toSet
       else Set.empty
-    val spark = graft.SparkTuning(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // a misspelled name silently matching nothing would print no plans
     // and exit 0 — the reviewer would conclude "no issues" from a typo

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Run a single registry query against a testdata dir — the targeted
   * profiling/debugging loop (Bench runs everything; this runs one).
   *
@@ -11,12 +9,7 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.SparkTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val q = graft.queries.Registry.all.find(_.name == name)
       .getOrElse(sys.error(s"unknown query $name"))

@@ -94,14 +94,10 @@ object ScaleUp {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val only = if (args.length > 3)
-      Some(args(3).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.SparkTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // an all-empty list means every table, as in Verify and Bench
+    val only = Option.when(args.length > 3)(
+      graft.Harness.names(args(3)).toSet).filter(_.nonEmpty)
+    val spark = graft.SparkTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, src, out, factor, only)
     spark.stop()

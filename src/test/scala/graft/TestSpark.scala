@@ -6,11 +6,8 @@ import org.apache.spark.sql.SparkSession
   * expensive; ScalaTest suites run sequentially in one JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = graft.SparkTuning(SparkSession.builder())
-      .master("local[4]")
+    val s = graft.SparkTuning.local("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -203,14 +203,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("forced-large batch (broadcast gate 0) takes the shuffle arm " +
       "and makes identical decisions") {
-    def fold(maxRows: Long): Set[Long] = {
+    def fold(cap: Long): Set[Long] = {
       val st = store()
       IncrementalDedup.applyBatch(spark, st, "d", "fps",
         docs(1L -> "one", 2L -> "two"), 0L,
-        broadcastMaxRows = maxRows): Unit
+        broadcastCap = cap): Unit
       IncrementalDedup.applyBatch(spark, st, "d", "fps",
         docs(3L -> "one", 4L -> "three", 5L -> "THREE"), 1L,
-        broadcastMaxRows = maxRows): Unit
+        broadcastCap = cap): Unit
       keptIds(st.read(spark, "d", "fps").get)
     }
     val shuffled = fold(0L) // every batch is "too big to broadcast"

@@ -166,19 +166,19 @@ class NearDupIndexSpec extends AnyFunSuite {
 
   test("forced-large batch (band-row gate 0) takes the shuffle-probe " +
       "arm and makes identical decisions") {
-    def run(maxBandRows: Long): Map[Long, (Boolean, Long)] = {
+    def run(cap: Long): Map[Long, (Boolean, Long)] = {
       val store = new ModelStore(
         Files.createTempDirectory("graft-ndidx5").toString)
       val base = docs.limit(120)
       NearDupIndex.ingest(spark, store, "nd", "idx", base,
         "doc_id", col("text"), 0L,
-        broadcastMaxBandRows = maxBandRows).count()
+        broadcastCap = cap).count()
       val copies = base.select(
         (col("doc_id") + 1000000L).as("doc_id"),
         concat(col("text"), lit(" extra")).as("text"))
       NearDupIndex.ingest(spark, store, "nd", "idx", copies,
         "doc_id", col("text"), 1L,
-        broadcastMaxBandRows = maxBandRows)
+        broadcastCap = cap)
         .collect().map(r => r.getLong(0) ->
           ((r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2))))
         .toMap

@@ -369,7 +369,7 @@ class NearDupSpec extends AnyFunSuite {
       "counts consumers (q24 jaccard / q98 containment / dedupCorpus): " +
       "identical results") {
     // every sizes lookup join is volume-gated now (the
-    // invertedSimJoin discipline): below entryMax it broadcasts,
+    // invertedSimJoin discipline): below the cap it broadcasts,
     // past it it shuffles — a forced broadcast of a per-corpus-doc
     // table would abort the job at ~10⁹ docs. Both plans must emit
     // byte-identical results.
@@ -397,11 +397,11 @@ class NearDupSpec extends AnyFunSuite {
       cOpen == rows(NearDup.containmentFromCounts(pairs, sizes, shut)))
     lists.unpersist()
     // ...and dedupCorpus (the decision-artifact build) threads its
-    // entryMax through invertedPairCounts to the same gate
+    // broadcastCap through invertedPairCounts to the same gate
     val dOpen = NearDup.dedupCorpus(docs, "doc_id", col("text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val dShut = NearDup.dedupCorpus(docs, "doc_id", col("text"),
-        entryMax = 0L)
+        broadcastCap = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(dOpen == dShut && dOpen.exists { case (d, k) => d != k })
   }
@@ -409,7 +409,7 @@ class NearDupSpec extends AnyFunSuite {
   test("invertedSimJoin broadcast gate forced both ways: identical " +
       "pair set; release hook frees the shingle cache") {
     // the low-τ plan's per-doc sizes broadcast is volume-gated (the
-    // q107 discipline): below entryMax the two sizes joins broadcast,
+    // q107 discipline): below the cap the two sizes joins broadcast,
     // above it they shuffle — both plans must emit the SAME pairs
     val rnd = new scala.util.Random(7)
     val docs = (0 until 25).flatMap { b =>
@@ -418,8 +418,8 @@ class NearDupSpec extends AnyFunSuite {
       Seq(t, near)
     }.zipWithIndex.map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
       .toDF("doc_id", "text")
-    def pairs(entryMax: Long) =
-      NearDup.invertedSimJoin(docs, 1, 20, entryMax)
+    def pairs(cap: Long) =
+      NearDup.invertedSimJoin(docs, 1, 20, cap)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3)))
@@ -440,6 +440,46 @@ class NearDupSpec extends AnyFunSuite {
     release()
     assert(spark.sparkContext.getPersistentRDDs.size <= before,
       "release() must unpersist the shingle cache")
+  }
+
+  test("prefixSimJoin verify-array gate forced both ways: identical " +
+      "pair set, and the shut gate broadcasts no array lookup") {
+    // the q107 shuffle arm: past the cap the two `arr` lookups must run
+    // as shuffle joins and still emit the broadcast arm's pairs
+    val rnd = new scala.util.Random(5)
+    val docs = (0 until 25).flatMap { b =>
+      val t = Seq.tabulate(10 + rnd.nextInt(10))(i => s"p${b}_$i")
+      Seq(t, t.updated(rnd.nextInt(t.size), s"x$b"))
+    }.zipWithIndex.map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
+      .toDF("doc_id", "text")
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.types.ArrayType
+    // only the gate's hint may broadcast here: Spark's own size-based
+    // choice would broadcast these tiny sides on either arm
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    def run(cap: Long): (Set[(Long, Long, Long, Long)], Int) = {
+      val (out, release) = NearDup.prefixSimJoinReleasable(docs, 3, 5,
+        broadcastCap = cap)
+      val arrBroadcasts = out.queryExecution.sparkPlan.collect {
+        case j: BroadcastHashJoinExec
+            if (if (j.buildSide == BuildLeft) j.left else j.right)
+              .output.exists(_.dataType.isInstanceOf[ArrayType]) => j
+      }.size
+      val rows = out.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      release()
+      (rows, arrBroadcasts)
+    }
+    try {
+      val (open, openArr) = run(Long.MaxValue)
+      val (shut, shutArr) = run(0L)
+      assert(open.nonEmpty && open == shut)
+      assert(openArr >= 2, "the open gate should broadcast both lookups")
+      assert(shutArr == 0, "the shut gate must not broadcast an arr side")
+    } finally spark.conf.set(key, prior)
   }
 
   test("prefix index is a strict subset ordered rarity-first") {
