@@ -447,20 +447,18 @@ object AnnIndex {
     * them (the emptied-partition contract of
     * [[graft.io.ModelStore.writeTouchedPartitions]]; the earlier
     * read-back + union + full rewrite was ~keep× write amplification
-    * per commit — wrong for a production-rate stream). The store's
-    * own versions are vacuumed to the usual two-deep
-    * concurrent-reader pin. Replay-safe like [[sink]]: foreachBatch
-    * is at-least-once, so the last served batch id is stamped in the
-    * commit meta and re-deliveries are skipped — the stamp key is
-    * namespaced by `runId` because a stream RESTARTED WITH A FRESH
-    * CHECKPOINT resets batch ids to 0, and an un-namespaced stamp
-    * from the previous run would silently drop every batch until the
-    * ids caught back up (data loss with no error). Callers pass the
-    * started query's `runId` (or any per-start nonce); the default
-    * empty id keeps single-run semantics for a sink whose out table
-    * lives and dies with one checkpoint. Stream ≡ batch parity, the
-    * replay no-op, O(batch) hard-linked commits, and the fresh-run
-    * restart are spec-pinned in AnnIndexSpec. */
+    * per commit — wrong for a production-rate stream). Replay-safe like
+    * [[sink]]: foreachBatch is at-least-once, so the last served batch
+    * id is stamped in the commit meta and re-deliveries are skipped —
+    * the stamp key is namespaced by `runId` because a stream RESTARTED
+    * WITH A FRESH CHECKPOINT resets batch ids to 0, and an
+    * un-namespaced stamp from the previous run would silently drop
+    * every batch until the ids caught back up (data loss with no
+    * error). Callers pass the started query's `runId` (or any per-start
+    * nonce); the default empty id keeps single-run semantics for a sink
+    * whose out table lives and dies with one checkpoint. Stream ≡ batch
+    * parity, the replay no-op, O(batch) hard-linked commits, and the
+    * fresh-run restart are spec-pinned in AnnIndexSpec. */
   def serveSink(store: ModelStore, name: String, out: ModelStore,
       outLayer: String, outName: String,
       nprobe: Int = VectorOps.NumProbes,
@@ -503,7 +501,6 @@ object AnnIndex {
           description = "streaming ANN serving results (bounded tail)",
           meta = Map(stampKey -> batchId.toString))
     }
-    out.vacuum(spark, outLayer, outName, keepLast = 2)
   }
 
   /** foreachBatch sink: continuous index growth — each micro-batch of
@@ -532,8 +529,8 @@ object AnnIndex {
     * index). Every annindex tier lives in it (coarse, derived-K,
     * hier, PQ, KNN graphs, serving shortlists), so gate logic lives
     * HERE once: their queries must agree byte-for-byte on key
-    * derivation, fingerprint formula, and vacuum policy or they fight
-    * over the same store. */
+    * derivation and fingerprint formula or they fight over the same
+    * store. */
   private def dirStore(d: String): ModelStore =
     graft.io.ArtifactStore.forDir("annindex", d)
 
@@ -603,18 +600,12 @@ object AnnIndex {
     * BEFORE postings and the POSTINGS meta is the gate, so a reader
     * that passes the gate and then loads both tables sees one
     * generation — a torn pair would need the corpus itself to change
-    * mid-query, outside any snapshot contract. Vacuums keep TWO
-    * versions (not one): a concurrent session that resolved the
-    * previous `_CURRENT` pointer just before this rebuild committed
-    * must still find its files — keepLast=2 is the read-pin that makes
-    * rebuild-then-vacuum safe for one generation of concurrent
-    * readers (ArtifactStoreSpec proves it). */
+    * mid-query, outside any snapshot contract. */
   private def ensureTier(s: SparkSession, d: String, t: Tier)
       : ModelStore = {
     val store = dirStore(d)
     graft.io.ArtifactStore.ensure(s, store, Layer,
-      postingsTable(t.name), t.sig,
-      vacuumTables = Seq(centroidsTable(t.name))) {
+      postingsTable(t.name), t.sig) {
       build(s, store, t.name, Tables.load(s, d, "embeddings"), k = t.k,
         extraMeta = graft.io.ArtifactStore.stamp(t.sig))
     }
@@ -632,8 +623,7 @@ object AnnIndex {
     val fp = corpusFp(s, d)
     if (withPq)
       graft.io.ArtifactStore.ensure(s, store, Layer,
-        pqCodesTable("emb"), pqSig(fp),
-        vacuumTables = Seq(pqCodebookTable("emb"))) {
+        pqCodesTable("emb"), pqSig(fp)) {
         buildPq(s, store, "emb",
           extraMeta = graft.io.ArtifactStore.stamp(pqSig(fp)))
       }
@@ -1819,9 +1809,7 @@ object AnnIndex {
       graft.io.ArtifactStore.contentFp(hist, col("vec_id"),
         col("embedding")))
     val sig = incKnnSig(fp)
-    graft.io.ArtifactStore.ensure(s, store, Layer, knnTable("inc"),
-      sig, vacuumTables = Seq(centroidsTable("inc"),
-        postingsTable("inc"))) {
+    graft.io.ArtifactStore.ensure(s, store, Layer, knnTable("inc"), sig) {
       build(s, store, "inc", hist,
         extraMeta = graft.io.ArtifactStore.stamp(sig))
       buildKnn(s, store, "inc",

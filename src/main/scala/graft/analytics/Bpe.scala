@@ -302,9 +302,10 @@ object Bpe {
     * near-dup indexes: production trains the tokenizer once per
     * corpus snapshot and every downstream job (token counting,
     * packing, budget planning) loads the SAME ranked merges instead
-    * of retraining. Versioning makes tokenizer upgrades atomic and
-    * time-travelable — a training run can pin the exact merge table
-    * it packed with. */
+    * of retraining. Versioning makes tokenizer upgrades atomic, and a
+    * run that resolved the merge table it packs with still reads it
+    * across ONE upgrade (the store keeps the previous version until
+    * the next commit, [[graft.io.ModelStore.RetainVersions]]). */
   def saveMerges(spark: SparkSession, store: graft.io.ModelStore,
       layer: String, name: String, merges: Seq[Merge]): Unit = {
     import spark.implicits._

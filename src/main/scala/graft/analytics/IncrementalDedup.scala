@@ -216,7 +216,6 @@ object IncrementalDedup {
           "est_keys" -> e.toString, "num_bits" -> b.toString,
           "ps_keys" -> pk.toString, "ps_bits" -> pb.toString,
           "n_keys" -> n.toString))
-        store.vacuum(spark, layer, sketchTable, keepLast = 2)
       }
       if (mergeOk) {
           // parameters match the stored layout: build the batch shard
@@ -271,7 +270,6 @@ object IncrementalDedup {
       // everything — still a correct commit, no emptiness probe needed.
       store.writeTouchedPartitions(tagged, layer, name,
         partitionBy = Seq("ingest_batch"))
-      store.vacuum(spark, layer, name, keepLast = 2)
     } finally {
       keptCache.foreach(_.unpersist())
       winners.unpersist(): Unit
@@ -280,8 +278,8 @@ object IncrementalDedup {
     // re-probe history (a lazy re-evaluation after the commit would see
     // its own batch and return empty). localCheckpoint (eager)
     // materializes it so the frame no longer references the version
-    // path a LATER fold's keepLast=2 vacuum deletes — a caller holding
-    // fold N's result across fold N+2 would otherwise hit
+    // path a LATER fold's commit drops (ModelStore.RetainVersions) — a
+    // caller holding fold N's result across fold N+2 would otherwise hit
     // FileNotFoundException (the NearDupIndex decide-checkpoint
     // discipline; the batch-sized payload is bounded).
     store.read(spark, layer, name).get

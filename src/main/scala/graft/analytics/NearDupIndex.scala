@@ -126,9 +126,9 @@ object NearDupIndex {
     val nSigs = timed(spark, "sig-count")(sigs.count())
     // Four gates, by what bounds the gated side:
     //  - gateProbe: the band rows, exactly NumBands per doc (uniform);
-    //  - gate / gateSig: doc-bounded sides (≤ one row per batch doc),
-    //    id-only (labels, anchors, histMin, survivors) or carrying a
-    //    sig (sigs and the sa/sb lookups);
+    //  - gate / gateSig: signed-doc-bounded sides (≤ one row per
+    //    signed doc), id-only (labels, anchors, histMin, dups) or
+    //    carrying a sig (sigs and the sa/sb lookups);
     //  - gateCand: the candidate-verify frame, which can inflate to
     //    MaxCandidatesPerDoc sig-carrying rows per doc — a
     //    degenerate-bucket batch must not pin a multi-GB broadcast
@@ -216,7 +216,8 @@ object NearDupIndex {
     // collapses onto one historical keeper, never onto per-member
     // targets. localCheckpoint (eager) materializes the decisions so
     // the returned frame no longer references the pre-commit store
-    // version a later ingest's vacuum may delete.
+    // version a later ingest's commit drops
+    // (ModelStore.RetainVersions).
     // all three lookup sides are batch-bounded (labels ≤ paired docs,
     // anchors ≤ clusters, histMin ≤ candidates) — broadcast them under
     // the gate so the decision pass is three hash lookups over one
@@ -237,11 +238,15 @@ object NearDupIndex {
     // ---- survivors extend the index as one linked batch partition.
     // A batch with NO signed survivors (fully duplicate, or a replayed
     // delivery) commits nothing: version churn on no new data would
-    // let keepLast=2 vacuums delete versions other readers still hold
-    // — the same empty-trigger guard as sink().
-    val survivors = decidedCp.filter(!col("is_dup")).select("doc_id")
-    val survivorSigs = sigs.join(gate(survivors), Seq("doc_id"),
-      "left_semi")
+    // let each commit's retention (ModelStore.RetainVersions) drop
+    // versions other readers still hold — the same empty-trigger guard
+    // as sink(). Survivor sigs = signed docs minus dups: every dup is
+    // signed (an unsigned doc is in no pair and no history match), so
+    // the gated side is bounded by the signed-doc count. A null doc_id
+    // matches no decision, so it is dropped (the anti-join keeps it).
+    val dups = decidedCp.filter(col("is_dup")).select("doc_id")
+    val survivorSigs = sigs.filter(col("doc_id").isNotNull)
+      .join(gate(dups), Seq("doc_id"), "left_anti")
     if (!timed(spark, "survivor-empty-check")(survivorSigs.isEmpty)) {
       timed(spark, "sig-append-write") {
         store.writeTouchedPartitions(
@@ -249,7 +254,6 @@ object NearDupIndex {
           layer, s"${name}_sigs", partitionBy = Seq("ingest_batch"),
           meta = Map("sig_family" -> SigFamily))
       }
-      store.vacuum(spark, layer, s"${name}_sigs", keepLast = 2)
     }
     decidedCp.select("doc_id", "is_dup", "dup_of", "batch_id")
   }

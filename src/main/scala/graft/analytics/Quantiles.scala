@@ -113,13 +113,6 @@ object Quantiles {
           .as("__med"))
   }
 
-  /** Lower-median per group via the histogram walk (rank ⌈n/2⌉;
-    * shuffle = |distinct values| per group, never a row sort). */
-  def medianByGroup(df: DataFrame, group: String, value: String)
-      : DataFrame =
-    medianOfHist(df.groupBy(group, value).agg(count(lit(1)).as("__cnt")),
-      group, value, "__cnt")
-
   // --------------------------------------- MAD robust outliers
   // Median-absolute-deviation outlier flags — the robust complement
   // of q61's z-score bands (a mean/stddev band is itself dragged by

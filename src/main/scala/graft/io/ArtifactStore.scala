@@ -123,10 +123,10 @@ object ArtifactStore {
     out.toSeq
   }
 
-  /** Check-then-build-then-vacuum, shared by every stored-artifact
-    * helper. `checkTable`'s commit meta carries the signature; the
-    * vacuum keeps TWO versions of every listed table (the
-    * one-generation concurrent-reader pin, ArtifactStoreSpec).
+  /** Check-then-build, shared by every stored-artifact helper.
+    * `checkTable`'s commit meta carries the signature; each build
+    * commit keeps the store's [[ModelStore.RetainVersions]] of its
+    * table.
     *
     * Concurrent-writer fallback — and ONLY that: two sessions racing
     * the same stale store both start building; the loser's commit
@@ -139,12 +139,10 @@ object ArtifactStore {
     * signature still throws, and every other failure — OOM,
     * interrupts, a broken build — propagates (the previous catch-all
     * converted fatal errors into silent success whenever the meta
-    * happened to match). The vacuum runs OUTSIDE the recovery scope:
-    * a vacuum failure after our own successful commit fails loudly
-    * too. */
+    * happened to match). A retention failure after our own successful
+    * commit is an ordinary error, so it fails loudly too. */
   def ensure(spark: SparkSession, store: ModelStore, layer: String,
-      checkTable: String, sig: String,
-      vacuumTables: Seq[String] = Nil)(build: => Unit): Unit = {
+      checkTable: String, sig: String)(build: => Unit): Unit = {
     if (store.meta(spark, layer, checkTable, StampKey).contains(sig))
       return
     // ledger entry regardless of who wins the race below: this
@@ -157,8 +155,6 @@ object ArtifactStore {
         if (!store.meta(spark, layer, checkTable, StampKey)
             .contains(sig)) throw e
     }
-    (checkTable +: vacuumTables).distinct.foreach(t =>
-      store.vacuum(spark, layer, t, keepLast = 2))
   }
 
   /** The commit-meta key [[ensure]] reads the staleness signature

@@ -17,8 +17,11 @@ import org.apache.spark.sql.functions.{col, struct, when}
   * `_CURRENT` pointer — the transactional-commit analog of Delta's log
   * (reference materializes to Delta tables, `dbt_project.yml:39`):
   * readers of the previous version are never disturbed, a failed write
-  * leaves no torn table, and old versions remain readable
-  * ([[readVersion]], time travel) until [[vacuum]] drops them.
+  * leaves no torn table, and the previous version stays readable
+  * ([[readVersion]], time travel) until the next commit: every commit
+  * ends by dropping the versions older than that
+  * ([[ModelStore.RetainVersions]] — retention is the store's policy,
+  * not a caller's). [[vacuum]] is the explicit maintenance drop.
   * Because each version is a distinct path, Spark plan/file-listing
   * caches can never serve stale post-swap data.
   *
@@ -61,7 +64,8 @@ final class ModelStore(val root: String) {
     if (v == 0) None else Some(readVersion(spark, layer, name, v))
   }
 
-  /** Time travel: read a specific (non-vacuumed) version. */
+  /** Time travel: read a specific retained version — the current one
+    * or, until the next commit drops it, the previous one. */
   def readVersion(spark: SparkSession, layer: String, name: String,
       v: Int): DataFrame =
     spark.read.parquet(versionDir(layer, name, v))
@@ -101,7 +105,7 @@ final class ModelStore(val root: String) {
     * write path, whose AQE-coalesced repartition sizes output files to
     * the data — collapsing the many tiny files an incremental
     * ingestion accumulates. A no-op for missing tables. Readers are
-    * unaffected (pointer commit); old versions age out via vacuum. */
+    * unaffected (pointer commit); old versions age out on commit. */
   def compact(spark: SparkSession, layer: String, name: String,
       partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil)
       : Unit =
@@ -173,7 +177,6 @@ final class ModelStore(val root: String) {
       partitionBy: Seq[String], zorderBy: Seq[String] = Nil,
       description: String = "",
       meta: Map[String, String] = Map.empty,
-      touched: Option[DataFrame] = None,
       touchedRows: Option[(org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] = None,
       statsCols: Seq[String] = Nil): Unit = {
@@ -188,10 +191,10 @@ final class ModelStore(val root: String) {
       val fs = fsFor(spark, dest)
       val src = new Path(versionDir(layer, name, cur))
       // A partition counts as rewritten if the fresh write produced a
-      // dir for it OR the caller declared it touched (`touched`, a
-      // DataFrame of partition-value rows, or `touchedRows`, already
-      // collected by the caller — e.g. the merge arm's discovery
-      // collect). The declared set covers the emptied-partition case:
+      // dir for it OR the caller declared it touched (`touchedRows`,
+      // partition-value rows the caller already collected — e.g. the
+      // merge arm's discovery collect). The declared set covers the
+      // emptied-partition case:
       // a backfill whose rebuild yields ZERO rows for a selected
       // partition writes no dir, and without the explicit set the
       // stale dir would be carried over — deleted data silently
@@ -203,13 +206,7 @@ final class ModelStore(val root: String) {
       // through the actual partitioned writer.
       val freshWritten = partitionRelPaths(fs, dest, partitionBy.length)
         .toSet
-      val declared: Option[(org.apache.spark.sql.types.StructType,
-          Seq[org.apache.spark.sql.Row])] = touchedRows.orElse(
-        touched.map { t =>
-          val d = t.select(partitionBy.map(col): _*).distinct()
-          (d.schema, d.collect().toSeq)
-        })
-      val fresh = declared match {
+      val fresh = touchedRows match {
         case None => freshWritten
         case Some((schema, rows)) =>
           ModelStore.touchedRelPaths(schema, rows, partitionBy) match {
@@ -544,6 +541,11 @@ final class ModelStore(val root: String) {
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       ptr.toUri, spark.sparkContext.hadoopConfiguration)
     fc.rename(ptrTmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // retention AFTER the swap: a failed drop leaves a committed table
+    // with one stale version, and propagates as an ordinary I/O error —
+    // never as the ConcurrentWriteException a lost race raises
+    dropVersions(fs, tableDir(layer, name), next,
+      ModelStore.RetainVersions)
   }
 
   /** Keyed diff of two retained versions — the CDC-audit operator
@@ -598,15 +600,35 @@ final class ModelStore(val root: String) {
     try out.write("1".getBytes("UTF-8")) finally out.close()
   }
 
-  /** Drop all but the last `keepLast` versions (Delta VACUUM analog). */
+  /** Drop all but the last `keepLast` versions (Delta VACUUM analog) —
+    * explicit maintenance beyond the per-commit
+    * [[ModelStore.RetainVersions]] policy. */
   def vacuum(spark: SparkSession, layer: String, name: String,
       keepLast: Int = 1): Unit = {
-    val cur = currentVersion(spark, layer, name)
     val dir = tableDir(layer, name)
-    val fs = fsFor(spark, dir)
-    (1 to cur - keepLast).foreach { v =>
-      val p = new Path(versionDir(layer, name, v))
-      if (fs.exists(p)) fs.delete(p, true)
+    dropVersions(fsFor(spark, dir), dir,
+      currentVersion(spark, layer, name), keepLast)
+  }
+
+  /** Delete every `v<k>` under `dir` with `k <= cur - keepLast`, from
+    * ONE listing: commit calls this on every write, so a probe per
+    * version number would cost O(versions) calls per commit. `k > cur`
+    * is a concurrent writer's in-flight version and is never touched.
+    * A version already gone (a concurrent drop, a gap) is fine; one
+    * that fails to go raises. */
+  private def dropVersions(fs: FileSystem, dir: Path, cur: Int,
+      keepLast: Int): Unit = {
+    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+    if (cur - keepLast < 1 || !fs.exists(dir)) return
+    val VersionDir = "v([0-9]+)".r
+    fs.listStatus(dir).foreach { st =>
+      st.getPath.getName match {
+        case VersionDir(k) if st.isDirectory &&
+            k.toIntOption.exists(_ <= cur - keepLast) =>
+          if (!fs.delete(st.getPath, true) && fs.exists(st.getPath))
+            throw new java.io.IOException(s"could not drop ${st.getPath}")
+        case _ =>
+      }
     }
   }
 
@@ -643,6 +665,16 @@ final class ModelStore(val root: String) {
 }
 
 object ModelStore {
+
+  /** Versions every commit retains: the new current one and the one it
+    * supersedes; older ones are dropped as the commit ends. Two, not
+    * one: a concurrent reader that resolved the previous `_CURRENT`
+    * just before the swap must still find its files (the
+    * one-generation read pin, ArtifactStoreSpec). A caller that holds
+    * a lazy frame over a version across two more commits must
+    * materialize it first (the `localCheckpoint`s in IncrementalDedup
+    * and NearDupIndex). */
+  val RetainVersions = 2
 
   /** The optimistic-concurrency commit conflict (Delta's
     * ConcurrentModificationException analog): another writer committed

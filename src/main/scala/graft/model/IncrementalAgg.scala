@@ -63,7 +63,6 @@ object IncrementalAgg {
       name: String, batch: DataFrame, spec: Spec): DataFrame = {
     val next = fold(store.read(spark, layer, name), batch, spec)
     store.write(next, layer, name)
-    store.vacuum(spark, layer, name, keepLast = 2)
     next
   }
 

@@ -77,10 +77,6 @@ final class Pipeline(
     sources: (String, String) => DataFrame,
     vars: Map[String, String] = Map.empty,
     threads: Int = 5,
-    /** versions retained per table after each materialization (Delta
-      * retention analog) — prevents unbounded version growth across
-      * repeated incremental runs; ≥ 1, where 1 keeps only current. */
-    retainVersions: Int = 2,
     /** append a Delta-protocol `_delta_log` entry after each
       * materialization ([[graft.io.DeltaLogExport]]) so external
       * Delta readers can open the produced tables. Opt-in: the log
@@ -265,14 +261,16 @@ final class Pipeline(
     // column-pruned distinct over the partition columns only.
     // A never-materialized model has no existing partitions to purge —
     // the backfill degrades to a plain bootstrap write of the selection
-    // (touched = None) instead of throwing on the missing table.
-    val existingTouched = store.read(spark, m.layer, m.name).map(
-      _.filter(partitionPred)
-        .select(m.partitionBy.map(functions.col): _*).distinct())
+    // (no declared rows) instead of throwing on the missing table.
+    // Bounded collect: distinct partition values, never rows.
+    val existingTouched = store.read(spark, m.layer, m.name).map { ex =>
+      val d = ex.filter(partitionPred)
+        .select(m.partitionBy.map(functions.col): _*).distinct()
+      (d.schema, d.collect().toSeq)
+    }
     store.writeTouchedPartitions(rebuilt, m.layer, m.name,
       m.partitionBy, m.zorderBy, description = m.description,
-      touched = existingTouched, statsCols = m.statsCols)
-    store.vacuum(spark, m.layer, m.name, keepLast = retainVersions)
+      touchedRows = existingTouched, statsCols = m.statsCols)
     store.read(spark, m.layer, m.name).get
   }
 
@@ -291,7 +289,6 @@ final class Pipeline(
     val t0 = System.nanoTime()
     val ref = refResolver(spark)
     Pipeline.materializeModel(spark, store, m, mode, sources, ref, vars)
-    store.vacuum(spark, m.layer, m.name, keepLast = retainVersions)
     if (exportDeltaLog) {
       val logV = graft.io.DeltaLogExport.export(spark, store,
         m.layer, m.name)

@@ -27,18 +27,4 @@ object CdcDedup {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** CDC envelope flavor: latest by (`_cdc_timestamp` DESC,
-    * `_ingested_at` DESC), optionally dropping keys whose latest op is
-    * DELETE (reference filters post-rank: `customers_latest.sql:153`). */
-  def latestCdc(df: DataFrame, key: String, dropDeletes: Boolean = true)
-      : DataFrame = {
-    val latest = latestByKey(df, Seq(key),
-      Seq(col("_cdc_timestamp").desc, col("_ingested_at").desc))
-    // Null-safe: `=!=` evaluates to NULL for a NULL op and filter drops
-    // NULL — a malformed envelope winning its key would vanish from the
-    // output. Only a literal DELETE excludes the key.
-    if (dropDeletes) latest.filter(!(col("_cdc_operation") <=> "DELETE"))
-    else latest
-  }
 }

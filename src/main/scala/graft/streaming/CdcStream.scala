@@ -152,11 +152,5 @@ object CdcStream {
       case None => updates
     }
     store.write(merged, layer, name)
-    // Retention per batch (as QualityStream.gatedSink and
-    // StreamingPipeline.modelSink do): each trigger commits a full new
-    // version — without a vacuum a long-running stream grows storage
-    // as O(batches × table size). ≥2 keeps the just-superseded version
-    // readable for in-flight readers.
-    store.vacuum(spark, layer, name, keepLast = 2)
   }
 }

@@ -50,8 +50,8 @@ object QualityStream {
       // out as stream_batch_id= partitions with the same columns
       // (ModelStore.hasPartitionLayout's contract) — against a
       // pre-existing unpartitioned or schema-drifted table it would
-      // carry nothing over and the next vacuum would delete the
-      // original data permanently. Those cases fall back to one full
+      // carry nothing over and a later commit's retention would drop
+      // the original data permanently. Those cases fall back to one full
       // rewrite (union, null-backfilled columns), which also migrates
       // the table to the partitioned layout so later batches take the
       // O(batch) path.
@@ -74,7 +74,6 @@ object QualityStream {
         store.write(ex.unionByName(rows, allowMissingColumns = true),
           layer, name, partitionBy = Seq("stream_batch_id"))
       }
-      store.vacuum(spark, layer, name, keepLast = 2)
     }
   }
 

@@ -58,7 +58,6 @@ object SessionStream {
       store.writeTouchedPartitions(
         batch.withColumn("batch_id", lit(batchId)),
         layer, name, partitionBy = Seq("batch_id"))
-      store.vacuum(spark, layer, name, keepLast = 2)
     }
   }
 

@@ -31,10 +31,6 @@ object StreamingPipeline {
   private val QueryKey = "stream_query_id"
 
   /** foreachBatch sink materializing `model` from each micro-batch.
-    * After each successful materialization the model's version history
-    * is vacuumed to `retainVersions` (mirroring the batch Pipeline's
-    * retention) — without it a long-running stream grows storage as
-    * O(batches × table size).
     *
     * @param sourceName the one bronze source the micro-batch stands in
     *        for — any other `ctx.source` name is an error rather than
@@ -54,7 +50,6 @@ object StreamingPipeline {
         sys.error(s"unresolved ref('$n') in streaming context"),
       vars: Map[String, String] = Map.empty,
       queryId: String = "default",
-      retainVersions: Int = 2,
       /** append a Delta-protocol log entry per committed batch
         * ([[graft.io.DeltaLogExport]]) — stream-fed tables are where
         * external Delta readers matter most. Opt-in, as for the batch
@@ -87,9 +82,6 @@ object StreamingPipeline {
               s"model asked for '$name'"),
         ref = refs, vars = vars,
         meta = Map(BatchKey -> batchId.toString, QueryKey -> queryId))
-      // ≥ 2 so readers of the just-superseded version are undisturbed
-      store.vacuum(spark, model.layer, model.name,
-        keepLast = math.max(2, retainVersions))
       if (exportDeltaLog)
         graft.io.DeltaLogExport.export(spark, store,
           model.layer, model.name): Unit

@@ -75,7 +75,7 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(store.read(spark, "silver", "t").get
       .head().getInt(0) == 4)
     intercept[Exception] {
-      store.readVersion(spark, "silver", "t", 1).collect()
+      store.readVersion(spark, "silver", "t", 3).collect()
     }
   }
 
@@ -85,13 +85,35 @@ class ModelStoreSpec extends AnyFunSuite {
       Files.createTempDirectory("graft-retain").toString)
     val model = ModelDef(name = "t", layer = "silver",
       build = ctx => ctx.source("bronze", "src"))
-    val p = new Pipeline(Seq(model), store, (_, _) => Seq(1).toDF("v"),
-      retainVersions = 1)
+    val p = new Pipeline(Seq(model), store, (_, _) => Seq(1).toDF("v"))
     (1 to 3).foreach(_ => p.run(spark, RunMode.Incremental))
     assert(store.currentVersion(spark, "silver", "t") == 3)
     intercept[Exception] {
-      store.readVersion(spark, "silver", "t", 2).collect()
+      store.readVersion(spark, "silver", "t", 1).collect()
     }
+    Seq(2, 3).foreach(v =>
+      assert(store.readVersion(spark, "silver", "t", v).count() > 0))
+  }
+
+  test("vacuum works from one listing: a version gap is tolerated, " +
+      "every old version goes, a newer in-flight version survives") {
+    val root = Files.createTempDirectory("graft-store-gap").toString
+    val store = new ModelStore(root)
+    (1 to 4).foreach(i =>
+      store.write(Seq(i).toDF("v"), "silver", "t"))
+    def dirs: Seq[String] =
+      Option(new java.io.File(s"$root/silver/t").listFiles).toSeq
+        .flatten.map(_.getName).filter(_.matches("v[0-9]+")).sorted
+    assert(dirs == Seq("v3", "v4"))            // the commit-time policy
+    // a concurrent writer's in-flight v5, not yet committed
+    val inFlight = new java.io.File(store.versionDir("silver", "t", 5))
+    assert(inFlight.mkdirs())
+    // a gap: v2 missing while older and newer versions exist
+    new java.io.File(store.versionDir("silver", "t", 1)).mkdirs()
+    store.vacuum(spark, "silver", "t", keepLast = 1)
+    assert(dirs == Seq("v4", "v5"))
+    assert(inFlight.isDirectory)
+    assert(store.read(spark, "silver", "t").get.head().getInt(0) == 4)
   }
 
   test("compact collapses many tiny files into few, data unchanged") {

@@ -111,7 +111,9 @@ class WatermarkStatsSpec extends AnyFunSuite {
     st.write(v1, "l", "t", partitionBy = Seq("p"), statsCols = Seq("ts"))
     assert(st.statMax(spark, "l", "t", "ts") === Some("2024-03-20 10:00:00"))
     st.writeTouchedPartitions(v1.limit(0), "l", "t",
-      partitionBy = Seq("p"), touched = Some(Seq(1).toDF("p")),
+      partitionBy = Seq("p"),
+      touchedRows = Some((Seq(1).toDF("p").schema,
+        Seq(org.apache.spark.sql.Row(1)))),
       statsCols = Seq("ts"))
     assert(st.statMax(spark, "l", "t", "ts") === Some("2024-02-01 00:00:00"))
     assert(st.statMax(spark, "l", "t", "ts") === scanMax(st, "l", "t", "ts"))
