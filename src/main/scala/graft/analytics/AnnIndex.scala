@@ -439,15 +439,10 @@ object AnnIndex {
     * micro-batch of `(q_id, embedding)` rows searches the PERSISTED
     * artifacts through the two-stage batch path ([[searchAdcRerank]] —
     * ADC shortlist from codes only, exact re-rank of the shortlist)
-    * and commits the ranked results to `out` PARTITIONED BY batch,
-    * retaining the last [[ServeKeepBatches]] batches — the commit is
-    * O(batch): ONLY the new batch's partition is written fresh, the
-    * retained prior partitions carry over by hard link, and expired
-    * ones are declared touched-with-zero-rows so the carry-over drops
-    * them (the emptied-partition contract of
-    * [[graft.io.ModelStore.writeTouchedPartitions]]; the earlier
-    * read-back + union + full rewrite was ~keep× write amplification
-    * per commit — wrong for a production-rate stream). Replay-safe like
+    * and appends the ranked results to `out` as the batch's `batch_id`
+    * partition, keeping the last [[ServeKeepBatches]] batches
+    * ([[graft.io.ModelStore.appendBatch]]: O(batch) per commit, expiry
+    * read from the partition dir names). Replay-safe like
     * [[sink]]: foreachBatch is at-least-once, so the last served batch
     * id is stamped in the commit meta and re-deliveries are skipped —
     * the stamp key is namespaced by `runId` because a stream RESTARTED
@@ -473,34 +468,13 @@ object AnnIndex {
     val applied = out.meta(spark, outLayer, outName, stampKey)
       .map(_.toLong)
     if (applied.exists(_ >= batchId) || batch.isEmpty) return
-    val res = searchAdcRerank(spark, store, name,
+    out.appendBatch(searchAdcRerank(spark, store, name,
         batch.select(col("q_id"), col("embedding")),
-        nprobe, shortlistR, topK)
-      .withColumn("batch_id", lit(batchId))
-    out.read(spark, outLayer, outName) match {
-      case Some(prev) =>
-        // expired partition ids, declared so the link pass DROPS them
-        // (a fresh dir for the new batch + declared-empty for these;
-        // everything else hard-links). Bounded collect: distinct
-        // values of the PARTITION column, ≤ retained window + 1 in
-        // steady state — never O(rows)
-        val expired = prev
-          .select(col("batch_id").cast("long").as("batch_id"))
-          .filter(col("batch_id") <= batchId - keepBatches)
-          .distinct().collect().map(_.getLong(0)).toSeq
-        val schema = new org.apache.spark.sql.types.StructType()
-          .add("batch_id", org.apache.spark.sql.types.LongType)
-        out.writeTouchedPartitions(res, outLayer, outName,
-          partitionBy = Seq("batch_id"),
-          description = "streaming ANN serving results (bounded tail)",
-          meta = Map(stampKey -> batchId.toString),
-          touchedRows = Some((schema,
-            expired.map(org.apache.spark.sql.Row(_)))))
-      case None =>
-        out.write(res, outLayer, outName, partitionBy = Seq("batch_id"),
-          description = "streaming ANN serving results (bounded tail)",
-          meta = Map(stampKey -> batchId.toString))
-    }
+        nprobe, shortlistR, topK),
+      outLayer, outName, "batch_id", batchId,
+      description = "streaming ANN serving results (bounded tail)",
+      meta = Map(stampKey -> batchId.toString),
+      keepBatches = Some(keepBatches))
   }
 
   /** foreachBatch sink: continuous index growth — each micro-batch of

@@ -36,10 +36,10 @@ import graft.queries.Q
   *     scanned (column-pruned — ~16 bytes/row of the stored table)
   *     with the candidate set broadcast against it, so history is
   *     never shuffled and never read beyond one column;
-  *  4. survivors append as a new `ingest_batch` partition —
-  *     `writeTouchedPartitions` links every prior batch's directory,
-  *     O(batch) write cost (the [[graft.streaming.QualityStream]]
-  *     append discipline).
+  *  4. survivors append as the batch's `ingest_batch` partition
+  *     ([[ModelStore.appendBatch]]: every prior batch's directory
+  *     links over, O(batch) write cost; an all-duplicate batch
+  *     commits nothing).
   *
   * Crash-safety ordering: the sketch merges BEFORE the batch commits.
   * A sketch over-approximating history only costs verify work; an
@@ -177,7 +177,6 @@ object IncrementalDedup {
       // population warrants. Empty history keeps the winners cache.
       if (history.isDefined) keptCache = Some(kept.persist())
       val nKept = if (keptCache.isDefined) kept.count() else nWinners
-      val tagged = kept.withColumn("ingest_batch", lit(batchId))
       // ---- sketch maintenance, sized to the key population. Explicit
       // estKeys/numBits pin the parameters exactly (spec paths, and
       // deployments that know their key budget up front); under
@@ -265,11 +264,8 @@ object IncrementalDedup {
           }
           commitSketch(rebuilt, e, b, n)
         }
-      // 4. append as a new batch partition (prior batches link over).
-      // An all-duplicates batch writes an empty fresh set and links
-      // everything — still a correct commit, no emptiness probe needed.
-      store.writeTouchedPartitions(tagged, layer, name,
-        partitionBy = Seq("ingest_batch"))
+      // 4. append as the batch's partition (ModelStore.appendBatch)
+      store.appendBatch(kept, layer, name, "ingest_batch", batchId)
     } finally {
       keptCache.foreach(_.unpersist())
       winners.unpersist(): Unit
@@ -281,8 +277,10 @@ object IncrementalDedup {
     // path a LATER fold's commit drops (ModelStore.RetainVersions) — a
     // caller holding fold N's result across fold N+2 would otherwise hit
     // FileNotFoundException (the NearDupIndex decide-checkpoint
-    // discipline; the batch-sized payload is bounded).
-    store.read(spark, layer, name).get
+    // discipline; the batch-sized payload is bounded). No table yet
+    // means no batch has kept a row: the fold's answer is empty.
+    store.read(spark, layer, name)
+      .getOrElse(batch.withColumn("ingest_batch", lit(batchId)).limit(0))
       .filter(col("ingest_batch") === batchId)
       // partition-dir column inference narrows small ids to int —
       // pin the declared type
@@ -296,10 +294,9 @@ object IncrementalDedup {
     * the persisted fingerprint store — the two compose: horizon dedup
     * absorbs the hot duplicates cheaply in-stream, this sink catches
     * re-crawls arriving days later. Replays are naturally idempotent:
-    * a re-delivered micro-batch's fingerprints are already in history,
-    * so nothing new commits (the empty write links existing partitions
-    * through) and the call returns the same kept set the original
-    * delivery did — no separate exactly-once marker needed
+    * a re-delivered micro-batch keeps no row (its fingerprints are in
+    * history), so its append commits nothing and the call returns the
+    * kept set of the original delivery — no exactly-once marker needed
     * (IncrementalDedupSpec proves both properties). */
   def sink(store: ModelStore, layer: String, name: String,
       keyCol: String = "content_fp", orderCol: String = "doc_id")(

@@ -44,9 +44,9 @@ import graft.queries.Q
   *     history anchors the WHOLE cluster to that historical doc
   *     (near-dup corpus semantics are transitive-by-cluster, exactly
   *     as [[NearDup.dedupCorpus]] resolves batch-internal groups);
-  *  6. survivors append their signatures as one `ingest_batch`
-  *     partition — hard-link carry-over for prior batches, O(batch)
-  *     commit (the [[IncrementalDedup]] discipline).
+  *  6. survivors append their signatures as the batch's
+  *     `ingest_batch` partition ([[ModelStore.appendBatch]]: hard-link
+  *     carry-over for prior batches, O(batch) commit).
   *
   * Keep-priority contract matches [[IncrementalDedup]]: earlier
   * crawls win; within a batch the smallest doc id wins.
@@ -235,25 +235,19 @@ object NearDupIndex {
     val decidedCp = timed(spark, "decide-checkpoint")(decided0.localCheckpoint())
     histMin.unpersist()
 
-    // ---- survivors extend the index as one linked batch partition.
-    // A batch with NO signed survivors (fully duplicate, or a replayed
-    // delivery) commits nothing: version churn on no new data would
-    // let each commit's retention (ModelStore.RetainVersions) drop
-    // versions other readers still hold — the same empty-trigger guard
-    // as sink(). Survivor sigs = signed docs minus dups: every dup is
-    // signed (an unsigned doc is in no pair and no history match), so
-    // the gated side is bounded by the signed-doc count. A null doc_id
-    // matches no decision, so it is dropped (the anti-join keeps it).
+    // ---- survivors extend the index as the batch's partition
+    // (ModelStore.appendBatch). A batch with NO signed survivors (fully
+    // duplicate, or a replayed delivery) commits nothing there.
+    // Survivor sigs = signed docs minus dups: every dup is signed (an
+    // unsigned doc is in no pair and no history match), so the gated
+    // side is bounded by the signed-doc count. A null doc_id matches no
+    // decision, so it is dropped (the anti-join keeps it).
     val dups = decidedCp.filter(col("is_dup")).select("doc_id")
     val survivorSigs = sigs.filter(col("doc_id").isNotNull)
       .join(gate(dups), Seq("doc_id"), "left_anti")
-    if (!timed(spark, "survivor-empty-check")(survivorSigs.isEmpty)) {
-      timed(spark, "sig-append-write") {
-        store.writeTouchedPartitions(
-          survivorSigs.withColumn("ingest_batch", lit(batchId)),
-          layer, s"${name}_sigs", partitionBy = Seq("ingest_batch"),
-          meta = Map("sig_family" -> SigFamily))
-      }
+    timed(spark, "sig-append-write") {
+      store.appendBatch(survivorSigs, layer, s"${name}_sigs",
+        "ingest_batch", batchId, meta = Map("sig_family" -> SigFamily))
     }
     decidedCp.select("doc_id", "is_dup", "dup_of", "batch_id")
   }

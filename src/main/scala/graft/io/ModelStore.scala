@@ -3,7 +3,9 @@ package graft.io
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, struct, when}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.functions.{col, lit, struct, when}
+import org.apache.spark.sql.types.StructType
 
 /** Materialized-model storage with Delta-style versioning:
   *
@@ -105,10 +107,13 @@ final class ModelStore(val root: String) {
     * write path, whose AQE-coalesced repartition sizes output files to
     * the data — collapsing the many tiny files an incremental
     * ingestion accumulates. A no-op for missing tables. Readers are
-    * unaffected (pointer commit); old versions age out on commit. */
+    * unaffected (pointer commit); old versions age out on commit. The
+    * commit carries no description, so the table comment carries
+    * forward; `extraMeta` rides in the same commit (a marker change
+    * that must not cost the table its layout or stats). */
   def compact(spark: SparkSession, layer: String, name: String,
-      partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil)
-      : Unit =
+      partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil,
+      extraMeta: Map[String, String] = Map.empty): Unit =
     read(spark, layer, name).foreach { df =>
       // Layout is PRESERVED by default: an empty argument means "keep
       // the stored layout" (read from commit meta; directory-discovered
@@ -130,8 +135,7 @@ final class ModelStore(val root: String) {
       // re-derive whatever stats the table tracks: compaction preserves
       // data but rewrites every file, so the per-partition stat entries
       // must be recomputed (a stats-less write would tombstone them)
-      write(df, layer, name, pb, zb,
-        description = "compact",
+      write(df, layer, name, pb, zb, meta = extraMeta,
         statsCols = statsColsOf(spark, layer, name))
     }
 
@@ -177,36 +181,34 @@ final class ModelStore(val root: String) {
       partitionBy: Seq[String], zorderBy: Seq[String] = Nil,
       description: String = "",
       meta: Map[String, String] = Map.empty,
-      touchedRows: Option[(org.apache.spark.sql.types.StructType,
+      touchedRows: Option[(StructType,
         Seq[org.apache.spark.sql.Row])] = None,
       statsCols: Seq[String] = Nil): Unit = {
     require(partitionBy.nonEmpty, "writeTouchedPartitions needs partitions")
     val spark = df.sparkSession
     val cur = currentVersion(spark, layer, name)
-    val next = cur + 1
-    val dest = new Path(versionDir(layer, name, next))
+    val dest = new Path(versionDir(layer, name, cur + 1))
     writeData(df, dest, partitionBy, zorderBy)
-    var linkedRels = Set.empty[String]
-    if (cur > 0) {
-      val fs = fsFor(spark, dest)
-      val src = new Path(versionDir(layer, name, cur))
-      // A partition counts as rewritten if the fresh write produced a
-      // dir for it OR the caller declared it touched (`touchedRows`,
-      // partition-value rows the caller already collected — e.g. the
-      // merge arm's discovery collect). The declared set covers the
-      // emptied-partition case:
-      // a backfill whose rebuild yields ZERO rows for a selected
-      // partition writes no dir, and without the explicit set the
-      // stale dir would be carried over — deleted data silently
-      // resurrected. Declared rows are rendered to relative paths
-      // driver-side ([[ModelStore.touchedRelPaths]] — Spark's own
-      // escaping/NULL encoding, spec-checked against the real writer
-      // layout); value types whose writer formatting is less trivial
-      // (timestamp/decimal/float) fall back to a one-row marker write
-      // through the actual partitioned writer.
+    val fs = fsFor(spark, dest)
+    // A partition counts as rewritten if the fresh write produced a
+    // dir for it OR the caller declared it touched (`touchedRows`,
+    // partition-value rows the caller already collected — e.g. the
+    // merge arm's discovery collect). The declared set covers the
+    // emptied-partition case:
+    // a backfill whose rebuild yields ZERO rows for a selected
+    // partition writes no dir, and without the explicit set the
+    // stale dir would be carried over — deleted data silently
+    // resurrected. Declared rows are rendered to relative paths
+    // driver-side ([[ModelStore.touchedRelPaths]] — Spark's own
+    // escaping/NULL encoding, spec-checked against the real writer
+    // layout); value types whose writer formatting is less trivial
+    // (timestamp/decimal/float) fall back to a one-row marker write
+    // through the actual partitioned writer. Lazy: a missing table
+    // links nothing and needs no marker write.
+    lazy val fresh = {
       val freshWritten = partitionRelPaths(fs, dest, partitionBy.length)
         .toSet
-      val fresh = touchedRows match {
+      touchedRows match {
         case None => freshWritten
         case Some((schema, rows)) =>
           ModelStore.touchedRelPaths(schema, rows, partitionBy) match {
@@ -216,7 +218,7 @@ final class ModelStore(val root: String) {
               spark.createDataFrame(
                   java.util.Arrays.asList(rows: _*), schema)
                 .select(partitionBy.map(col): _*).distinct()
-                .withColumn("__m", org.apache.spark.sql.functions.lit(1))
+                .withColumn("__m", lit(1))
                 .write.mode("overwrite").partitionBy(partitionBy: _*)
                 .parquet(tmp.toString)
               val rels = partitionRelPaths(fs, tmp, partitionBy.length)
@@ -225,21 +227,117 @@ final class ModelStore(val root: String) {
               freshWritten ++ rels
           }
       }
-      linkedRels = partitionRelPaths(fs, src, partitionBy.length)
-        .filterNot(fresh).toSet
-      linkedRels.foreach(rel => linkOrCopyDir(fs,
-        new Path(src, rel), new Path(dest, rel)))
     }
-    // stats AFTER the link pass, walking ONLY the freshly-written
-    // partitions; carried-over dirs are byte-identical links, so their
-    // recorded per-partition maxima are reused — the recorded table
-    // max stays exact (a backfill that REMOVED the previous maximum
-    // drops that partition's entry) at O(touched files) cost
-    commit(spark, layer, name, next, description,
+    linkAndCommit(spark, layer, name, cur, dest, partitionBy, zorderBy,
+      description, meta, statsCols, carry = rel => !fresh(rel))
+  }
+
+  /** Hard-link every partition dir of version `cur` that `carry` keeps
+    * into the staged `dest`, then commit `dest` as version `cur + 1`.
+    * Stats run AFTER the link pass, walking ONLY the freshly-written
+    * partitions; carried-over dirs are byte-identical links, so their
+    * recorded per-partition maxima are reused — the recorded table max
+    * stays exact (a backfill that REMOVED the previous maximum drops
+    * that partition's entry) at O(touched files) cost. */
+  private def linkAndCommit(spark: SparkSession, layer: String,
+      name: String, cur: Int, dest: Path, partitionBy: Seq[String],
+      zorderBy: Seq[String], description: String,
+      meta: Map[String, String], statsCols: Seq[String],
+      carry: String => Boolean): Unit = {
+    val fs = fsFor(spark, dest)
+    val src = new Path(versionDir(layer, name, cur))
+    val linkedRels =
+      if (cur == 0) Set.empty[String]
+      else partitionRelPaths(fs, src, partitionBy.length).filter(carry)
+        .toSet
+    linkedRels.foreach(rel =>
+      linkOrCopyDir(fs, new Path(src, rel), new Path(dest, rel)))
+    commit(spark, layer, name, cur + 1, description,
       meta ++ layoutMeta(partitionBy, zorderBy) ++
         statsMeta(spark, layer, name, dest, partitionBy,
           statsCols, linkedRels))
   }
+
+  /** Append `rows` as the table's `batchCol=<batchId>` partition: the
+    * store's one append (the reference's default `incremental_strategy:
+    * 'append'`, `dbt_project.yml:40–41`). Rules, each stated once here:
+    *
+    *  - rows are tagged `batchCol = batchId` (a long);
+    *  - a missing table gets a plain partitioned write;
+    *  - over a compatible table (`batchCol=` partitions holding the
+    *    batch's other columns by name and type, nullability aside) only
+    *    the batch's partition is written fresh — so a replay replaces
+    *    its own partition — and every other one hard-links over:
+    *    O(batch). Partitions with an id ≤ `batchId - keepBatches` expire
+    *    (are not linked);
+    *  - over any other table a link pass would carry nothing, and the
+    *    next commit's retention would drop the old rows for good: one
+    *    full rewrite of existing ∪ batch rows (null-backfilled) migrates
+    *    it instead. That commit always happens;
+    *  - a fresh write that produced no `batchCol=` dir had zero rows:
+    *    nothing commits, and the staged version dir is removed (unless
+    *    another writer committed it meanwhile:
+    *    [[ModelStore.ConcurrentWriteException]], nothing deleted).
+    *
+    * The write is the only Spark job: emptiness comes from its output
+    * listing, the layout from the version's listing, the columns from
+    * one footer ([[ParquetStats.sparkSchema]]), expired ids from the
+    * `batchCol=<k>` dir names. */
+  def appendBatch(rows: DataFrame, layer: String, name: String,
+      batchCol: String, batchId: Long, description: String = "",
+      meta: Map[String, String] = Map.empty,
+      keepBatches: Option[Int] = None): Unit = {
+    val spark = rows.sparkSession
+    val tagged = rows.withColumn(batchCol, lit(batchId))
+    val partitionBy = Seq(batchCol)
+    val cur = currentVersion(spark, layer, name)
+    if (cur > 0 && !appendable(spark, layer, name, cur, batchCol, tagged)) {
+      write(readVersion(spark, layer, name, cur)
+          .unionByName(tagged, allowMissingColumns = true),
+        layer, name, partitionBy, description = description, meta = meta)
+      return
+    }
+    val dest = new Path(versionDir(layer, name, cur + 1))
+    writeData(tagged, dest, partitionBy, Nil)
+    val fs = fsFor(spark, dest)
+    val fresh = partitionRelPaths(fs, dest, 1).toSet
+    def expired(rel: String): Boolean = keepBatches.exists(k =>
+      rel.substring(rel.indexOf('=') + 1).toLongOption
+        .exists(_ <= batchId - k))
+    if (fresh.nonEmpty)
+      linkAndCommit(spark, layer, name, cur, dest, partitionBy, Nil,
+        description, meta, Nil, rel => !fresh(rel) && !expired(rel))
+    else {
+      // `dest` is a committed version if another writer got there
+      // first: raise as commit would, and delete nothing
+      val now = currentVersion(spark, layer, name)
+      if (now != cur)
+        throw new ModelStore.ConcurrentWriteException(
+          s"concurrent write to $layer.$name: expected v$cur, found v$now")
+      if (!fs.delete(dest, true) && fs.exists(dest))
+        throw new java.io.IOException(s"could not remove staged $dest")
+    }
+  }
+
+  /** [[appendBatch]]'s compatibility test, from listings and one
+    * footer. */
+  private def appendable(spark: SparkSession, layer: String,
+      name: String, cur: Int, batchCol: String, batch: DataFrame)
+      : Boolean =
+    hasPartitionLayout(spark, layer, name, Seq(batchCol)) && {
+      val base = new Path(versionDir(layer, name, cur))
+      val fs = fsFor(spark, base)
+      def cols(s: StructType) = s.fields.filter(_.name != batchCol)
+        .map(f => f.name -> f.dataType).toMap
+      val want = cols(batch.schema)
+      fs.listStatus(base).iterator.filter(_.isDirectory)
+        .flatMap(d => fs.listStatus(d.getPath))
+        .find(_.getPath.getName.endsWith(".parquet"))
+        .flatMap(f => ParquetStats.sparkSchema(
+          spark.sparkContext.hadoopConfiguration, f.getPath))
+        .map(cols).exists(have => have.keySet == want.keySet &&
+          have.forall { case (c, t) => DataTypeUtils.sameType(t, want(c)) })
+    }
 
   /** Columns with recorded (or tombstoned) stats meta on the current
     * version — what a data-preserving rewrite (compact) re-derives. */

@@ -152,6 +152,21 @@ object ParquetStats {
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
+  /** The Spark row schema Spark's writer stored in file `f`'s footer
+    * (key `org.apache.spark.sql.parquet.row.metadata`): one metadata
+    * read, no `spark.read` schema-inference job. None for a file not
+    * written by Spark. Partition columns live in directory names, not
+    * in the file, so they are absent. */
+  def sparkSchema(conf: Configuration, f: Path)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(org.apache.spark.sql.types.DataType.fromJson)
+      .collect { case s: org.apache.spark.sql.types.StructType => s }
+    finally reader.close()
+  }
+
   /** One footer open, all requested columns extracted. */
   private def fileMaxAll(conf: Configuration, f: Path,
       columns: Seq[String]): Map[String, DirStat] = {

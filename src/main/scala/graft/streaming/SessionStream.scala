@@ -19,8 +19,7 @@ import graft.ops.Exact
   *  late rows (none in batch — full scan) → dropped past the watermark
   *
   * Closed sessions land in a [[ModelStore]] table as `batch_id`
-  * partitions (hard-link carry-over for prior batches, the
-  * O(batch)-append discipline of `IncrementalDedup`), so the table is
+  * partitions ([[ModelStore.appendBatch]]), so the table is
   * query-ready mid-stream and the rollup never replays the raw feed.
   *
   * Boundary parity with the batch rule: q17 starts a new session only
@@ -50,16 +49,11 @@ object SessionStream {
         col("n_events"), col("value_cents"))
 
   /** foreachBatch sink for [[closedSessions]]: append the batch's newly
-    * closed sessions as a fresh `batch_id` partition. Empty triggers
-    * commit nothing (no version churn on an idle stream). */
+    * closed sessions as its `batch_id` partition
+    * ([[ModelStore.appendBatch]]). */
   def sessionSink(spark: SparkSession, store: ModelStore, layer: String,
-      name: String)(batch: DataFrame, batchId: Long): Unit = {
-    if (!batch.isEmpty) {
-      store.writeTouchedPartitions(
-        batch.withColumn("batch_id", lit(batchId)),
-        layer, name, partitionBy = Seq("batch_id"))
-    }
-  }
+      name: String)(batch: DataFrame, batchId: Long): Unit =
+    store.appendBatch(batch, layer, name, "batch_id", batchId)
 
   /** q17's output shape from the persisted closed-session table:
     * (user_id, n_sessions, n_events, total_value) — once the stream

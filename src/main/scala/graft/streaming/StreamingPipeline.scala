@@ -94,44 +94,15 @@ object StreamingPipeline {
     * loud — the alternative (a foreign writer silently adopting the
     * table, [[modelSink]]'s raise) is split-brain. The data itself is
     * untouched; on this store the marker change costs one version
-    * rewrite (a manifest-based store would make it a metadata-only
-    * commit). */
+    * rewrite ([[ModelStore.compact]], which keeps the stored partition
+    * and zorder layout and re-derives the column stats, so the next
+    * batch keeps its pruned merge and its footer-stats watermark; a
+    * manifest-based store would make it a metadata-only commit). */
   def adopt(spark: org.apache.spark.sql.SparkSession, store: ModelStore,
       layer: String, name: String, queryId: String): Unit = {
-    val df = store.read(spark, layer, name).getOrElse(
-      sys.error(s"adopt: $layer.$name does not exist"))
-    // preserve the stored partition layout (discovered from the
-    // current version's col=value nesting): an unpartitioned rewrite
-    // would silently flatten the table, pushing the next batch off
-    // the pruned O(batch) merge path onto a second full rewrite
-    val partitionBy = detectPartitionLayout(spark, store, layer, name)
-    store.write(df, layer, name, partitionBy = partitionBy,
-      description = "",
-      meta = Map(QueryKey -> queryId, BatchKey -> "-1"))
-  }
-
-  /** The stored partition column chain of the CURRENT version, in
-    * nesting order; Nil for unpartitioned layouts. */
-  private def detectPartitionLayout(
-      spark: org.apache.spark.sql.SparkSession, store: ModelStore,
-      layer: String, name: String): Seq[String] = {
-    val cur = store.currentVersion(spark, layer, name)
-    if (cur == 0) return Nil
-    val base = new org.apache.hadoop.fs.Path(
-      store.versionDir(layer, name, cur))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cols = Seq.newBuilder[String]
-    var p = base
-    var done = false
-    while (!done) {
-      val dirs = fs.listStatus(p).filter(s =>
-        s.isDirectory && s.getPath.getName.contains("="))
-      if (dirs.isEmpty) done = true
-      else {
-        cols += dirs.head.getPath.getName.split("=", 2)(0)
-        p = dirs.head.getPath
-      }
-    }
-    cols.result()
+    require(store.currentVersion(spark, layer, name) > 0,
+      s"adopt: $layer.$name does not exist")
+    store.compact(spark, layer, name,
+      extraMeta = Map(QueryKey -> queryId, BatchKey -> "-1"))
   }
 }

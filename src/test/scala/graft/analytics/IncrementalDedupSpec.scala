@@ -247,6 +247,39 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(keptIds(state) === Set(1L, 2L, 5L))
   }
 
+  test("applyBatch onto a pre-existing unpartitioned history keeps " +
+      "its rows") {
+    val st = store()
+    // batch-written history: no ingest_batch column, no partitions
+    st.write(docs(1L -> "one", 2L -> "two"), "d", "fps")
+    val kept = IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(3L -> "ONE", 4L -> "four"), 0L)
+    assert(keptIds(kept) === Set(4L))
+    assert(keptIds(st.read(spark, "d", "fps").get) === Set(1L, 2L, 4L))
+    // migrated: the next batch appends on the linked path
+    assert(st.hasPartitionLayout(spark, "d", "fps", Seq("ingest_batch")))
+    IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(5L -> "five"), 1L): Unit
+    assert(keptIds(st.read(spark, "d", "fps").get) ===
+      Set(1L, 2L, 4L, 5L))
+  }
+
+  test("an all-duplicate batch commits no version of the history") {
+    val st = store()
+    // an empty first batch keeps nothing and creates no table
+    assert(keptIds(IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(), 0L)).isEmpty)
+    assert(st.currentVersion(spark, "d", "fps") == 0)
+    IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(1L -> "one", 2L -> "two"), 0L): Unit
+    val v = st.currentVersion(spark, "d", "fps")
+    val out = IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(3L -> "one", 4L -> "TWO"), 1L)
+    assert(keptIds(out).isEmpty)
+    assert(st.currentVersion(spark, "d", "fps") == v)
+    assert(!new java.io.File(st.versionDir("d", "fps", v + 1)).exists)
+  }
+
   private def filesUnder(dir: String): Set[String] = {
     val base = new java.io.File(dir)
     def walk(f: java.io.File): Seq[java.io.File] =

@@ -164,6 +164,36 @@ class NearDupIndexSpec extends AnyFunSuite {
     assert(store.currentVersion(spark, "nd", "idx_sigs") == beforeV)
   }
 
+  test("signature appends: a zero-survivor batch stages no version " +
+      "dir; a later batch links the earlier partitions") {
+    val root = Files.createTempDirectory("graft-ndidx6").toString
+    val store = new ModelStore(root)
+    val base = docs.filter(col("doc_id") < 40)
+    NearDupIndex.ingest(spark, store, "nd", "idx", base,
+      "doc_id", col("text"), 0L).count()
+    val v = store.currentVersion(spark, "nd", "idx_sigs")
+    NearDupIndex.ingest(spark, store, "nd", "idx", base,
+      "doc_id", col("text"), 1L).count()
+    assert(store.currentVersion(spark, "nd", "idx_sigs") == v)
+    assert(!new java.io.File(store.versionDir("nd", "idx_sigs", v + 1))
+      .exists)
+    NearDupIndex.ingest(spark, store, "nd", "idx",
+      docs.filter(col("doc_id") >= 40 && col("doc_id") < 80),
+      "doc_id", col("text"), 2L).count()
+    assert(store.currentVersion(spark, "nd", "idx_sigs") == v + 1)
+    def parts(ver: Int): Map[String, Seq[java.io.File]] =
+      new java.io.File(store.versionDir("nd", "idx_sigs", ver)).listFiles
+        .toSeq.filter(_.getName.startsWith("ingest_batch=")).map(d =>
+          d.getName -> d.listFiles.toSeq
+            .filter(_.getName.endsWith(".parquet"))).toMap
+    assert(parts(v + 1).keySet == Set("ingest_batch=0", "ingest_batch=2"))
+    assert(parts(v + 1)("ingest_batch=0").forall(f =>
+      Files.getAttribute(f.toPath, "unix:nlink")
+        .asInstanceOf[Number].intValue >= 2))
+    assert(store.meta(spark, "nd", "idx_sigs", "sig_family")
+      .contains(NearDupIndex.SigFamily))
+  }
+
   test("forced-large batch (band-row gate 0) takes the shuffle-probe " +
       "arm and makes identical decisions") {
     def run(cap: Long): Map[Long, (Boolean, Long)] = {

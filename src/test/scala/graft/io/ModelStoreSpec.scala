@@ -323,4 +323,226 @@ class ModelStoreSpec extends AnyFunSuite {
         "spark.sql.adaptive.coalescePartitions.enabled")
     }
   }
+
+  test("compact keeps the table comment") {
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-store-comment").toString)
+    store.write(Seq((1, "a")).toDF("k", "v"), "silver", "c",
+      description = "one row per customer")
+    store.compact(spark, "silver", "c")
+    assert(store.currentVersion(spark, "silver", "c") == 2)
+    assert(store.comment(spark, "silver", "c")
+      .contains("one row per customer"))
+  }
+
+  // ---- appendBatch: the one "append this batch as a partition" commit
+
+  private def appendStore(tag: String) =
+    new ModelStore(Files.createTempDirectory(s"graft-append-$tag").toString)
+
+  private def kv(rows: (Int, String)*) = rows.toDF("k", "v")
+
+  private def rowsByBatch(store: ModelStore, name: String)
+      : Set[(Int, String, Long)] =
+    store.read(spark, "s", name).get
+      .selectExpr("k", "v", "cast(b AS long)").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+
+  /** `name`'s version dirs, from the table directory. */
+  private def versionDirs(store: ModelStore, name: String): Seq[String] =
+    Option(new java.io.File(s"${store.root}/s/$name").listFiles).toSeq
+      .flatten.map(_.getName).filter(_.matches("v[0-9]+")).sorted
+
+  private def partitionFiles(store: ModelStore, name: String, v: Int,
+      part: String): Seq[java.io.File] =
+    Option(new java.io.File(store.versionDir("s", name, v), part)
+      .listFiles).toSeq.flatten.filter(_.getName.endsWith(".parquet"))
+
+  private def nlink(f: java.io.File): Int =
+    Files.getAttribute(f.toPath, "unix:nlink")
+      .asInstanceOf[Number].intValue
+
+  test("appendBatch onto a missing table: a plain partitioned write " +
+      "tagged with the batch id") {
+    val store = appendStore("missing")
+    store.appendBatch(kv(1 -> "a", 2 -> "b"), "s", "t", "b", 7L,
+      description = "appended")
+    assert(store.currentVersion(spark, "s", "t") == 1)
+    assert(store.hasPartitionLayout(spark, "s", "t", Seq("b")))
+    assert(rowsByBatch(store, "t") == Set((1, "a", 7L), (2, "b", 7L)))
+    assert(store.meta(spark, "s", "t", "layout_partition_by").contains("b"))
+    assert(store.comment(spark, "s", "t").contains("appended"))
+    // the footer stores the batch's own columns; b lives in the dir name
+    val footer = ParquetStats.sparkSchema(
+      spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(
+        partitionFiles(store, "t", 1, "b=7").head.getPath))
+    assert(footer.map(_.fieldNames.toSeq).contains(Seq("k", "v")))
+  }
+
+  test("appendBatch over a compatible table writes only the batch's " +
+      "partition and hard-links the others (O(batch))") {
+    val store = appendStore("links")
+    store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L)
+    store.appendBatch(kv(2 -> "b"), "s", "t", "b", 1L)
+    store.appendBatch(kv(3 -> "c"), "s", "t", "b", 2L)
+    assert(store.currentVersion(spark, "s", "t") == 3)
+    assert(rowsByBatch(store, "t") ==
+      Set((1, "a", 0L), (2, "b", 1L), (3, "c", 2L)))
+    // batch 1's files are the same inodes in v2 and v3; batch 2's are
+    // the only fresh ones
+    val b1v2 = partitionFiles(store, "t", 2, "b=1")
+    val b1v3 = partitionFiles(store, "t", 3, "b=1")
+    assert(b1v2.nonEmpty && b1v2.map(_.getName).toSet ==
+      b1v3.map(_.getName).toSet)
+    assert(b1v3.forall(nlink(_) >= 2))
+    assert(partitionFiles(store, "t", 3, "b=2").forall(nlink(_) == 1))
+  }
+
+  test("appendBatch: a replayed batch replaces its own partition") {
+    val store = appendStore("replay")
+    store.appendBatch(kv(1 -> "a", 2 -> "b"), "s", "t", "b", 0L)
+    store.appendBatch(kv(3 -> "c"), "s", "t", "b", 1L)
+    store.appendBatch(kv(1 -> "a2"), "s", "t", "b", 0L)
+    assert(rowsByBatch(store, "t") == Set((1, "a2", 0L), (3, "c", 1L)))
+  }
+
+  test("appendBatch: zero rows commit nothing and leave no staged " +
+      "version dir") {
+    val store = appendStore("empty")
+    val none = kv(1 -> "x").filter("k < 0")
+    // onto a missing table
+    store.appendBatch(none, "s", "t", "b", 0L)
+    assert(store.currentVersion(spark, "s", "t") == 0)
+    assert(versionDirs(store, "t").isEmpty)
+    // onto a compatible table: the pointer and the data stay put
+    store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L)
+    store.appendBatch(none, "s", "t", "b", 1L, meta = Map("m" -> "1"))
+    assert(store.currentVersion(spark, "s", "t") == 1)
+    assert(versionDirs(store, "t") == Seq("v1"))
+    assert(store.meta(spark, "s", "t", "m").isEmpty)
+    assert(rowsByBatch(store, "t") == Set((1, "a", 0L)))
+  }
+
+  test("appendBatch: a zero-row append that finds another writer's " +
+      "commit raises and deletes nothing") {
+    val store = appendStore("race")
+    store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L)
+    val v2 = new java.io.File(store.versionDir("s", "t", 2))
+    // another writer commits v2 while this append's write runs: the
+    // batch's only row is filtered out inside that write
+    val fired = new java.util.concurrent.atomic.AtomicBoolean
+    AppendRace.onRow = () => if (fired.compareAndSet(false, true)) {
+      v2.mkdirs()
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      val out = fs.create(
+        new org.apache.hadoop.fs.Path(s"${store.root}/s/t/_CURRENT"), true)
+      try out.write("2".getBytes("UTF-8")) finally out.close()
+    }
+    val dropAll = org.apache.spark.sql.functions.udf { (_: Int) =>
+      AppendRace.onRow(); false }.asNondeterministic()
+    try {
+      intercept[ModelStore.ConcurrentWriteException] {
+        store.appendBatch(kv(2 -> "b").filter(dropAll($"k")),
+          "s", "t", "b", 1L)
+      }
+    } finally AppendRace.onRow = () => ()
+    // the pointer still names a version dir that exists
+    assert(store.currentVersion(spark, "s", "t") == 2)
+    assert(v2.isDirectory)
+  }
+
+  test("appendBatch expires partitions outside the retained window, " +
+      "from the directory listing") {
+    val store = appendStore("expiry")
+    (0L to 4L).foreach(b => store.appendBatch(kv(b.toInt -> s"r$b"),
+      "s", "t", "b", b, keepBatches = Some(2)))
+    assert(rowsByBatch(store, "t").map(_._3) == Set(3L, 4L))
+    val dirs = new java.io.File(store.versionDir("s", "t",
+      store.currentVersion(spark, "s", "t"))).list().toSet
+    assert(dirs.filter(_.startsWith("b=")) == Set("b=3", "b=4"))
+    // without a window every batch stays
+    val all = appendStore("expiry-all")
+    (0L to 4L).foreach(b => all.appendBatch(kv(b.toInt -> s"r$b"),
+      "s", "t", "b", b))
+    assert(rowsByBatch(all, "t").map(_._3) == (0L to 4L).toSet)
+  }
+
+  test("appendBatch decides without a Spark job: an append over a " +
+      "three-batch table runs the same jobs as the first append") {
+    val store = appendStore("jobs")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.sql.GraftListenerBridge.flush(spark)
+      jobs.set(0)
+      body
+      org.apache.spark.sql.GraftListenerBridge.flush(spark)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val first = jobsOf(store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L))
+      store.appendBatch(kv(2 -> "b"), "s", "t", "b", 1L)
+      store.appendBatch(kv(3 -> "c"), "s", "t", "b", 2L)
+      val later = jobsOf(store.appendBatch(kv(4 -> "d"), "s", "t", "b", 3L,
+        keepBatches = Some(2)))
+      assert(first > 0 && later == first)
+      assert(rowsByBatch(store, "t").map(_._3) == Set(2L, 3L))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("appendBatch migrates an unpartitioned table: one full rewrite " +
+      "keeps its rows, later batches link") {
+    val store = appendStore("unpart")
+    store.write(kv(100 -> "old"), "s", "t")
+    // the migration commit happens even for an empty batch
+    store.appendBatch(kv(1 -> "x").filter("k < 0"), "s", "t", "b", 0L)
+    assert(store.currentVersion(spark, "s", "t") == 2)
+    assert(store.hasPartitionLayout(spark, "s", "t", Seq("b")))
+    store.appendBatch(kv(1 -> "a"), "s", "t", "b", 1L)
+    store.appendBatch(kv(2 -> "b"), "s", "t", "b", 2L)
+    val rows = store.read(spark, "s", "t").get
+      .selectExpr("k", "v", "cast(b AS long)").collect()
+      .map(r => (r.getInt(0), r.getString(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
+    assert(rows == Set((100, "old", None), (1, "a", Some(1L)),
+      (2, "b", Some(2L))))
+    // after the migration, the appends took the linked path
+    assert(partitionFiles(store, "t", 4, "b=1").forall(nlink(_) >= 2))
+  }
+
+  test("appendBatch migrates a schema-drifted table, null-backfilling " +
+      "the new column") {
+    val store = appendStore("drift")
+    store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L)
+    store.appendBatch(Seq((2, "b", 2.5)).toDF("k", "v", "w"),
+      "s", "t", "b", 1L)
+    assert(store.currentVersion(spark, "s", "t") == 2)
+    val rows = store.read(spark, "s", "t").get
+      .selectExpr("k", "w", "cast(b AS long)").collect()
+      .map(r => (r.getInt(0), Option(r.get(1)), r.getLong(2))).toSet
+    assert(rows == Set((1, None, 0L), (2, Some(2.5), 1L)))
+    // one rewrite: batch 0's partition is fresh in v2, not linked
+    assert(partitionFiles(store, "t", 2, "b=0").forall(nlink(_) == 1))
+    // and the migrated layout takes the next batch on the linked path
+    store.appendBatch(Seq((3, "c", 1.0)).toDF("k", "v", "w"),
+      "s", "t", "b", 2L)
+    assert(partitionFiles(store, "t", 3, "b=0").forall(nlink(_) >= 2))
+    // a type change is drift too (int k widens to long)
+    store.appendBatch(Seq((4L, "d", 0.5)).toDF("k", "v", "w"),
+      "s", "t", "b", 3L)
+    assert(partitionFiles(store, "t", 4, "b=2").forall(nlink(_) == 1))
+    assert(store.read(spark, "s", "t").get.count() == 4)
+  }
+}
+
+/** Hook a spec's UDF calls on the executor (same JVM in local mode). */
+private object AppendRace {
+  @volatile var onRow: () => Unit = () => ()
 }

@@ -110,4 +110,17 @@ class QualityStreamSpec extends AnyFunSuite {
       .select("docId").collect().map(_.getLong(0)).toSet
     assert(ids == Set(100L, 1L, 2L))
   }
+
+  test("an empty route commits nothing and stages no version dir") {
+    val root = java.nio.file.Files.createTempDirectory("graft-qs-empty")
+      .toString
+    val store = new ModelStore(root)
+    val sink = QualityStream.gatedSink(store, "silver", "ok", rules) _
+    sink(Seq(doc(1, "2024-03-15 10:00:00",
+      "one perfectly valid document")).toDF(), 0L)
+    assert(store.currentVersion(spark, "silver", "ok") == 1)
+    assert(store.currentVersion(spark, "silver", "ok_quarantine") == 0)
+    assert(!new java.io.File(
+      store.versionDir("silver", "ok_quarantine", 1)).exists)
+  }
 }

@@ -106,4 +106,25 @@ class SessionStreamSpec extends AnyFunSuite {
       assert(store.currentVersion(spark, "gold", "s") == vBefore)
     } finally query.stop()
   }
+
+  test("sessionSink onto a pre-existing unpartitioned table keeps its " +
+      "rows") {
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-sessions3").toString)
+    def session(u: Long, start: String, end: String, n: Long) =
+      (u, Timestamp.valueOf(start), Timestamp.valueOf(end), n, n * 1000L)
+    val cols = Seq("user_id", "session_start", "session_end", "n_events",
+      "value_cents")
+    // batch-written history: no batch_id column, no partitions
+    store.write(Seq(session(7, "2024-03-01 10:00:00",
+      "2024-03-01 10:30:00", 3)).toDF(cols: _*), "gold", "s")
+    val sink = SessionStream.sessionSink(spark, store, "gold", "s") _
+    sink(Seq(session(1, "2024-03-15 10:00:00", "2024-03-15 10:40:00", 2))
+      .toDF(cols: _*), 0L)
+    sink(Seq(session(2, "2024-03-16 12:00:00", "2024-03-16 12:30:00", 1))
+      .toDF(cols: _*), 1L)
+    val users = store.read(spark, "gold", "s").get
+      .select("user_id").collect().map(_.getLong(0)).toSet
+    assert(users == Set(7L, 1L, 2L))
+  }
 }

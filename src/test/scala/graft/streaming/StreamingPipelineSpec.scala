@@ -163,4 +163,28 @@ class StreamingPipelineSpec extends AnyFunSuite {
       .get.collect().map(_.getValuesMap[Any](cols)).toSet
     assert(got == expected)
   }
+
+  test("adopt keeps the zorder layout and the column stats") {
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-adopt-zorder").toString)
+    store.write(
+      Seq((1L, "p1", java.sql.Timestamp.valueOf("2024-03-01 10:00:00")),
+        (2L, "p2", java.sql.Timestamp.valueOf("2024-03-02 11:00:00")))
+        .toDF("v", "p", "ts"),
+      "silver", "z", partitionBy = Seq("p"), zorderBy = Seq("ts"),
+      statsCols = Seq("ts"),
+      meta = Map("stream_query_id" -> "q-old", "stream_batch_id" -> "7"))
+    StreamingPipeline.adopt(spark, store, "silver", "z", "q-new")
+    assert(store.currentVersion(spark, "silver", "z") == 2)
+    assert(store.meta(spark, "silver", "z", "stream_query_id")
+      .contains("q-new"))
+    assert(store.meta(spark, "silver", "z", "stream_batch_id")
+      .contains("-1"))
+    assert(store.meta(spark, "silver", "z", "layout_zorder_by")
+      .contains("ts"))
+    assert(store.hasPartitionLayout(spark, "silver", "z", Seq("p")))
+    // the next batch's watermark gate reads the max from the commit
+    assert(store.statMax(spark, "silver", "z", "ts")
+      .contains("2024-03-02 11:00:00"))
+  }
 }
