@@ -73,12 +73,9 @@ object AnnIndex {
   }
 
   /** Assign `newVectors` to the STORED centroids and rewrite only the
-    * touched cell partitions — the incremental append path.
-    * `extraMeta` merges into the postings commit (the sink stamps its
-    * batch id through it for replay idempotence). */
+    * touched cell partitions — the incremental append path. */
   def append(spark: SparkSession, store: ModelStore, name: String,
-      newVectors: DataFrame,
-      extraMeta: Map[String, String] = Map.empty): Unit = {
+      newVectors: DataFrame): Unit = {
     val cents = store.read(spark, Layer, centroidsTable(name)).getOrElse(
       sys.error(s"ANN index '$name' has no centroids — build() first"))
     val existing = store.read(spark, Layer, postingsTable(name)).getOrElse(
@@ -132,7 +129,7 @@ object AnnIndex {
         .flatMap(_.toLongOption).getOrElse(existing.count()) + nNew
       store.writeTouchedPartitions(merged, Layer, postingsTable(name),
         partitionBy = Seq("c_id"), description = "IVF append",
-        meta = extraMeta + ("rows" -> newRows.toString))
+        meta = Map("rows" -> newRows.toString))
       // keep the PQ artifact coherent: when codes exist, appended
       // vectors must become ADC-visible too, or every later searchAdc
       // silently misses them. New vectors encode against the STORED
@@ -161,7 +158,7 @@ object AnnIndex {
           // (AnnIndexSpec pins the stamp's survival at 16x4/256)
           store.writeTouchedPartitions(mergedCodes, Layer,
             pqCodesTable(name), partitionBy = Seq("c_id"),
-            description = "PQ codes append", meta = extraMeta)
+            description = "PQ codes append")
       }
       // keep the KNN-graph artifact coherent too ([[buildKnn]]): a
       // touched cell's NEW members change its incumbents'
@@ -224,8 +221,7 @@ object AnnIndex {
             col("cos_sim"), col("rnk"))
         try store.writeTouchedPartitions(ranked, Layer, knnTable(name),
           partitionBy = Seq("c_id"),
-          description = "KNN graph append (touched cells)",
-          meta = extraMeta)
+          description = "KNN graph append (touched cells)")
         finally newPairs.unpersist(blocking = false): Unit
       }
     } finally assigned.unpersist(): Unit
@@ -442,9 +438,9 @@ object AnnIndex {
     * and appends the ranked results to `out` as the batch's `batch_id`
     * partition, keeping the last [[ServeKeepBatches]] batches
     * ([[graft.io.ModelStore.appendBatch]]: O(batch) per commit, expiry
-    * read from the partition dir names). Replay-safe like
-    * [[sink]]: foreachBatch is at-least-once, so the last served batch
-    * id is stamped in the commit meta and re-deliveries are skipped —
+    * read from the partition dir names). Replay-safe: foreachBatch is
+    * at-least-once, so the last served batch id is stamped in the
+    * commit meta and re-deliveries are skipped —
     * the stamp key is namespaced by `runId` because a stream RESTARTED
     * WITH A FRESH CHECKPOINT resets batch ids to 0, and an
     * un-namespaced stamp from the previous run would silently drop
@@ -479,24 +475,20 @@ object AnnIndex {
 
   /** foreachBatch sink: continuous index growth — each micro-batch of
     * `(vec_id, embedding)` rows assigns against the STORED centroids
-    * and rewrites only its touched cells ([[append]]). Replay-safe:
-    * foreachBatch is at-least-once, and append has no key dedup, so a
-    * re-delivered batch (stream failed after the store commit but
-    * before the streaming checkpoint) would insert every vector twice
-    * — the last applied batch id is stamped in the commit meta and
-    * replays of it are skipped. Pair with a periodic [[build]] when
-    * drift demands retraining; the store's versioning makes that
-    * cutover atomic for concurrent readers. */
+    * and rewrites only its touched cells ([[append]]). Replay-safe
+    * without a batch stamp: foreachBatch is at-least-once, and append
+    * anti-joins the stored `vec_id`s and commits nothing when no
+    * vector is new, so a re-delivered batch (stream failed after the
+    * store commit but before the streaming checkpoint) is a no-op —
+    * and a stream restarted with a fresh checkpoint, whose batch ids
+    * start again at 0, still lands its new vectors. Pair with a
+    * periodic [[build]] when drift demands retraining; the store's
+    * versioning makes that cutover atomic for concurrent readers. */
   def sink(store: ModelStore, name: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val applied = store.meta(spark, Layer, postingsTable(name),
-      "ann_last_batch").map(_.toLong)
-    if (!applied.exists(_ >= batchId) && !batch.isEmpty)
-      append(spark, store, name,
-        batch.select(col("vec_id"), col("embedding")),
-        extraMeta = Map("ann_last_batch" -> batchId.toString)): Unit
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    if (!batch.isEmpty)
+      append(batch.sparkSession, store, name,
+        batch.select(col("vec_id"), col("embedding")))
 
   /** The /tmp store keyed by the canonical corpus dir (full-path MD5 —
     * two corpora sharing a basename can never serve each other's

@@ -216,7 +216,11 @@ object IncrementalDedup {
           "ps_keys" -> pk.toString, "ps_bits" -> pb.toString,
           "n_keys" -> n.toString))
       }
-      if (mergeOk) {
+      // nothing kept: every winner is already in history, so the OR
+      // below would leave every bit and n_keys as stored — no sketch
+      // job, no commit (the rebuild arm always runs: its sketch is new)
+      if (mergeOk && nKept == 0) ()
+      else if (mergeOk) {
           // parameters match the stored layout: build the batch shard
           // rows (one aggregation over the batch) and OR them into the
           // ALREADY-COLLECTED shard map on the driver — the merge

@@ -1,8 +1,11 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{assert_true, col, count, lit}
+import org.apache.spark.sql.functions.{assert_true, broadcast, coalesce,
+  col, count, lit}
+
+import graft.ops.PhaseTimer
 
 /** Delta-MERGE emulation for environments without Delta jars
   * (SURVEY.md §2.1 S3/S6): the reference materializes every model with
@@ -10,11 +13,12 @@ import org.apache.spark.sql.functions.{assert_true, col, count, lit}
   * (`customers_latest.sql:3–6` etc.) — MERGE matched→update-all,
   * not-matched→insert, target schema synced to the model's SELECT.
   *
-  * Plan shape: one anti-join on the merge key. At scale the anti-join
-  * shuffles both sides on the key unless `updates` is broadcast-small;
-  * with partitioned targets, partition-pruning the `existing` side by
-  * the updates' touched partitions bounds the rewrite (the same
-  * optimization Delta's MERGE does with file pruning). On
+  * [[merge]] is the frame-level MERGE: one anti-join on the merge key.
+  * At scale the anti-join shuffles both sides on the key unless
+  * `updates` is broadcast-small. [[upsert]] is the store's one MERGE
+  * commit over it: with partitioned targets it prunes the `existing`
+  * side to the updates' touched partitions, which bounds the rewrite
+  * (the same optimization Delta's MERGE does with file pruning). On
   * Delta-enabled clusters this whole object is replaced by
   * `DeltaTable.merge`.
   */
@@ -33,7 +37,114 @@ object MergeWriter {
     * to one winner per key (e.g. `CdcStream.scd1Sink` via
     * `CdcDedup.latestByKey`) may pass false to skip the window. */
   def merge(existing: DataFrame, updates: DataFrame, key: String,
-      checkUniqueKeys: Boolean = true): DataFrame = {
+      checkUniqueKeys: Boolean = true): DataFrame =
+    mergeRows(existing, updates, key, checkUniqueKeys, None)
+
+  /** The store's one MERGE commit: upsert `updates` on `key` into the
+    * table `layer.name`, whose current version the caller read as
+    * `existing` (None: no table yet). Rules, each stated once here:
+    *
+    *  - `updates` is persisted once (discovery, probe and merge all
+    *    read it; unpersisted, the caller's build — source scan,
+    *    CDC-dedup window — would run once per reader) and released in
+    *    a `finally`;
+    *  - `deleteWhen` is Delta's `WHEN MATCHED AND <cond> THEN DELETE`:
+    *    every update key replaces its stored row, and only the updates
+    *    where `deleteWhen` is not true are inserted;
+    *  - no table yet: a plain write of the inserted updates;
+    *  - pruned arm iff `partitionBy` is non-empty, the columns are
+    *    compatible ([[ModelStore.compatibleColumns]]) and the stored
+    *    layout matches ([[ModelStore.hasPartitionLayout]]): only the
+    *    touched partitions are rewritten, the rest carry over by link
+    *    ([[ModelStore.writeTouchedPartitions]]). Touched = the inserts'
+    *    partitions plus those where the update keys (deleted ones
+    *    included) live now — else a key whose partition value moved,
+    *    or a deleted key, would keep its stale row in a carried-over
+    *    dir. Otherwise a full rewrite syncs every column;
+    *  - no-op: a commit with no source rows, compatible columns and an
+    *    empty `meta` does not happen (Delta's no-op MERGE; a rewrite
+    *    would be pure version churn). The pruned arm learns emptiness
+    *    free from its discovery collect, the full arm from one limit-1
+    *    probe. A `meta`-bearing commit (a stream's batch marker)
+    *    always happens, and so does a schema-drift one, which must
+    *    re-sync the stored schema;
+    *  - `checkUniqueKeys` as in [[merge]].
+    *
+    * Phases are labeled by [[graft.ops.PhaseTimer.table]]:
+    * `touched-discovery`, `pruned-merge-write`, `empty-check`,
+    * `merge-write`. */
+  def upsert(store: ModelStore, existing: Option[DataFrame],
+      updates: DataFrame, layer: String, name: String, key: String,
+      partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil,
+      statsCols: Seq[String] = Nil, description: String = "",
+      meta: Map[String, String] = Map.empty,
+      deleteWhen: Option[Column] = None,
+      checkUniqueKeys: Boolean = true): Unit = {
+    val spark = updates.sparkSession
+    def timed[T](phase: String)(body: => T): T =
+      PhaseTimer.table(spark, layer, name, phase)(body)
+    def write(df: DataFrame): Unit =
+      store.write(df, layer, name, partitionBy, zorderBy,
+        description = description, meta = meta, statsCols = statsCols)
+    val u = updates.persist()
+    try existing match {
+      case None => write(insertsOf(u, deleteWhen))
+      case Some(ex) =>
+        val compatible = ModelStore.compatibleColumns(ex.schema, u.schema)
+        if (partitionBy.nonEmpty && compatible &&
+            store.hasPartitionLayout(spark, layer, name, partitionBy)) {
+          val parts = partitionBy.map(c => col(c))
+          // residence: one column-pruned semi-join against the
+          // broadcast update keys. <=> (null-safe): an equality join
+          // never matches NULL, so a NULL-key update would miss its
+          // stored row's partition and duplicate that row.
+          val residence = ex
+            .join(broadcast(u.select(col(key).as("__res_k"))),
+              col(key) <=> col("__res_k"), "left_semi")
+            .select(parts: _*)
+          val touchedDf = insertsOf(u, deleteWhen).select(parts: _*)
+            .union(residence).distinct()
+          val touched = timed("touched-discovery") { touchedDf.collect() }
+          if (touched.nonEmpty || meta.nonEmpty) {
+            // <=> (null-safe): a NULL partition value must still select
+            // its existing rows — `=== lit(null)` is never true, which
+            // would drop the whole NULL partition from the merge.
+            val pred = touched.map(r =>
+                partitionBy.zipWithIndex.map { case (c, i) =>
+                  col(c) <=> lit(r.get(i))
+                }.reduce(_ && _))
+              .reduceOption(_ || _)
+              .getOrElse(lit(false))
+            val merged = mergeRows(ex.filter(pred), u, key,
+              checkUniqueKeys, deleteWhen)
+            timed("pruned-merge-write") {
+              // the declared touched set also empties a partition whose
+              // only row moved away or was deleted; the collected tuples
+              // pass driver-side, no marker-write job
+              store.writeTouchedPartitions(merged, layer, name,
+                partitionBy, zorderBy, description = description,
+                meta = meta,
+                touchedRows = Some((touchedDf.schema, touched.toSeq)),
+                statsCols = statsCols)
+            }
+          }
+        } else if (!(meta.isEmpty && compatible &&
+            timed("empty-check")(u.isEmpty)))
+          timed("merge-write") {
+            write(mergeRows(ex, u, key, checkUniqueKeys, deleteWhen))
+          }
+    } finally { u.unpersist(); () }
+  }
+
+  /** The updates a MERGE inserts: those where `deleteWhen` is not true
+    * (a NULL condition does not delete, as in Delta's WHEN MATCHED). */
+  private def insertsOf(updates: DataFrame,
+      deleteWhen: Option[Column]): DataFrame =
+    deleteWhen.fold(updates)(d => updates.filter(!coalesce(d, lit(false))))
+
+  private def mergeRows(existing: DataFrame, updates: DataFrame,
+      key: String, checkUniqueKeys: Boolean,
+      deleteWhen: Option[Column]): DataFrame = {
     val checked =
       if (!checkUniqueKeys) updates
       else {
@@ -45,11 +156,6 @@ object MergeWriter {
           .filter(col("__merge_dup_chk").isNull)
           .drop("__merge_dup_chk")
       }
-    mergeUnique(existing, checked, key)
-  }
-
-  private def mergeUnique(existing: DataFrame, updates: DataFrame,
-      key: String): DataFrame = {
     // Null-safe (<=>) anti-join: a NULL-key update must REPLACE the
     // stored NULL-key row. Plain equality never matches NULL, so a
     // malformed-envelope row with a null key would append once per
@@ -57,13 +163,14 @@ object MergeWriter {
     // the per-batch uniqueness check above can't see it (it only
     // counts within one batch). EqualNullSafe still hash-joins.
     val kept = existing.join(
-      updates.select(col(key).as("__merge_k")),
+      checked.select(col(key).as("__merge_k")),
       col(key) <=> col("__merge_k"), "left_anti")
-    val target = updates.schema
-    val keptSynced = kept.unionByName(updates.limit(0),
+    val inserts = insertsOf(checked, deleteWhen)
+    val target = inserts.schema
+    val keptSynced = kept.unionByName(inserts.limit(0),
       allowMissingColumns = true)   // null-backfill new columns
     val aligned = keptSynced.select(target.fields.map(f =>
       col(f.name).cast(f.dataType)): _*)
-    aligned.unionByName(updates)
+    aligned.unionByName(inserts)
   }
 }

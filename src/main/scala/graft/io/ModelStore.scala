@@ -327,16 +327,14 @@ final class ModelStore(val root: String) {
     hasPartitionLayout(spark, layer, name, Seq(batchCol)) && {
       val base = new Path(versionDir(layer, name, cur))
       val fs = fsFor(spark, base)
-      def cols(s: StructType) = s.fields.filter(_.name != batchCol)
-        .map(f => f.name -> f.dataType).toMap
-      val want = cols(batch.schema)
+      def cols(s: StructType) = StructType(s.filter(_.name != batchCol))
       fs.listStatus(base).iterator.filter(_.isDirectory)
         .flatMap(d => fs.listStatus(d.getPath))
         .find(_.getPath.getName.endsWith(".parquet"))
         .flatMap(f => ParquetStats.sparkSchema(
           spark.sparkContext.hadoopConfiguration, f.getPath))
-        .map(cols).exists(have => have.keySet == want.keySet &&
-          have.forall { case (c, t) => DataTypeUtils.sameType(t, want(c)) })
+        .exists(have => ModelStore.compatibleColumns(cols(have),
+          cols(batch.schema)))
     }
 
   /** Columns with recorded (or tombstoned) stats meta on the current
@@ -783,6 +781,16 @@ object ModelStore {
     * swallow real failures. */
   final class ConcurrentWriteException(msg: String)
     extends IllegalStateException(msg)
+
+  /** The store's one column-compatibility test ([[appendBatch]],
+    * [[MergeWriter.upsert]]): the same column names, each with the same
+    * type, nullability aside; order does not matter. */
+  def compatibleColumns(a: StructType, b: StructType): Boolean = {
+    def types(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    val (have, want) = (types(a), types(b))
+    have.keySet == want.keySet &&
+      have.forall { case (c, t) => DataTypeUtils.sameType(t, want(c)) }
+  }
 
   /** Serialize a column list for layout meta (URL-encoding keeps a
     * comma inside an exotic column name unambiguous). Empty list ⇔

@@ -330,19 +330,16 @@ object Pipeline {
   /** Materialize one model: build → merge/append per strategy → write →
     * post-hooks. Shared by the batch DAG executor above and the
     * streaming foreachBatch sink ([[graft.streaming.StreamingPipeline]]),
-    * so batch and streaming ingestion run the SAME model code. */
+    * so batch and streaming ingestion run the SAME model code. A
+    * keyed incremental run commits through [[MergeWriter.upsert]], the
+    * store's one MERGE (pruned or full rewrite, empty no-op, persist,
+    * schema rule). */
   def materializeModel(spark: SparkSession, store: ModelStore,
       m: ModelDef, mode: RunMode,
       sources: (String, String) => DataFrame,
       ref: String => DataFrame,
       vars: Map[String, String],
       meta: Map[String, String] = Map.empty): Unit = {
-    // Phase timings to stderr + job labeling (graft.ops.PhaseTimer —
-    // the one shared stopwatch convention)
-    def timed[T](phase: String)(body: => T): T =
-      graft.ops.PhaseTimer.timed(spark,
-        s"[pipeline-io] ${m.layer}.${m.name} $phase",
-        s"pipeline ${m.layer}.${m.name} $phase")(body)
     val existing =
       if (mode == RunMode.Incremental) store.read(spark, m.layer, m.name)
       else None
@@ -360,135 +357,31 @@ object Pipeline {
     // reference project's default (`dbt_project.yml:40–41`,
     // `incremental_strategy: 'append'`).
     (existing, m.uniqueKey) match {
-      case (Some(ex), Some(key))
-          if m.partitionBy.nonEmpty && sameColumns(ex, updates) &&
-            store.hasPartitionLayout(spark, m.layer, m.name,
-              m.partitionBy) =>
-        // Partition-pruned MERGE (Delta file-pruning analog, reference
-        // `orders_cleaned.sql:14`): anti-join and rewrite ONLY the
-        // touched partitions; untouched partition dirs carry over by
-        // link. Touched = partitions present in `updates` PLUS the
-        // partitions where the updates' keys CURRENTLY live — without
-        // the second set, a key whose partition value changed (e.g. a
-        // dim_customer whose country moved) would leave its stale row
-        // behind in a carried-over dir, breaking uniqueKey; a real
-        // Delta MERGE rewrites that file. The lookup is one
-        // column-pruned (key + partition columns) semi-join of the
-        // stored table against the updates' keys — broadcastable at
-        // any scale where the batch is incremental-sized, the same
-        // touched-file discovery Delta's MERGE performs. On schema
-        // change (sync_all_columns) or a stored layout that doesn't
-        // match the model's partitioning (hasPartitionLayout), this
-        // arm is skipped and the full rewrite below re-syncs every
-        // partition.
-        // persist: the build pipeline feeds the touched-partition
-        // discovery, the key-residence lookup AND the merge/write —
-        // without it the whole model computes three times per run
-        val u = updates.persist()
-        try {
-          val parts = m.partitionBy.map(c => functions.col(c))
-          // <=> (null-safe): a NULL-key update must discover the
-          // partition its stored NULL-key row lives in — an equality
-          // semi-join never matches NULL, which would carry the old
-          // partition over and duplicate the NULL-key row (defeating
-          // MergeWriter's null-safe replacement on exactly the
-          // migration case this lookup exists for)
-          val residence = ex
-            .join(functions.broadcast(
-                u.select(functions.col(key).as("__res_k"))),
-              functions.col(key) <=> functions.col("__res_k"),
-              "left_semi")
-            .select(parts: _*)
-          val touchedDf = u.select(parts: _*).union(residence).distinct()
-          val touched = timed("touched-discovery") { touchedDf.collect() }
-          // Empty incremental batch (a fully watermark-gated feed):
-          // touched is empty iff `updates` is empty (its own partitions
-          // AND its keys' residences both derive from it), and a MERGE
-          // with no source rows touches no files — Delta's own no-op
-          // commit shape. Rewriting (or even re-linking) every
-          // partition into a fresh version here would be pure version
-          // churn; skip the write outright. Guarded on meta.isEmpty:
-          // a streaming micro-batch must still commit its
-          // exactly-once batch marker even when empty. The emptiness
-          // signal is FREE — the discovery collect above already ran.
-          if (touched.isEmpty && meta.isEmpty) ()
-          else {
-          // <=> (null-safe): a NULL partition value must still select
-          // its existing rows — `=== lit(null)` is never true, which
-          // would drop the whole NULL partition from the merge.
-          val pred = touched.map(r =>
-              m.partitionBy.zipWithIndex.map { case (c, i) =>
-                functions.col(c) <=> functions.lit(r.get(i))
-              }.reduce(_ && _))
-            .reduceOption(_ || _)
-            .getOrElse(functions.lit(false))
-          val merged = MergeWriter.merge(ex.filter(pred), u, key)
-          timed("pruned-merge-write") {
-            // the explicit touched set also covers a partition whose
-            // only row migrated away (it must be emptied, not linked);
-            // the already-collected tuples pass through driver-side —
-            // no marker-write job re-materializing the lookup
-            store.writeTouchedPartitions(merged, m.layer, m.name,
-              m.partitionBy, m.zorderBy, description = m.description,
-              meta = meta,
-              touchedRows = Some((touchedDf.schema, touched.toSeq)),
+      case (Some(_), Some(key)) =>
+        MergeWriter.upsert(store, existing, updates, m.layer, m.name, key,
+          m.partitionBy, m.zorderBy, m.statsCols, m.description, meta)
+      case _ =>
+        // One persist rule for the append and bootstrap writes: persist
+        // iff the write range-partitions (partitioned AND zordered).
+        // That exchange SAMPLES its input in a separate job before
+        // shuffling, so an unpersisted build would compute twice (at
+        // ≈sf10 the medallion bootstrap paid its 15M-row CDC-dedup
+        // window twice, +60 s measured). Zorder-only writes keep their
+        // historical no-persist behavior: their builds re-run cheaper
+        // than a table-size cache round-trip (measured on
+        // customers_latest).
+        val part = m.partitionBy.nonEmpty && m.zorderBy.nonEmpty
+        val u = if (part) updates.persist() else updates
+        def write(phase: String, df: DataFrame): Unit =
+          graft.ops.PhaseTimer.table(spark, m.layer, m.name, phase) {
+            store.write(df, m.layer, m.name, m.partitionBy, m.zorderBy,
+              description = m.description, meta = meta,
               statsCols = m.statsCols)
           }
-          }
-        } finally u.unpersist()
-      case (Some(ex), Some(key)) =>
-        // MergeWriter.merge consumes `updates` twice (column-pruned
-        // anti-join keys + full-width union), so an unpersisted plan
-        // would run the whole model build — source scan, CdcDedup
-        // window shuffle — twice per run; pay it once, like the
-        // pruned arm above
-        val u = updates.persist()
-        // Empty incremental batch: a MERGE with no source rows is a
-        // no-op commit in Delta; rewriting the whole (unpartitioned)
-        // table into a fresh identical version costs a full-table
-        // write for zero change — q34's customers_latest incremental
-        // run pays exactly this (its feed is entirely ≤ the stored
-        // watermark). One limit-1 probe over the gated build decides
-        // it; meta-bearing calls (streaming batch markers) never skip.
-        // Nor do schema-drift batches: MergeWriter's output follows the
-        // updates schema, so an empty batch arriving AFTER a model
-        // schema change must still write through to re-sync the stored
-        // schema (Delta's autoMerge-on-empty-MERGE shape) — the
-        // sameColumns guard is a driver-side schema compare, free.
-        try {
-          if (meta.isEmpty && sameColumns(ex, u) &&
-              timed("empty-check")(u.isEmpty)) ()
-          else timed("merge-write") {
-            store.write(MergeWriter.merge(ex, u, key), m.layer, m.name,
-              m.partitionBy, m.zorderBy, description = m.description,
-              meta = meta, statsCols = m.statsCols)
-          }
-        } finally u.unpersist()
-      case (Some(ex), None) =>
-        // persist iff the write range-partitions (partitioned AND
-        // zordered): that exchange SAMPLES
-        // its input in a separate job before shuffling, so an
-        // unpersisted build would compute twice (at ≈sf10 the
-        // medallion bootstrap paid its 15M-row CDC-dedup window twice,
-        // +60 s measured). Zorder-only writes keep their historical
-        // no-persist behavior: their builds re-run cheaper than a
-        // table-size cache round-trip (measured on customers_latest).
-        val part = m.partitionBy.nonEmpty && m.zorderBy.nonEmpty
-        val u = if (part) updates.persist() else updates
-        try timed("append-write") {
-          store.write(ex.unionByName(u, allowMissingColumns = true),
-            m.layer, m.name, m.partitionBy, m.zorderBy,
-            description = m.description, meta = meta,
-            statsCols = m.statsCols)
-        } finally if (part) { u.unpersist(); () }
-      case _ =>
-        // persist iff the write range-partitions — as the append arm
-        val part = m.partitionBy.nonEmpty && m.zorderBy.nonEmpty
-        val u = if (part) updates.persist() else updates
-        try timed("bootstrap-write") {
-          store.write(u, m.layer, m.name, m.partitionBy, m.zorderBy,
-            description = m.description, meta = meta,
-            statsCols = m.statsCols)
+        try existing match {
+          case Some(ex) => write("append-write",
+            ex.unionByName(u, allowMissingColumns = true))
+          case None => write("bootstrap-write", u)
         } finally if (part) { u.unpersist(); () }
     }
     // O6: post-hooks run against the materialized table (the dbt
@@ -498,12 +391,4 @@ object Pipeline {
       m.postHooks.foreach(_(materialized))
     }
   }
-
-  /** Same column set (name → type, order/nullability-insensitive):
-    * gate for the pruned-merge fast path — any schema drift routes
-    * through the full rewrite so sync_all_columns touches every
-    * partition. */
-  private def sameColumns(a: DataFrame, b: DataFrame): Boolean =
-    a.schema.fields.map(f => f.name -> f.dataType).toMap ==
-      b.schema.fields.map(f => f.name -> f.dataType).toMap
 }

@@ -26,4 +26,11 @@ object PhaseTimer {
       f"$logLine ${(System.nanoTime() - t0) / 1e9}%.2f s")
     r
   }
+
+  /** [[timed]] for a model table's write phase; perfbench's `model.*`
+    * layers key on the `pipeline <layer>.<name> <phase>` job label. */
+  def table[T](spark: SparkSession, layer: String, name: String,
+      phase: String)(body: => T): T =
+    timed(spark, s"[pipeline-io] $layer.$name $phase",
+      s"pipeline $layer.$name $phase")(body)
 }

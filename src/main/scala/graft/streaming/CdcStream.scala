@@ -15,7 +15,8 @@ import graft.io.{MergeWriter, ModelStore}
   *  watermark scan gate (P6)             → `withWatermark` on event time
   *  window dedup rn=1 (W1/W2+P2)         → `mapGroupsWithState` keeping
   *                                         the max-(ts, ingested) record
-  *  MERGE upsert on unique_key (S3)      → `foreachBatch` + MergeWriter
+  *  MERGE upsert on unique_key (S3)      → `foreachBatch` +
+  *                                         `MergeWriter.upsert`
   *  late row silently dropped            → same, via the watermark
   *
   * State per key is one record — bounded, partitioned by key, scales
@@ -124,33 +125,23 @@ object CdcStream {
     * can legally deliver several versions of a key per trigger — the
     * upsert must apply the latest, not all of them), and the DELETE
     * decision runs on the winner: a key whose newest version is DELETE
-    * is removed, never resurrected at an older version. */
+    * is removed, never resurrected at an older version. The commit is
+    * [[MergeWriter.upsert]] with `deleteWhen = op <=> 'DELETE'`, so a
+    * no-data trigger (the watermark moved, no key changed) commits
+    * nothing. */
   def scd1Sink(spark: SparkSession, store: ModelStore, layer: String,
       name: String)(batchDs: Dataset[CdcEvent], batchId: Long): Unit = {
     import org.apache.spark.sql.functions.col
-    val batch = batchDs.toDF()
-    val winners = graft.ops.CdcDedup.latestByKey(batch, Seq("key"),
-      Seq(col("cdcTimestamp").desc, col("ingestedAt").desc))
-    // Null-safe: `op =!= "DELETE"` is NULL for a NULL op, and filter
-    // drops NULL — a malformed envelope whose winner has op=null would
-    // silently lose that key's latest version. Only a literal DELETE
-    // excludes the winner.
-    val updates = winners.filter(!(col("op") <=> "DELETE"))
-    val delKeys = winners.filter(col("op") <=> "DELETE")
-      .select(col("key").as("__del_k"))
-    val merged = store.read(spark, layer, name) match {
-      case Some(existing) =>
-        // apply the batch's winning DELETEs to stored state first
-        // (<=> so a NULL-key delete removes the stored NULL-key row,
-        // matching MergeWriter's null-safe replacement), then upsert.
-        // checkUniqueKeys=false: latestByKey above already guarantees
-        // one winner per key, skip the redundant window.
-        val kept = existing.join(delKeys,
-          existing.col("key") <=> col("__del_k"), "left_anti")
-        MergeWriter.merge(kept, updates, "key",
-          checkUniqueKeys = false)
-      case None => updates
-    }
-    store.write(merged, layer, name)
+    val winners = graft.ops.CdcDedup.latestByKey(batchDs.toDF(),
+      Seq("key"), Seq(col("cdcTimestamp").desc, col("ingestedAt").desc))
+    // Null-safe: `op = 'DELETE'` is NULL for a NULL op — a malformed
+    // envelope whose winner has op=null keeps its latest version. Only
+    // a literal DELETE removes the key (<=> on the key side too, so a
+    // NULL-key delete removes the stored NULL-key row).
+    // checkUniqueKeys=false: latestByKey already guarantees one winner
+    // per key, skip the redundant window.
+    MergeWriter.upsert(store, store.read(spark, layer, name), winners,
+      layer, name, "key", deleteWhen = Some(col("op") <=> "DELETE"),
+      checkUniqueKeys = false)
   }
 }

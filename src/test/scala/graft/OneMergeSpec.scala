@@ -1,0 +1,51 @@
+package graft
+
+import java.io.File
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guards the one MERGE commit: outside `io/MergeWriter.scala`, only
+  * q36 (`RefQueries.scala`, a frame-level MERGE with no table) calls
+  * `MergeWriter.merge`; every table upsert goes through
+  * `MergeWriter.upsert`. Also keeps out the retired private schema
+  * gate and the AnnIndex sink's replay stamp. */
+class OneMergeSpec extends AnyFunSuite {
+
+  private val frameMerge = """MergeWriter\.merge\(""".r
+  private val retired = """sameColumns|ann_last_batch""".r
+
+  private def sources(dir: File): Seq[File] =
+    Option(dir.listFiles).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) sources(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  private def offenders(files: Seq[File],
+      pattern: scala.util.matching.Regex): Seq[String] =
+    files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
+        .map(_.toString).zipWithIndex
+        .filter { case (l, _) => pattern.findFirstIn(l).isDefined }
+        .map { case (l, i) => s"${f.getPath}:${i + 1}: ${l.trim}" }
+    }
+
+  private val main = {
+    val root = new File("src/main")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    sources(root)
+  }
+
+  test("src/main calls MergeWriter.merge only in io/MergeWriter.scala " +
+      "and q36") {
+    val hits = offenders(main.filterNot(f =>
+      f.getPath.endsWith("io/MergeWriter.scala") ||
+        f.getPath.endsWith("queries/RefQueries.scala")), frameMerge)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main has no sameColumns and no ann_last_batch") {
+    val hits = offenders(main, retired)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+}

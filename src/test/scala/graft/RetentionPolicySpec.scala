@@ -52,8 +52,8 @@ class RetentionPolicySpec extends AnyFunSuite {
     AnnIndex.buildKnn(spark, store, "e")
     (0L until 4L).foreach(b =>
       AnnIndex.sink(store, "e")(emb.filter(slot === b), b))
-    assert(store.meta(spark, AnnIndex.Layer, "e_postings",
-      "ann_last_batch").contains("3"))
+    assert(store.meta(spark, AnnIndex.Layer, "e_postings", "rows")
+      .contains(emb.count().toString))
     def versionDirs(table: String): Seq[String] =
       Option(new File(s"$root/${AnnIndex.Layer}/$table").listFiles)
         .toSeq.flatten.map(_.getName).filter(_.matches("v[0-9]+")).sorted

@@ -99,8 +99,8 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(hits.length == 1 && hits.head.getLong(1) == 910000L)
 
     // at-least-once replay: re-delivering an applied batch id must be
-    // a no-op (append has no key dedup — without the batch stamp the
-    // same vectors would insert twice and corrupt top-k ranks)
+    // a no-op (append anti-joins the stored vec_ids — a re-inserted
+    // vector would corrupt top-k ranks — and commits nothing)
     val nAfter = store.read(spark, AnnIndex.Layer, "e_postings").get
       .count()
     val vAfter = store.currentVersion(spark, AnnIndex.Layer,
@@ -799,5 +799,25 @@ class AnnIndexSpec extends AnyFunSuite {
     // micro-batch)
     val ids = streamed.map(_._1)
     assert(rows.forall(r => ids.contains(r._1)))
+  }
+
+  test("sink after a fresh-checkpoint restart: a new vector delivered " +
+      "as batch 0 after batches 0 and 1 becomes searchable") {
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-annsink-restart").toString)
+    val emb = Tables.load(spark, Dir, "embeddings")
+    AnnIndex.build(spark, store, "e", emb)
+    def clone(of: Long, id: Long) = emb.filter(col("vec_id") === of)
+      .select(lit(id).as("vec_id"), col("embedding"))
+    def topHit(of: Long): Long = AnnIndex.search(spark, store, "e",
+        emb.filter(col("vec_id") === of)
+          .select(col("vec_id").as("q_id"), col("embedding")))
+      .filter(col("rnk") === 1).collect().head.getLong(1)
+    AnnIndex.sink(store, "e")(clone(0L, 920000L), 0L)
+    AnnIndex.sink(store, "e")(clone(1L, 920001L), 1L)
+    // the restarted stream numbers its batches from 0 again
+    AnnIndex.sink(store, "e")(clone(3L, 920003L), 0L)
+    assert(topHit(3L) == 920003L)
+    assert(Seq(0L, 1L).map(topHit) == Seq(920000L, 920001L))
   }
 }

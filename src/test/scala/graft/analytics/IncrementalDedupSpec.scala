@@ -280,6 +280,27 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(!new java.io.File(st.versionDir("d", "fps", v + 1)).exists)
   }
 
+  test("an all-duplicate batch and a replayed delivery commit no " +
+      "sketch version") {
+    val st = store()
+    def sketchVersion = st.currentVersion(spark, "d", "fps_sketch")
+    IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(1L -> "one", 2L -> "two"), 0L): Unit
+    assert(sketchVersion == 1)
+    IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(3L -> "one", 4L -> "TWO"), 1L): Unit
+    assert(sketchVersion == 1)
+    val replay = IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(1L -> "one", 2L -> "two"), 0L)
+    assert(keptIds(replay) === Set(1L, 2L))
+    assert(sketchVersion == 1)
+    // a batch that keeps a row still merges into the sketch
+    IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(5L -> "five", 6L -> "one"), 2L): Unit
+    assert(sketchVersion == 2)
+    assert(st.meta(spark, "d", "fps_sketch", "n_keys").contains("3"))
+  }
+
   private def filesUnder(dir: String): Set[String] = {
     val base = new java.io.File(dir)
     def walk(f: java.io.File): Seq[java.io.File] =

@@ -73,4 +73,33 @@ class MergeWriterSpec extends AnyFunSuite {
     assert(merged.schema("v").dataType.typeName == "long")
     assert(merged.collect().map(_.getLong(1)).toSet == Set(1L, 2L))
   }
+
+  test("upsert with deleteWhen on a partitioned table removes a deleted " +
+      "key's row from a carried-over partition") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft-upsert-del")
+    val store = new ModelStore(root.toString)
+    val del = Some(col("op") <=> "DELETE")
+    def upsert(rows: (String, Int, String, String)*): Unit =
+      MergeWriter.upsert(store, store.read(spark, "s", "t"),
+        rows.toDF("k", "p", "v", "op"), "s", "t", "k",
+        partitionBy = Seq("p"), deleteWhen = del)
+    def state = store.read(spark, "s", "t").get.select("k", "p", "v")
+      .as[(String, Int, String)].collect().toSet
+    def files(v: Int, part: String) = Option(new java.io.File(
+        s"${store.versionDir("s", "t", v)}/$part").list)
+      .toSeq.flatten.filter(_.endsWith(".parquet")).toSet
+    upsert(("a", 1, "a1", "INSERT"), ("b", 2, "b1", "INSERT"),
+      ("c", 3, "c1", "INSERT"))
+    // a's DELETE envelope carries p=2, not the partition a lives in;
+    // nothing is inserted into p=1, so only a's residence touches it
+    upsert(("a", 2, null, "DELETE"), ("b", 2, "b2", "UPDATE"),
+      ("d", 3, "d1", null))   // a NULL op is not a delete
+    assert(state == Set(("b", 2, "b2"), ("c", 3, "c1"), ("d", 3, "d1")))
+    assert(store.currentVersion(spark, "s", "t") == 2)
+    assert(files(2, "p=1").isEmpty)
+    // pruned, not a full rewrite: an untouched partition carries over
+    upsert(("e", 4, "e1", "INSERT"))
+    assert(files(3, "p=3").nonEmpty && files(3, "p=3") == files(2, "p=3"))
+  }
 }

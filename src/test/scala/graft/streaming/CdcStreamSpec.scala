@@ -274,4 +274,50 @@ class CdcStreamSpec extends AnyFunSuite {
       store.versionDir("silver", "null_t", 1)).getParentFile
     assert(vdir.listFiles().count(_.getName.startsWith("v")) <= 2)
   }
+
+  test("scd1Sink: an empty batch over an existing table commits no " +
+      "version") {
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-scd1-empty").toString)
+    val sink = CdcStream.scd1Sink(spark, store, "silver", "empty_t") _
+    sink(Seq(
+      ev("K1", "INSERT", "2024-03-15 10:00:00", payload = "a1")).toDS(), 0L)
+    val v = store.currentVersion(spark, "silver", "empty_t")
+    // a no-data trigger (the watermark moved, no key changed)
+    sink(Seq.empty[CdcEvent].toDS(), 1L)
+    assert(store.currentVersion(spark, "silver", "empty_t") == v)
+    assert(!new java.io.File(
+      store.versionDir("silver", "empty_t", v + 1)).exists)
+    assert(store.read(spark, "silver", "empty_t").get.as[CdcEvent]
+      .collect().map(e => e.key -> e.payload).toMap == Map("K1" -> "a1"))
+  }
+
+  test("scd1Sink evaluates its batch window once per trigger") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-scd1-once").toString)
+    val sink = CdcStream.scd1Sink(spark, store, "silver", "once_t") _
+    sink(Seq(
+      ev("K1", "INSERT", "2024-03-15 10:00:00", payload = "a1"),
+      ev("K2", "INSERT", "2024-03-15 10:00:00", payload = "b1")).toDS(), 0L)
+    // the batch arrives hash-partitioned by key, so the sink's
+    // latest-per-key window runs right above the counting UDF with no
+    // exchange in between (a reused exchange would hide a re-run), and
+    // the UDF taps the window's order column, which every consumer of
+    // the winners needs: each evaluation of the window passes each
+    // batch row through the UDF once
+    val seen = spark.sparkContext.longAccumulator("scd1-batch-rows")
+    val tap = udf { (t: Timestamp) => seen.add(1); t }.asNondeterministic()
+    val batch = Seq(
+      ev("K1", "UPDATE", "2024-03-15 11:00:00", payload = "a2"),
+      ev("K2", "DELETE", "2024-03-15 11:00:00"),
+      ev("K3", "INSERT", "2024-03-15 11:00:00", payload = "c1")).toDS()
+      .repartition(col("key"))
+      .withColumn("cdcTimestamp", tap(col("cdcTimestamp"))).as[CdcEvent]
+    sink(batch, 1L)
+    assert(seen.value == 3L, s"batch rows evaluated ${seen.value} times")
+    assert(store.read(spark, "silver", "once_t").get.as[CdcEvent]
+      .collect().map(e => e.key -> e.payload).toMap ==
+      Map("K1" -> "a2", "K3" -> "c1"))
+  }
 }
