@@ -423,73 +423,6 @@ object AnnIndex {
       shortlistR, topK, numSub, subDim)
   }
 
-  /** Result-retention window of [[serveSink]]'s store table, in
-    * micro-batches: bounds per-batch commit cost and table size for
-    * an unbounded stream. Production serving emits answers to a
-    * downstream sink — the store table is the bounded auditable
-    * tail, not the delivery channel. */
-  val ServeKeepBatches = 64
-
-  /** foreachBatch SERVING sink — the streaming half of the IVF-PQ
-    * serving story ([[sink]] ingests; this answers): each probe
-    * micro-batch of `(q_id, embedding)` rows searches the PERSISTED
-    * artifacts through the two-stage batch path ([[searchAdcRerank]] —
-    * ADC shortlist from codes only, exact re-rank of the shortlist)
-    * and appends the ranked results to `out` as the batch's `batch_id`
-    * partition, keeping the last [[ServeKeepBatches]] batches
-    * ([[graft.io.ModelStore.appendBatch]]: O(batch) per commit, expiry
-    * read from the partition dir names). Replay-safe: foreachBatch is
-    * at-least-once, so the last served batch id is stamped in the
-    * commit meta and re-deliveries are skipped —
-    * the stamp key is namespaced by `runId` because a stream RESTARTED
-    * WITH A FRESH CHECKPOINT resets batch ids to 0, and an
-    * un-namespaced stamp from the previous run would silently drop
-    * every batch until the ids caught back up (data loss with no
-    * error). Callers pass the started query's `runId` (or any per-start
-    * nonce); the default empty id keeps single-run semantics for a sink
-    * whose out table lives and dies with one checkpoint. Stream ≡ batch
-    * parity, the replay no-op, O(batch) hard-linked commits, and the
-    * fresh-run restart are spec-pinned in AnnIndexSpec. */
-  def serveSink(store: ModelStore, name: String, out: ModelStore,
-      outLayer: String, outName: String,
-      nprobe: Int = VectorOps.NumProbes,
-      shortlistR: Int = Pq.RerankDepth,
-      topK: Int = VectorOps.TopK,
-      keepBatches: Int = ServeKeepBatches,
-      runId: String = "")(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val stampKey = if (runId.isEmpty) "serve_last_batch"
-      else s"serve_last_batch_$runId"
-    val applied = out.meta(spark, outLayer, outName, stampKey)
-      .map(_.toLong)
-    if (applied.exists(_ >= batchId) || batch.isEmpty) return
-    out.appendBatch(searchAdcRerank(spark, store, name,
-        batch.select(col("q_id"), col("embedding")),
-        nprobe, shortlistR, topK),
-      outLayer, outName, "batch_id", batchId,
-      description = "streaming ANN serving results (bounded tail)",
-      meta = Map(stampKey -> batchId.toString),
-      keepBatches = Some(keepBatches))
-  }
-
-  /** foreachBatch sink: continuous index growth — each micro-batch of
-    * `(vec_id, embedding)` rows assigns against the STORED centroids
-    * and rewrites only its touched cells ([[append]]). Replay-safe
-    * without a batch stamp: foreachBatch is at-least-once, and append
-    * anti-joins the stored `vec_id`s and commits nothing when no
-    * vector is new, so a re-delivered batch (stream failed after the
-    * store commit but before the streaming checkpoint) is a no-op —
-    * and a stream restarted with a fresh checkpoint, whose batch ids
-    * start again at 0, still lands its new vectors. Pair with a
-    * periodic [[build]] when drift demands retraining; the store's
-    * versioning makes that cutover atomic for concurrent readers. */
-  def sink(store: ModelStore, name: String)(
-      batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty)
-      append(batch.sparkSession, store, name,
-        batch.select(col("vec_id"), col("embedding")))
-
   /** The /tmp store keyed by the canonical corpus dir (full-path MD5 —
     * two corpora sharing a basename can never serve each other's
     * index). Every annindex tier lives in it (coarse, derived-K,

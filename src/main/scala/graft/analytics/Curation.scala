@@ -529,8 +529,8 @@ object Curation {
 
   // ---------------------------------------------------- PII redaction
   // Per-category audit over THE pattern set ([[TextOps.EmailRe]] /
-  // IdRe / PhoneRe — one definition shared with q41's scrub and the
-  // streaming curate). q41 is the scrub projection (clean text out);
+  // IdRe / PhoneRe — one definition shared with q41's scrub). q41 is
+  // the scrub projection (clean text out);
   // q88 is the audit (counts per category + redacted length), the
   // report a compliance pass wants. Purely scan-local (regexp_count +
   // the shared chained-replace scrub, whole-stage codegen): composes

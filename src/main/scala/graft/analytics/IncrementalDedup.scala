@@ -8,9 +8,7 @@ import graft.io.{ModelStore, Tables}
 import graft.ops.{BloomJoin, BroadcastGate}
 import graft.queries.Q
 
-/** Incremental exact dedup against ALL of history — the batch-tier
-  * contract [[graft.streaming.DocStream]] delegates to (the stream
-  * only dedups within its watermark horizon): each arriving corpus
+/** Incremental exact dedup against ALL of history: each arriving corpus
   * batch (a crawl, a dump, a day of ingestion) keeps only documents
   * whose content fingerprint has never been seen in ANY prior batch,
   * and the fingerprint history persists in a versioned [[ModelStore]]
@@ -50,8 +48,8 @@ import graft.queries.Q
   * a pathological all-colliding sketch).
   *
   * Contract: batches arrive in keep-priority order (earlier batch
-  * wins; within a batch the smallest `orderCol` wins) — the same
-  * arrival-order contract as the stream's first-copy-wins.
+  * wins; within a batch the smallest `orderCol` wins) — one-shot
+  * first-copy dedup over the batches in arrival order.
   */
 object IncrementalDedup {
 
@@ -291,22 +289,6 @@ object IncrementalDedup {
       .withColumn("ingest_batch", col("ingest_batch").cast("long"))
       .localCheckpoint()
   }
-
-  /** foreachBatch sink: forever-dedup at ingest. Where
-    * [[graft.streaming.DocStream.curate]] dedups within its watermark
-    * horizon (bounded state), this sink dedups against ALL history via
-    * the persisted fingerprint store — the two compose: horizon dedup
-    * absorbs the hot duplicates cheaply in-stream, this sink catches
-    * re-crawls arriving days later. Replays are naturally idempotent:
-    * a re-delivered micro-batch keeps no row (its fingerprints are in
-    * history), so its append commits nothing and the call returns the
-    * kept set of the original delivery — no exactly-once marker needed
-    * (IncrementalDedupSpec proves both properties). */
-  def sink(store: ModelStore, layer: String, name: String,
-      keyCol: String = "content_fp", orderCol: String = "doc_id")(
-      batch: DataFrame, batchId: Long): Unit =
-    applyBatch(batch.sparkSession, store, layer, name, batch, batchId,
-      keyCol, orderCol): Unit
 
   // ------------------------------------------- driver-checkable query
   // Documents arrive as two doc_id-range batches (the driver-side

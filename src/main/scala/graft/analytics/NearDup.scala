@@ -506,8 +506,7 @@ object NearDup {
     * array column (alias the array in its own projection first — an
     * inlined expression would re-tokenize per bit). Semantics are
     * identical to [[simhash]]'s aggregate form (spec-checked); this
-    * form has no shuffle at all, which is what a per-row streaming
-    * signature needs. Cost O(64·|tokens|) per row. */
+    * form has no shuffle at all. Cost O(64·|tokens|) per row. */
   def simhashExpr(ths: Column, n: Column): Column =
     (0 until SimBits).map { bit =>
       val cnt = size(filter(ths,
@@ -526,9 +525,9 @@ object NearDup {
 
   /** Column-preserving SimHash: appends `simhash` to `df`. This is
     * the ONE place the signature-defining projection (distinct token
-    * xxhash64 array → bit-majority fold) lives — batch dedup, the
-    * streaming near-dup state, and the specs all route through it, so
-    * their signatures can never silently diverge. */
+    * xxhash64 array → bit-majority fold) lives — batch dedup and the
+    * specs both route through it, so their signatures can never
+    * silently diverge. */
   def withSimhash(df: DataFrame, text: Column): DataFrame =
     df.withColumn("__ths",
         transform(array_distinct(split(text, "\\s+")), x => xxhash64(x)))

@@ -10,9 +10,7 @@ import graft.queries.Q
 
 /** Persisted MinHash-LSH signature index: incremental NEAR-dup against
   * ALL prior crawls — the fuzzy companion of [[IncrementalDedup]]
-  * (exact fingerprints) and the cross-batch complement of
-  * [[graft.streaming.NearDupStream]] (which only dedups within its
-  * watermark horizon). Each arriving crawl is checked against every
+  * (exact fingerprints). Each arriving crawl is checked against every
   * crawl ever ingested without recomputing historical signatures:
   * the index stores each surviving document's minhash signature and
   * its banded bucket rows in versioned [[ModelStore]] tables.
@@ -251,23 +249,6 @@ object NearDupIndex {
     }
     decidedCp.select("doc_id", "is_dup", "dup_of", "batch_id")
   }
-
-  /** foreachBatch sink: forever NEAR-dedup at ingest — the fuzzy
-    * sibling of [[IncrementalDedup.sink]], composing the same way
-    * with [[graft.streaming.NearDupStream]]: the stream absorbs hot
-    * near-dups within its watermark horizon, this sink catches
-    * re-crawls arriving later than any horizon, against ALL history.
-    * Decisions are side-effected into the index; the batch's
-    * survivors are what downstream sees via the store. */
-  def sink(store: ModelStore, layer: String, name: String,
-      id: String = "doc_id", textCol: String = "text")(
-      batch: DataFrame, batchId: Long): Unit =
-    // empty triggers commit nothing (no version churn on an idle
-    // stream); replays are naturally idempotent — a re-delivered
-    // batch's docs self-match the history they already joined
-    if (!batch.isEmpty)
-      ingest(batch.sparkSession, store, layer, name, batch, id,
-        col(textCol), batchId): Unit
 
   // ------------------------------------------- driver-checkable query
   // Two doc_id-range crawls (q86's arrival orchestration): the second

@@ -35,14 +35,14 @@ object TextOps {
   def normalized(c: Column): Column =
     regexp_replace(lower(trim(c)), "\\s+", " ")
 
-  /** THE normalized-content fingerprint (q19/q23/q86 and the
-    * streaming curate all dedup on this) — one definition, so batch
-    * and stream fingerprints can never drift apart. */
+  /** THE normalized-content fingerprint (q19/q23/q86 all dedup on
+    * this) — one definition, so their fingerprints can never drift
+    * apart. */
   def contentHash(c: Column): Column = md5(normalized(c))
 
   /** THE quality band (q20's 40/15 thresholds + stopword presence) —
-    * shared by the batch report and the streaming curate; a threshold
-    * change lands in both tiers atomically. */
+    * shared by the q20 report and the DSIR / n-gram HIGH-band targets;
+    * a threshold change lands in all of them atomically. */
   def qualityBand(text: Column): Column = {
     val t = tokens(text)
     val nWords = size(t).cast("long")
@@ -265,8 +265,8 @@ object TextOps {
   // -------------------------------------------------- PII redaction
   // Training-data scrubbing staple: redact email / SSN-shaped id /
   // phone shapes, count what was redacted. THE one pattern set —
-  // q41, q88 (Curation.redactPii) and the streaming curate all scrub
-  // through these, so the patterns can never drift apart. Regexes
+  // q41 and q88 (Curation.redactPii) both scrub through these, so
+  // the patterns can never drift apart. Regexes
   // stay inside the Java∩RE2 common subset (no lookaround, no \b, no
   // \d) so Spark and DuckDB agree byte-for-byte. Redaction order is
   // fixed email → id → phone: an SSN-shaped id must not be half-eaten
@@ -373,9 +373,8 @@ object TextOps {
 
   /** The trained DSIR contrast table: `buckets` rows of
     * (bucket, micro-nat log-ratio). Built batch-side in one
-    * map-side-combined pass; the batch scorer broadcast-joins it, the
-    * streaming gate ships it as a literal (the Bloom-sketch pattern —
-    * artifact size is the design constant B, not the corpus). */
+    * map-side-combined pass; the batch scorer broadcast-joins it
+    * (artifact size is the design constant B, not the corpus). */
   def dsirContrast(docs: DataFrame, buckets: Int = DsirBuckets)
       : DataFrame = {
     val db = dsirBucketCounts(docs, buckets)
@@ -397,17 +396,6 @@ object TextOps {
       .select(col("b"),
         (signum(dd) * floor(abs(dd * 1000000d) + 0.5)).cast("long")
           .as("dq"))
-  }
-
-  /** Contrast table as a bucket-indexed literal array for the
-    * streaming gate ([[graft.streaming.DocStream.importanceGate]]).
-    * The collect is bounded by the design constant `buckets` (256
-    * longs), the same justification as the eval Bloom sketch. */
-  def dsirContrastArray(docs: DataFrame, buckets: Int = DsirBuckets)
-      : Array[Long] = {
-    val byBucket = dsirContrast(docs, buckets).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Array.tabulate(buckets)(b => byBucket(b.toLong))
   }
 
   /** Score `docs` against a contrast trained on `train` (defaults to

@@ -1,9 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{assert_true, broadcast, coalesce,
-  col, count, lit}
+import org.apache.spark.sql.functions.{assert_true, broadcast, col, count,
+  lit}
 
 import graft.ops.PhaseTimer
 
@@ -34,11 +34,11 @@ object MergeWriter {
     * breaking the one-row-per-key SCD-1 invariant. The check is an
     * inline window count on the updates side (no extra job, no
     * recomputation of the updates plan); callers that already reduce
-    * to one winner per key (e.g. `CdcStream.scd1Sink` via
-    * `CdcDedup.latestByKey`) may pass false to skip the window. */
+    * to one winner per key (e.g. via `CdcDedup.latestByKey`) may pass
+    * false to skip the window. */
   def merge(existing: DataFrame, updates: DataFrame, key: String,
       checkUniqueKeys: Boolean = true): DataFrame =
-    mergeRows(existing, updates, key, checkUniqueKeys, None)
+    mergeRows(existing, updates, key, checkUniqueKeys)
 
   /** The store's one MERGE commit: upsert `updates` on `key` into the
     * table `layer.name`, whose current version the caller read as
@@ -48,27 +48,22 @@ object MergeWriter {
     *    read it; unpersisted, the caller's build — source scan,
     *    CDC-dedup window — would run once per reader) and released in
     *    a `finally`;
-    *  - `deleteWhen` is Delta's `WHEN MATCHED AND <cond> THEN DELETE`:
-    *    every update key replaces its stored row, and only the updates
-    *    where `deleteWhen` is not true are inserted;
-    *  - no table yet: a plain write of the inserted updates;
+    *  - no table yet: a plain write of the updates;
     *  - pruned arm iff `partitionBy` is non-empty, the columns are
     *    compatible ([[ModelStore.compatibleColumns]]) and the stored
     *    layout matches ([[ModelStore.hasPartitionLayout]]): only the
     *    touched partitions are rewritten, the rest carry over by link
-    *    ([[ModelStore.writeTouchedPartitions]]). Touched = the inserts'
-    *    partitions plus those where the update keys (deleted ones
-    *    included) live now — else a key whose partition value moved,
-    *    or a deleted key, would keep its stale row in a carried-over
-    *    dir. Otherwise a full rewrite syncs every column;
-    *  - no-op: a commit with no source rows, compatible columns and an
-    *    empty `meta` does not happen (Delta's no-op MERGE; a rewrite
-    *    would be pure version churn). The pruned arm learns emptiness
-    *    free from its discovery collect, the full arm from one limit-1
-    *    probe. A `meta`-bearing commit (a stream's batch marker)
-    *    always happens, and so does a schema-drift one, which must
-    *    re-sync the stored schema;
-    *  - `checkUniqueKeys` as in [[merge]].
+    *    ([[ModelStore.writeTouchedPartitions]]). Touched = the updates'
+    *    partitions plus those where the update keys live now — else a
+    *    key whose partition value moved would keep its stale row in a
+    *    carried-over dir. Otherwise a full rewrite syncs every column;
+    *  - no-op: a commit with no source rows and compatible columns
+    *    does not happen (Delta's no-op MERGE; a rewrite would be pure
+    *    version churn). The pruned arm learns emptiness free from its
+    *    discovery collect, the full arm from one limit-1 probe. A
+    *    schema-drift commit always happens: it must re-sync the stored
+    *    schema;
+    *  - duplicate keys in `updates` fail the job, as in [[merge]].
     *
     * Phases are labeled by [[graft.ops.PhaseTimer.table]]:
     * `touched-discovery`, `pruned-merge-write`, `empty-check`,
@@ -76,19 +71,16 @@ object MergeWriter {
   def upsert(store: ModelStore, existing: Option[DataFrame],
       updates: DataFrame, layer: String, name: String, key: String,
       partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil,
-      statsCols: Seq[String] = Nil, description: String = "",
-      meta: Map[String, String] = Map.empty,
-      deleteWhen: Option[Column] = None,
-      checkUniqueKeys: Boolean = true): Unit = {
+      statsCols: Seq[String] = Nil, description: String = ""): Unit = {
     val spark = updates.sparkSession
     def timed[T](phase: String)(body: => T): T =
       PhaseTimer.table(spark, layer, name, phase)(body)
     def write(df: DataFrame): Unit =
       store.write(df, layer, name, partitionBy, zorderBy,
-        description = description, meta = meta, statsCols = statsCols)
+        description = description, statsCols = statsCols)
     val u = updates.persist()
     try existing match {
-      case None => write(insertsOf(u, deleteWhen))
+      case None => write(u)
       case Some(ex) =>
         val compatible = ModelStore.compatibleColumns(ex.schema, u.schema)
         if (partitionBy.nonEmpty && compatible &&
@@ -102,10 +94,9 @@ object MergeWriter {
             .join(broadcast(u.select(col(key).as("__res_k"))),
               col(key) <=> col("__res_k"), "left_semi")
             .select(parts: _*)
-          val touchedDf = insertsOf(u, deleteWhen).select(parts: _*)
-            .union(residence).distinct()
+          val touchedDf = u.select(parts: _*).union(residence).distinct()
           val touched = timed("touched-discovery") { touchedDf.collect() }
-          if (touched.nonEmpty || meta.nonEmpty) {
+          if (touched.nonEmpty) {
             // <=> (null-safe): a NULL partition value must still select
             // its existing rows — `=== lit(null)` is never true, which
             // would drop the whole NULL partition from the merge.
@@ -116,35 +107,26 @@ object MergeWriter {
               .reduceOption(_ || _)
               .getOrElse(lit(false))
             val merged = mergeRows(ex.filter(pred), u, key,
-              checkUniqueKeys, deleteWhen)
+              checkUniqueKeys = true)
             timed("pruned-merge-write") {
               // the declared touched set also empties a partition whose
-              // only row moved away or was deleted; the collected tuples
-              // pass driver-side, no marker-write job
+              // only row moved away; the collected tuples pass
+              // driver-side, no marker-write job
               store.writeTouchedPartitions(merged, layer, name,
                 partitionBy, zorderBy, description = description,
-                meta = meta,
                 touchedRows = Some((touchedDf.schema, touched.toSeq)),
                 statsCols = statsCols)
             }
           }
-        } else if (!(meta.isEmpty && compatible &&
-            timed("empty-check")(u.isEmpty)))
+        } else if (!(compatible && timed("empty-check")(u.isEmpty)))
           timed("merge-write") {
-            write(mergeRows(ex, u, key, checkUniqueKeys, deleteWhen))
+            write(mergeRows(ex, u, key, checkUniqueKeys = true))
           }
     } finally { u.unpersist(); () }
   }
 
-  /** The updates a MERGE inserts: those where `deleteWhen` is not true
-    * (a NULL condition does not delete, as in Delta's WHEN MATCHED). */
-  private def insertsOf(updates: DataFrame,
-      deleteWhen: Option[Column]): DataFrame =
-    deleteWhen.fold(updates)(d => updates.filter(!coalesce(d, lit(false))))
-
   private def mergeRows(existing: DataFrame, updates: DataFrame,
-      key: String, checkUniqueKeys: Boolean,
-      deleteWhen: Option[Column]): DataFrame = {
+      key: String, checkUniqueKeys: Boolean): DataFrame = {
     val checked =
       if (!checkUniqueKeys) updates
       else {
@@ -165,12 +147,11 @@ object MergeWriter {
     val kept = existing.join(
       checked.select(col(key).as("__merge_k")),
       col(key) <=> col("__merge_k"), "left_anti")
-    val inserts = insertsOf(checked, deleteWhen)
-    val target = inserts.schema
-    val keptSynced = kept.unionByName(inserts.limit(0),
+    val target = checked.schema
+    val keptSynced = kept.unionByName(checked.limit(0),
       allowMissingColumns = true)   // null-backfill new columns
     val aligned = keptSynced.select(target.fields.map(f =>
       col(f.name).cast(f.dataType)): _*)
-    aligned.unionByName(inserts)
+    aligned.unionByName(checked)
   }
 }

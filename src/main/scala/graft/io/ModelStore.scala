@@ -109,11 +109,9 @@ final class ModelStore(val root: String) {
     * ingestion accumulates. A no-op for missing tables. Readers are
     * unaffected (pointer commit); old versions age out on commit. The
     * commit carries no description, so the table comment carries
-    * forward; `extraMeta` rides in the same commit (a marker change
-    * that must not cost the table its layout or stats). */
+    * forward. */
   def compact(spark: SparkSession, layer: String, name: String,
-      partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil,
-      extraMeta: Map[String, String] = Map.empty): Unit =
+      partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil): Unit =
     read(spark, layer, name).foreach { df =>
       // Layout is PRESERVED by default: an empty argument means "keep
       // the stored layout" (read from commit meta; directory-discovered
@@ -135,7 +133,7 @@ final class ModelStore(val root: String) {
       // re-derive whatever stats the table tracks: compaction preserves
       // data but rewrites every file, so the per-partition stat entries
       // must be recomputed (a stats-less write would tombstone them)
-      write(df, layer, name, pb, zb, meta = extraMeta,
+      write(df, layer, name, pb, zb,
         statsCols = statsColsOf(spark, layer, name))
     }
 
@@ -268,8 +266,7 @@ final class ModelStore(val root: String) {
     *    batch's other columns by name and type, nullability aside) only
     *    the batch's partition is written fresh — so a replay replaces
     *    its own partition — and every other one hard-links over:
-    *    O(batch). Partitions with an id ≤ `batchId - keepBatches` expire
-    *    (are not linked);
+    *    O(batch);
     *  - over any other table a link pass would carry nothing, and the
     *    next commit's retention would drop the old rows for good: one
     *    full rewrite of existing ∪ batch rows (null-backfilled) migrates
@@ -281,12 +278,10 @@ final class ModelStore(val root: String) {
     *
     * The write is the only Spark job: emptiness comes from its output
     * listing, the layout from the version's listing, the columns from
-    * one footer ([[ParquetStats.sparkSchema]]), expired ids from the
-    * `batchCol=<k>` dir names. */
+    * one footer ([[ParquetStats.sparkSchema]]). */
   def appendBatch(rows: DataFrame, layer: String, name: String,
-      batchCol: String, batchId: Long, description: String = "",
-      meta: Map[String, String] = Map.empty,
-      keepBatches: Option[Int] = None): Unit = {
+      batchCol: String, batchId: Long,
+      meta: Map[String, String] = Map.empty): Unit = {
     val spark = rows.sparkSession
     val tagged = rows.withColumn(batchCol, lit(batchId))
     val partitionBy = Seq(batchCol)
@@ -294,19 +289,16 @@ final class ModelStore(val root: String) {
     if (cur > 0 && !appendable(spark, layer, name, cur, batchCol, tagged)) {
       write(readVersion(spark, layer, name, cur)
           .unionByName(tagged, allowMissingColumns = true),
-        layer, name, partitionBy, description = description, meta = meta)
+        layer, name, partitionBy, meta = meta)
       return
     }
     val dest = new Path(versionDir(layer, name, cur + 1))
     writeData(tagged, dest, partitionBy, Nil)
     val fs = fsFor(spark, dest)
     val fresh = partitionRelPaths(fs, dest, 1).toSet
-    def expired(rel: String): Boolean = keepBatches.exists(k =>
-      rel.substring(rel.indexOf('=') + 1).toLongOption
-        .exists(_ <= batchId - k))
     if (fresh.nonEmpty)
-      linkAndCommit(spark, layer, name, cur, dest, partitionBy, Nil,
-        description, meta, Nil, rel => !fresh(rel) && !expired(rel))
+      linkAndCommit(spark, layer, name, cur, dest, partitionBy, Nil, "",
+        meta, Nil, rel => !fresh(rel))
     else {
       // `dest` is a committed version if another writer got there
       // first: raise as commit would, and delete nothing
@@ -597,9 +589,9 @@ final class ModelStore(val root: String) {
     val dest = new Path(versionDir(layer, name, next))
     val fs = fsFor(spark, dest)
     // O7 persist_docs analog: table comment persisted beside the data.
-    // Arbitrary metadata (e.g. a streaming sink's batch id) is written
-    // into the version dir BEFORE the pointer swap, so data + metadata
-    // commit atomically together.
+    // Arbitrary metadata (layout, column stats, staleness stamps) is
+    // written into the version dir BEFORE the pointer swap, so data +
+    // metadata commit atomically together.
     val metaAll =
       if (description.nonEmpty) meta + ("table_comment" -> description)
       else meta
@@ -608,11 +600,11 @@ final class ModelStore(val root: String) {
       try out.write(v.getBytes("UTF-8")) finally out.close()
     }
     // Carry prior-version metadata forward (Delta table-properties
-    // semantics: a property persists until overwritten). Without this,
-    // any batch write — compact(), a backfill — on a streaming-fed
-    // table would erase the stream_batch_id/stream_query_id
-    // exactly-once markers, and a crashed stream's replayed batch
-    // would then apply twice instead of being skipped.
+    // semantics: a property persists until overwritten). compact()
+    // commits no description, so this is what keeps the table comment
+    // across it; and it is why statsMeta must write EMPTY tombstones
+    // for stats a write no longer declares — omitting them would carry
+    // the old, possibly stale-high maxima forward.
     if (next > 1) {
       val prev = new Path(versionDir(layer, name, next - 1))
       if (fs.exists(prev))

@@ -328,18 +328,14 @@ object Pipeline {
   }
 
   /** Materialize one model: build → merge/append per strategy → write →
-    * post-hooks. Shared by the batch DAG executor above and the
-    * streaming foreachBatch sink ([[graft.streaming.StreamingPipeline]]),
-    * so batch and streaming ingestion run the SAME model code. A
-    * keyed incremental run commits through [[MergeWriter.upsert]], the
-    * store's one MERGE (pruned or full rewrite, empty no-op, persist,
-    * schema rule). */
+    * post-hooks, for the DAG executor above. A keyed incremental run
+    * commits through [[MergeWriter.upsert]], the store's one MERGE
+    * (pruned or full rewrite, empty no-op, persist, schema rule). */
   def materializeModel(spark: SparkSession, store: ModelStore,
       m: ModelDef, mode: RunMode,
       sources: (String, String) => DataFrame,
       ref: String => DataFrame,
-      vars: Map[String, String],
-      meta: Map[String, String] = Map.empty): Unit = {
+      vars: Map[String, String]): Unit = {
     val existing =
       if (mode == RunMode.Incremental) store.read(spark, m.layer, m.name)
       else None
@@ -359,7 +355,7 @@ object Pipeline {
     (existing, m.uniqueKey) match {
       case (Some(_), Some(key)) =>
         MergeWriter.upsert(store, existing, updates, m.layer, m.name, key,
-          m.partitionBy, m.zorderBy, m.statsCols, m.description, meta)
+          m.partitionBy, m.zorderBy, m.statsCols, m.description)
       case _ =>
         // One persist rule for the append and bootstrap writes: persist
         // iff the write range-partitions (partitioned AND zordered).
@@ -375,8 +371,7 @@ object Pipeline {
         def write(phase: String, df: DataFrame): Unit =
           graft.ops.PhaseTimer.table(spark, m.layer, m.name, phase) {
             store.write(df, m.layer, m.name, m.partitionBy, m.zorderBy,
-              description = m.description, meta = meta,
-              statsCols = m.statsCols)
+              description = m.description, statsCols = m.statsCols)
           }
         try existing match {
           case Some(ex) => write("append-write",

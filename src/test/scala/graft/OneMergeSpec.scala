@@ -8,11 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * q36 (`RefQueries.scala`, a frame-level MERGE with no table) calls
   * `MergeWriter.merge`; every table upsert goes through
   * `MergeWriter.upsert`. Also keeps out the retired private schema
-  * gate and the AnnIndex sink's replay stamp. */
+  * gate and the AnnIndex sink's replay stamp.
+  * The third case keeps the deleted streaming surface and its rules out. */
 class OneMergeSpec extends AnyFunSuite {
 
   private val frameMerge = """MergeWriter\.merge\(""".r
   private val retired = """sameColumns|ann_last_batch""".r
+  private val streaming = ("""graft\.streaming|foreachBatch|deleteWhen|""" +
+    """keepBatches|serve_last_batch|stream_batch_id""").r
 
   private def sources(dir: File): Seq[File] =
     Option(dir.listFiles).toSeq.flatten.flatMap { f =>
@@ -46,6 +49,11 @@ class OneMergeSpec extends AnyFunSuite {
 
   test("src/main has no sameColumns and no ann_last_batch") {
     val hits = offenders(main, retired)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main has no streaming package, sink or stream-only rule") {
+    val hits = offenders(main, streaming)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -51,7 +51,7 @@ class RetentionPolicySpec extends AnyFunSuite {
     AnnIndex.buildPq(spark, store, "e")
     AnnIndex.buildKnn(spark, store, "e")
     (0L until 4L).foreach(b =>
-      AnnIndex.sink(store, "e")(emb.filter(slot === b), b))
+      AnnIndex.append(spark, store, "e", emb.filter(slot === b)))
     assert(store.meta(spark, AnnIndex.Layer, "e_postings", "rows")
       .contains(emb.count().toString))
     def versionDirs(table: String): Seq[String] =

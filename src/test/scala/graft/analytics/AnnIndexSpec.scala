@@ -59,6 +59,16 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(store.meta(spark, AnnIndex.Layer, "e_postings", "rows")
       .contains((nBefore + 1).toString))
 
+    // re-appending a stored vector is a no-op: append anti-joins the
+    // stored vec_ids (a re-inserted vector would corrupt top-k ranks)
+    // and commits nothing when no vector is new
+    val vAfter = store.currentVersion(spark, AnnIndex.Layer, "e_postings")
+    AnnIndex.append(spark, store, "e", clone)
+    assert(store.read(spark, AnnIndex.Layer, "e_postings").get
+      .count() == nBefore + 1)
+    assert(store.currentVersion(spark, AnnIndex.Layer,
+      "e_postings") == vAfter)
+
     val hits = AnnIndex.search(spark, store, "e",
       emb.filter(col("vec_id") === 0L)
         .select(col("vec_id").as("q_id"), col("embedding")))
@@ -70,146 +80,6 @@ class AnnIndexSpec extends AnyFunSuite {
     // fl(sqrt(n2))^2 which need not round-trip to n2 — tolerance, not
     // exact equality (cos_sim presents as the fixed 4-decimal string)
     assert(hits.head.getString(2).toDouble >= 1.0 - 1e-4)
-  }
-
-  test("streaming sink grows the index incrementally; a planted " +
-      "stream-fed duplicate becomes searchable") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-annsink").toString
-    val store = new ModelStore(root)
-    val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
-    val clone = emb.filter(col("vec_id") === 3L)
-      .select(lit(910000L).as("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[(Long, Seq[Float])]
-    val query = input.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .option("checkpointLocation", s"$root/_ckpt")
-      .foreachBatch(AnnIndex.sink(store, "e") _)
-      .start()
-    try {
-      input.addData(clone.toSeq); query.processAllAvailable()
-    } finally query.stop()
-    val hits = AnnIndex.search(spark, store, "e",
-      emb.filter(col("vec_id") === 3L)
-        .select(col("vec_id").as("q_id"), col("embedding")))
-      .filter(col("rnk") === 1).collect()
-    assert(hits.length == 1 && hits.head.getLong(1) == 910000L)
-
-    // at-least-once replay: re-delivering an applied batch id must be
-    // a no-op (append anti-joins the stored vec_ids — a re-inserted
-    // vector would corrupt top-k ranks — and commits nothing)
-    val nAfter = store.read(spark, AnnIndex.Layer, "e_postings").get
-      .count()
-    val vAfter = store.currentVersion(spark, AnnIndex.Layer,
-      "e_postings")
-    AnnIndex.sink(store, "e")(
-      emb.filter(col("vec_id") === 3L)
-        .select(lit(910000L).as("vec_id"), col("embedding")), 0L)
-    assert(store.read(spark, AnnIndex.Layer, "e_postings").get
-      .count() == nAfter)
-    assert(store.currentVersion(spark, AnnIndex.Layer,
-      "e_postings") == vAfter)
-  }
-
-  test("streaming ANN serving: foreachBatch probes against the " +
-      "persisted PQ artifacts equal batch two-stage search; replay " +
-      "is a no-op; later batches append O(batch)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft-annserve").toString
-    val store = new ModelStore(root)
-    val out = new ModelStore(s"$root/out")
-    val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
-    AnnIndex.buildPq(spark, store, "e")
-    val probes = emb.filter(col("vec_id") < VectorOps.NumQueries)
-      .select(col("vec_id").as("q_id"), col("embedding"))
-    val expected = AnnIndex.searchAdcRerank(spark, store, "e", probes)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getInt(3))).toSet
-
-    val input = MemoryStream[(Long, Seq[Float])]
-    val query = input.toDF().toDF("q_id", "embedding")
-      .writeStream
-      .option("checkpointLocation", s"$root/_sckpt")
-      .foreachBatch(AnnIndex.serveSink(store, "e", out, "serve", "res") _)
-      .start()
-    try {
-      input.addData(probes.collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq)
-      query.processAllAvailable()
-    } finally query.stop()
-
-    // stream ≡ batch on the same probes (the serving-loop closure)
-    val got = out.read(spark, "serve", "res").get
-      .select("q_id", "vec_id", "d2", "rnk")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getInt(3))).toSet
-    assert(got.nonEmpty && got == expected)
-
-    // at-least-once replay of an applied batch id must not re-serve
-    val v = out.currentVersion(spark, "serve", "res")
-    AnnIndex.serveSink(store, "e", out, "serve", "res")(probes, 0L)
-    assert(out.currentVersion(spark, "serve", "res") == v)
-
-    // a later batch keeps the prior batch inside the retention
-    // horizon — the table is the bounded auditable tail
-    AnnIndex.serveSink(store, "e", out, "serve", "res")(
-      probes.filter(col("q_id") === 1L), 1L)
-    val served = out.read(spark, "serve", "res").get
-    assert(served.filter(col("batch_id") === 1L).count() > 0)
-    assert(served.filter(col("batch_id") === 0L)
-      .select("q_id", "vec_id", "d2", "rnk")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getInt(3))).toSet == expected)
-
-    // O(batch) commit: the retained batch-0 partition carried over by
-    // HARD LINK (same inode as the prior version's file, nlink >= 2);
-    // only the new batch's partition was written fresh (nlink == 1).
-    // The pre-fix shape read back and rewrote the whole retained
-    // window every commit — ~keep× write amplification per batch
-    val vCur = out.currentVersion(spark, "serve", "res")
-    def nlinks(part: String): Seq[Int] = {
-      val d = new java.io.File(
-        out.versionDir("serve", "res", vCur), part)
-      d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
-        .map(f => java.nio.file.Files
-          .getAttribute(f.toPath, "unix:nlink")
-          .asInstanceOf[Number].intValue)
-    }
-    assert(nlinks("batch_id=0").nonEmpty &&
-      nlinks("batch_id=0").forall(_ >= 2),
-      "retained partition must carry over by hard link, not rewrite")
-    assert(nlinks("batch_id=1").nonEmpty &&
-      nlinks("batch_id=1").forall(_ == 1),
-      "the new batch's partition must be the only fresh write")
-
-    // ...and batches beyond the horizon age OUT: per-batch cost is
-    // O(retained results), bounded for an unbounded stream, never
-    // O(full history)
-    AnnIndex.serveSink(store, "e", out, "serve", "res",
-      keepBatches = 1)(probes.filter(col("q_id") === 2L), 2L)
-    val bounded = out.read(spark, "serve", "res").get
-    assert(bounded.filter(col("batch_id") === 2L).count() > 0)
-    assert(bounded.filter(col("batch_id") <= 1L).count() == 0,
-      "batches beyond the retention horizon must age out")
-
-    // fresh-checkpoint restart: batch ids reset to 0, but a NEW runId
-    // namespaces the replay stamp, so the restarted stream's batch 0
-    // is SERVED instead of silently dropped against the old run's
-    // stamp (which says last=2) — the no-error data-loss mode
-    val vBefore = out.currentVersion(spark, "serve", "res")
-    AnnIndex.serveSink(store, "e", out, "serve", "res",
-      runId = "restart")(probes.filter(col("q_id") === 3L), 0L)
-    assert(out.currentVersion(spark, "serve", "res") == vBefore + 1,
-      "a fresh run's batch 0 must be served, not dropped")
-    // ...and replay WITHIN the new run is still a no-op
-    AnnIndex.serveSink(store, "e", out, "serve", "res",
-      runId = "restart")(probes.filter(col("q_id") === 3L), 0L)
-    assert(out.currentVersion(spark, "serve", "res") == vBefore + 1)
   }
 
   test("persisted IVF-PQ search (q113) returns exactly the in-memory " +
@@ -738,8 +608,6 @@ class AnnIndexSpec extends AnyFunSuite {
       "sink leave the SAME stored graph as the one-shot batch append " +
       "(q125's shape) — the graph artifact joins postings and codes " +
       "in the streaming lifecycle") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
     val emb = Tables.load(spark, Dir, "embeddings")
     val isBatch =
       pmod(col("vec_id"), lit(AnnIndex.IncKnnMod.toLong)) === 0L
@@ -749,7 +617,7 @@ class AnnIndexSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     def freshStore(tag: String): ModelStore = {
       val s = new ModelStore(
-        Files.createTempDirectory(s"graft-knnsink-$tag").toString)
+        Files.createTempDirectory(s"graft-knnappend-$tag").toString)
       AnnIndex.build(spark, s, "g", hist)
       AnnIndex.buildKnn(spark, s, "g")
       s
@@ -757,24 +625,15 @@ class AnnIndexSpec extends AnyFunSuite {
     // reference arm: everything in ONE batch append
     val batchStore = freshStore("batch")
     AnnIndex.append(spark, batchStore, "g", late)
-    // streaming arm: the same rows split across two micro-batches
-    val streamStore = freshStore("stream")
+    // split arm: the same rows split across two appends
+    val splitStore = freshStore("split")
     val rows = late.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
     val (b1, b2) = rows.splitAt(rows.length / 2)
     assert(b1.nonEmpty && b2.nonEmpty,
-      "fixture must feed two non-trivial micro-batches")
-    val input = MemoryStream[(Long, Seq[Float])]
-    val ckpt = Files.createTempDirectory("graft-knnsink-ckpt").toString
-    val query = input.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(AnnIndex.sink(streamStore, "g") _)
-      .start()
-    try {
-      input.addData(b1.toSeq); query.processAllAvailable()
-      input.addData(b2.toSeq); query.processAllAvailable()
-    } finally query.stop()
+      "fixture must feed two non-trivial appends")
+    Seq(b1, b2).foreach(b => AnnIndex.append(spark, splitStore, "g",
+      b.toSeq.toDF("vec_id", "embedding")))
     def graph(s: ModelStore) =
       s.read(spark, AnnIndex.Layer, "g_knn").get
         .select(col("vec_id"), col("nbr_id"), col("cos_sim"),
@@ -782,42 +641,22 @@ class AnnIndexSpec extends AnyFunSuite {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
           r.getInt(3))).toSet
-    val streamed = graph(streamStore)
-    assert(streamed.nonEmpty && streamed == graph(batchStore),
-      "stream-fed graph diverged from the batch append")
+    val split = graph(splitStore)
+    assert(split.nonEmpty && split == graph(batchStore),
+      "two-append graph diverged from the one-shot append")
     // and both equal a from-scratch rebuild over the final postings
-    // (the cell-local decomposition, across the micro-batch split)
-    val posts = streamStore
+    // (the cell-local decomposition, across the append split)
+    val posts = splitStore
       .read(spark, AnnIndex.Layer, "g_postings").get
       .select(col("c_id").cast("long").as("c_id"), col("vec_id"),
         col("qv"), col("n2"))
     val rebuilt = AnnIndex.graphFromPostings(posts)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getDouble(2), r.getInt(3))).toSet
-    assert(streamed == rebuilt)
-    // every streamed vector is graph-visible (no silently skipped
-    // micro-batch)
-    val ids = streamed.map(_._1)
+    assert(split == rebuilt)
+    // every appended vector is graph-visible (no silently skipped
+    // append)
+    val ids = split.map(_._1)
     assert(rows.forall(r => ids.contains(r._1)))
-  }
-
-  test("sink after a fresh-checkpoint restart: a new vector delivered " +
-      "as batch 0 after batches 0 and 1 becomes searchable") {
-    val store = new ModelStore(
-      Files.createTempDirectory("graft-annsink-restart").toString)
-    val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
-    def clone(of: Long, id: Long) = emb.filter(col("vec_id") === of)
-      .select(lit(id).as("vec_id"), col("embedding"))
-    def topHit(of: Long): Long = AnnIndex.search(spark, store, "e",
-        emb.filter(col("vec_id") === of)
-          .select(col("vec_id").as("q_id"), col("embedding")))
-      .filter(col("rnk") === 1).collect().head.getLong(1)
-    AnnIndex.sink(store, "e")(clone(0L, 920000L), 0L)
-    AnnIndex.sink(store, "e")(clone(1L, 920001L), 1L)
-    // the restarted stream numbers its batches from 0 again
-    AnnIndex.sink(store, "e")(clone(3L, 920003L), 0L)
-    assert(topHit(3L) == 920003L)
-    assert(Seq(0L, 1L).map(topHit) == Seq(920000L, 920001L))
   }
 }

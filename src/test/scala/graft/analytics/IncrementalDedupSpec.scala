@@ -219,34 +219,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(shuffled === Set(1L, 2L, 4L))
   }
 
-  test("sink: stream-fed state equals one-shot dedup across horizons") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val st = store()
-    val input = MemoryStream[(Long, String)]
-    val query = input.toDS().toDF("doc_id", "text")
-      .select(col("doc_id"),
-        md5(TextOps.normalized(col("text"))).as("content_fp"))
-      .writeStream
-      .foreachBatch(IncrementalDedup.sink(st, "d", "fps") _)
-      .option("checkpointLocation", Files
-        .createTempDirectory("graft-incdedup-ckpt").toString)
-      .start()
-    try {
-      input.addData(1L -> "alpha", 2L -> "beta", 3L -> "ALPHA")
-      query.processAllAvailable()
-      // a duplicate arriving arbitrarily later (no watermark bound)
-      input.addData(4L -> "alpha ", 5L -> "gamma")
-      query.processAllAvailable()
-    } finally query.stop()
-    val state = st.read(spark, "d", "fps").get
-    val oneShot = docs(1L -> "alpha", 2L -> "beta", 3L -> "ALPHA",
-      4L -> "alpha ", 5L -> "gamma")
-      .groupBy("content_fp").agg(min("doc_id").as("doc_id"))
-    assert(keptIds(state) === keptIds(oneShot))
-    assert(keptIds(state) === Set(1L, 2L, 5L))
-  }
-
   test("applyBatch onto a pre-existing unpartitioned history keeps " +
       "its rows") {
     val st = store()

@@ -119,32 +119,6 @@ class NearDupIndexSpec extends AnyFunSuite {
     assert(d3(21L) == (true, 20L))
   }
 
-  test("streaming sink: a later micro-batch's near-copy dedups " +
-      "against the first batch's persisted index") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val text =
-      "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val root = Files.createTempDirectory("graft-ndsink").toString
-    val store = new ModelStore(root)
-    val input = MemoryStream[(Long, String)]
-    val query = input.toDF().toDF("doc_id", "text")
-      .writeStream
-      .option("checkpointLocation", s"$root/_ckpt")
-      .foreachBatch(NearDupIndex.sink(store, "nd", "idx") _)
-      .start()
-    try {
-      input.addData(Seq((1L, text))); query.processAllAvailable()
-      input.addData(Seq((2L, text + " x"))); query.processAllAvailable()
-    } finally query.stop()
-    // doc 2 matched the PERSISTED history → only doc 1's signature
-    // survives in the index
-    val stored = store.read(spark, "nd", "idx_sigs").get
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(stored == Seq(1L))
-  }
-
   test("re-ingesting the same batch is idempotent (everything dups " +
       "against history, index unchanged)") {
     val root = Files.createTempDirectory("graft-ndidx4").toString

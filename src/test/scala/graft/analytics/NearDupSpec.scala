@@ -495,4 +495,24 @@ class NearDupSpec extends AnyFunSuite {
     val prefTotal = perDoc.values.map(n => n - ((n * 3 + 4) / 5) + 1).sum
     assert(prefTotal < full, "prefix must prune the candidate index")
   }
+
+  test("scan-local simhashExpr equals the aggregate batch simhash") {
+    val docs = graft.io.Tables
+      .load(spark, "/root/testdata/sf0.001", "documents")
+    val local = docs
+      .withColumn("__ths",
+        transform(array_distinct(TextOps.tokens(col("text"))),
+          x => xxhash64(x)))
+      .select(col("doc_id"),
+        NearDup.simhashExpr(col("__ths"), size(col("__ths")))
+          .as("simhash"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val agg = NearDup.simhashAgg(docs, "doc_id", col("text"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(local == agg)
+    // and the production scan-local form is the same computation
+    val prod = NearDup.simhash(docs, "doc_id", col("text"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(prod == agg)
+  }
 }

@@ -339,21 +339,4 @@ class DeltaLogExportSpec extends AnyFunSuite {
     assert(names.toSeq ==
       Seq("00000000000000000000.json", "00000000000000000001.json"))
   }
-
-  test("StreamingPipeline.adopt preserves the stored partition layout") {
-    val root = Files.createTempDirectory("graft-adopt-part").toString
-    val store = new ModelStore(root)
-    store.write(
-      Seq((1L, "p1"), (2L, "p2")).toDF("v", "p"),
-      "silver", "pt", partitionBy = Seq("p"),
-      meta = Map("stream_query_id" -> "q-old", "stream_batch_id" -> "7"))
-    graft.streaming.StreamingPipeline.adopt(spark, store,
-      "silver", "pt", "q-new")
-    // layout survived the marker rewrite — the next batch still takes
-    // the pruned O(batch) path
-    assert(store.hasPartitionLayout(spark, "silver", "pt", Seq("p")))
-    assert(store.meta(spark, "silver", "pt", "stream_query_id")
-      .contains("q-new"))
-    assert(store.read(spark, "silver", "pt").get.count() == 2)
-  }
 }

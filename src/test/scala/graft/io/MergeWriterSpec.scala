@@ -74,32 +74,31 @@ class MergeWriterSpec extends AnyFunSuite {
     assert(merged.collect().map(_.getLong(1)).toSet == Set(1L, 2L))
   }
 
-  test("upsert with deleteWhen on a partitioned table removes a deleted " +
-      "key's row from a carried-over partition") {
-    import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-upsert-del")
-    val store = new ModelStore(root.toString)
-    val del = Some(col("op") <=> "DELETE")
-    def upsert(rows: (String, Int, String, String)*): Unit =
-      MergeWriter.upsert(store, store.read(spark, "s", "t"),
-        rows.toDF("k", "p", "v", "op"), "s", "t", "k",
-        partitionBy = Seq("p"), deleteWhen = del)
-    def state = store.read(spark, "s", "t").get.select("k", "p", "v")
-      .as[(String, Int, String)].collect().toSet
-    def files(v: Int, part: String) = Option(new java.io.File(
-        s"${store.versionDir("s", "t", v)}/$part").list)
-      .toSeq.flatten.filter(_.endsWith(".parquet")).toSet
-    upsert(("a", 1, "a1", "INSERT"), ("b", 2, "b1", "INSERT"),
-      ("c", 3, "c1", "INSERT"))
-    // a's DELETE envelope carries p=2, not the partition a lives in;
-    // nothing is inserted into p=1, so only a's residence touches it
-    upsert(("a", 2, null, "DELETE"), ("b", 2, "b2", "UPDATE"),
-      ("d", 3, "d1", null))   // a NULL op is not a delete
-    assert(state == Set(("b", 2, "b2"), ("c", 3, "c1"), ("d", 3, "d1")))
-    assert(store.currentVersion(spark, "s", "t") == 2)
-    assert(files(2, "p=1").isEmpty)
-    // pruned, not a full rewrite: an untouched partition carries over
-    upsert(("e", 4, "e1", "INSERT"))
-    assert(files(3, "p=3").nonEmpty && files(3, "p=3") == files(2, "p=3"))
+  test("upsert evaluates its updates once, on the full and the pruned " +
+      "arm") {
+    import org.apache.spark.sql.functions.{col, udf}
+    Seq(Nil, Seq("p")).foreach { partitionBy =>
+      val store = new ModelStore(java.nio.file.Files
+        .createTempDirectory("graft-upsert-once").toString)
+      store.write(Seq(("a", 1, "a1"), ("b", 2, "b1")).toDF("k", "p", "v"),
+        "s", "t", partitionBy)
+      // every reader of the updates (discovery, empty probe, merge
+      // write) must hit the one persisted copy: each evaluation of the
+      // updates plan passes each row it reads through the counting
+      // filter once (a filter, so no reader's column pruning drops it)
+      val seen = spark.sparkContext.longAccumulator("upsert-update-rows")
+      val tap = udf { (_: String) => seen.add(1); true }.asNondeterministic()
+      val updates = Seq(("a", 1, "a2"), ("c", 3, "c1"), ("d", 3, "d1"))
+        .toDF("k", "p", "v").repartition(col("k"))
+        .filter(tap(col("k")))
+      MergeWriter.upsert(store, store.read(spark, "s", "t"), updates,
+        "s", "t", "k", partitionBy = partitionBy)
+      assert(seen.value == 3L,
+        s"partitionBy=$partitionBy: update rows evaluated ${seen.value} " +
+          "times")
+      assert(store.read(spark, "s", "t").get.select("k", "p", "v")
+        .as[(String, Int, String)].collect().toSet ==
+        Set(("a", 1, "a2"), ("b", 2, "b1"), ("c", 3, "c1"), ("d", 3, "d1")))
+    }
   }
 }

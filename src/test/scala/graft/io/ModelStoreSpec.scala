@@ -160,6 +160,8 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(store.currentVersion(spark, "silver", "t") == 2)
     assert(store.hasPartitionLayout(spark, "silver", "t", Seq("p")),
       "compact flattened the partition layout")
+    assert(store.meta(spark, "silver", "t", "layout_zorder_by")
+      .contains("k"), "compact dropped the zorder layout")
     // the layout declaration survives the compact commit too (meta
     // carry-forward + explicit rewrite), so a SECOND compact still
     // preserves it
@@ -217,6 +219,7 @@ class ModelStoreSpec extends AnyFunSuite {
       "cannot erase streaming exactly-once markers") {
     val store = new ModelStore(
       Files.createTempDirectory("graft-store-meta").toString)
+    // markers a caller's own stream driver stamps through write(meta)
     store.write(Seq((1, "a")).toDF("k", "v"), "silver", "m",
       meta = Map("stream_batch_id" -> "42", "stream_query_id" -> "q1"))
     store.compact(spark, "silver", "m")
@@ -365,13 +368,11 @@ class ModelStoreSpec extends AnyFunSuite {
   test("appendBatch onto a missing table: a plain partitioned write " +
       "tagged with the batch id") {
     val store = appendStore("missing")
-    store.appendBatch(kv(1 -> "a", 2 -> "b"), "s", "t", "b", 7L,
-      description = "appended")
+    store.appendBatch(kv(1 -> "a", 2 -> "b"), "s", "t", "b", 7L)
     assert(store.currentVersion(spark, "s", "t") == 1)
     assert(store.hasPartitionLayout(spark, "s", "t", Seq("b")))
     assert(rowsByBatch(store, "t") == Set((1, "a", 7L), (2, "b", 7L)))
     assert(store.meta(spark, "s", "t", "layout_partition_by").contains("b"))
-    assert(store.comment(spark, "s", "t").contains("appended"))
     // the footer stores the batch's own columns; b lives in the dir name
     val footer = ParquetStats.sparkSchema(
       spark.sparkContext.hadoopConfiguration,
@@ -453,22 +454,6 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(v2.isDirectory)
   }
 
-  test("appendBatch expires partitions outside the retained window, " +
-      "from the directory listing") {
-    val store = appendStore("expiry")
-    (0L to 4L).foreach(b => store.appendBatch(kv(b.toInt -> s"r$b"),
-      "s", "t", "b", b, keepBatches = Some(2)))
-    assert(rowsByBatch(store, "t").map(_._3) == Set(3L, 4L))
-    val dirs = new java.io.File(store.versionDir("s", "t",
-      store.currentVersion(spark, "s", "t"))).list().toSet
-    assert(dirs.filter(_.startsWith("b=")) == Set("b=3", "b=4"))
-    // without a window every batch stays
-    val all = appendStore("expiry-all")
-    (0L to 4L).foreach(b => all.appendBatch(kv(b.toInt -> s"r$b"),
-      "s", "t", "b", b))
-    assert(rowsByBatch(all, "t").map(_._3) == (0L to 4L).toSet)
-  }
-
   test("appendBatch decides without a Spark job: an append over a " +
       "three-batch table runs the same jobs as the first append") {
     val store = appendStore("jobs")
@@ -490,10 +475,9 @@ class ModelStoreSpec extends AnyFunSuite {
       val first = jobsOf(store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L))
       store.appendBatch(kv(2 -> "b"), "s", "t", "b", 1L)
       store.appendBatch(kv(3 -> "c"), "s", "t", "b", 2L)
-      val later = jobsOf(store.appendBatch(kv(4 -> "d"), "s", "t", "b", 3L,
-        keepBatches = Some(2)))
+      val later = jobsOf(store.appendBatch(kv(4 -> "d"), "s", "t", "b", 3L))
       assert(first > 0 && later == first)
-      assert(rowsByBatch(store, "t").map(_._3) == Set(2L, 3L))
+      assert(rowsByBatch(store, "t").map(_._3) == Set(0L, 1L, 2L, 3L))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

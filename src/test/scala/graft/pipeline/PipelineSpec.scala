@@ -242,7 +242,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("empty incremental batch is a no-op commit: fully-gated feeds " +
-      "bump no version, change no data; meta-bearing writes still land") {
+      "bump no version, change no data") {
     val sources = Map(
       "customers_cdc" -> CdcFixtures.customersBatch1(),
       "orders_cdc" -> CdcFixtures.ordersBatch1())
@@ -269,17 +269,6 @@ class PipelineSpec extends AnyFunSuite {
       == vDim + 1)                   // ungated recompute still writes
     assert(byKey(out2("customers_latest"), "customer_id").keySet
       == custBefore.keySet)
-    // a meta-bearing call (a streaming micro-batch's exactly-once
-    // marker) must NEVER take the skip, even with empty updates: the
-    // marker has to commit to make the replay detectable
-    Pipeline.materializeModel(spark, store, models.customersLatest,
-      RunMode.Incremental, (_, name) => sources(name),
-      n => store.read(spark, "silver", n).get, Map.empty,
-      meta = Map("stream_batch_id" -> "7"))
-    assert(store.currentVersion(spark, "silver", "customers_latest")
-      == vCust + 1)
-    assert(store.meta(spark, "silver", "customers_latest",
-      "stream_batch_id").contains("7"))
   }
 
   test("append strategy (no uniqueKey) accumulates rows across runs") {
