@@ -30,8 +30,9 @@ import org.apache.spark.sql.SparkSession
   * [[checkpoint]] writes the protocol's `<v>.checkpoint.parquet` +
   * `_last_checkpoint`; both export and checkpoint seed their replay
   * from the latest checkpoint when one exists, so per-commit cost is
-  * O(tail), not O(all entries) — the property that keeps streaming
-  * exporters (one entry per micro-batch) from going quadratic.
+  * O(tail), not O(all entries) — the property that keeps a
+  * long-lived table's export (one entry per commit) from going
+  * quadratic in its commit count.
   *
   * No Delta reader exists in this offline environment, so conformance
   * is spec-verified STRUCTURALLY against the protocol document

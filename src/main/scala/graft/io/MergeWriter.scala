@@ -29,16 +29,13 @@ object MergeWriter {
     * removed columns are dropped, changed types follow the update).
     *
     * Delta's MERGE raises when one target row matches multiple source
-    * rows; `checkUniqueKeys` (default on) enforces the same contract —
-    * duplicate keys in `updates` fail the job instead of silently
-    * breaking the one-row-per-key SCD-1 invariant. The check is an
-    * inline window count on the updates side (no extra job, no
-    * recomputation of the updates plan); callers that already reduce
-    * to one winner per key (e.g. via `CdcDedup.latestByKey`) may pass
-    * false to skip the window. */
-  def merge(existing: DataFrame, updates: DataFrame, key: String,
-      checkUniqueKeys: Boolean = true): DataFrame =
-    mergeRows(existing, updates, key, checkUniqueKeys)
+    * rows; so does this one — duplicate keys in `updates` fail the job
+    * instead of silently breaking the one-row-per-key SCD-1 invariant.
+    * The check is an inline window count on the updates side (no extra
+    * job, no recomputation of the updates plan). */
+  def merge(existing: DataFrame, updates: DataFrame, key: String)
+      : DataFrame =
+    mergeRows(existing, updates, key)
 
   /** The store's one MERGE commit: upsert `updates` on `key` into the
     * table `layer.name`, whose current version the caller read as
@@ -106,8 +103,7 @@ object MergeWriter {
                 }.reduce(_ && _))
               .reduceOption(_ || _)
               .getOrElse(lit(false))
-            val merged = mergeRows(ex.filter(pred), u, key,
-              checkUniqueKeys = true)
+            val merged = mergeRows(ex.filter(pred), u, key)
             timed("pruned-merge-write") {
               // the declared touched set also empties a partition whose
               // only row moved away; the collected tuples pass
@@ -120,24 +116,20 @@ object MergeWriter {
           }
         } else if (!(compatible && timed("empty-check")(u.isEmpty)))
           timed("merge-write") {
-            write(mergeRows(ex, u, key, checkUniqueKeys = true))
+            write(mergeRows(ex, u, key))
           }
     } finally { u.unpersist(); () }
   }
 
   private def mergeRows(existing: DataFrame, updates: DataFrame,
-      key: String, checkUniqueKeys: Boolean): DataFrame = {
-    val checked =
-      if (!checkUniqueKeys) updates
-      else {
-        val perKey = count(lit(1)).over(Window.partitionBy(col(key)))
-        updates
-          .withColumn("__merge_dup_chk", assert_true(perKey <= 1,
-            lit(s"duplicate merge key '$key' in updates batch " +
-              "(MERGE requires one source row per target key)")))
-          .filter(col("__merge_dup_chk").isNull)
-          .drop("__merge_dup_chk")
-      }
+      key: String): DataFrame = {
+    val perKey = count(lit(1)).over(Window.partitionBy(col(key)))
+    val checked = updates
+      .withColumn("__merge_dup_chk", assert_true(perKey <= 1,
+        lit(s"duplicate merge key '$key' in updates batch " +
+          "(MERGE requires one source row per target key)")))
+      .filter(col("__merge_dup_chk").isNull)
+      .drop("__merge_dup_chk")
     // Null-safe (<=>) anti-join: a NULL-key update must REPLACE the
     // stored NULL-key row. Plain equality never matches NULL, so a
     // malformed-envelope row with a null key would append once per

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.functions.{col, lit, struct, when}
 import org.apache.spark.sql.types.StructType
 
@@ -67,10 +68,38 @@ final class ModelStore(val root: String) {
   }
 
   /** Time travel: read a specific retained version — the current one
-    * or, until the next commit drops it, the previous one. */
+    * or, until the next commit drops it, the previous one. No Spark
+    * job runs: the schema comes from [[readSchema]], and only a
+    * version it cannot derive pays `spark.read.parquet`'s inference
+    * job (with that read's result and errors). */
   def readVersion(spark: SparkSession, layer: String, name: String,
-      v: Int): DataFrame =
-    spark.read.parquet(versionDir(layer, name, v))
+      v: Int): DataFrame = {
+    val dir = versionDir(layer, name, v)
+    readSchema(spark, new Path(dir)) match {
+      case Some(s) => spark.read.schema(s).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
+
+  /** The schema `spark.read.parquet` infers for `dir`, derived as its
+    * inference derives it but on the driver: partition columns and
+    * their types from Spark's own partition discovery over `dir`, data
+    * columns from the Spark row schema in the footer of the first file
+    * in path order — the one file Spark's inference reads when
+    * `mergeSchema` is off (the store writes no summary files, and its
+    * files never hold a partition column). None when that footer holds
+    * no Spark row schema or cannot be read. The listing is Spark's, so
+    * like `spark.read` it runs a listing job past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * directories on one level. */
+  private def readSchema(spark: SparkSession, dir: Path)
+      : Option[StructType] = {
+    val index = new InMemoryFileIndex(spark, Seq(dir), Map.empty, None)
+    index.allFiles().map(_.getPath).minByOption(_.toString)
+      .flatMap(f => scala.util.Try(ParquetStats.sparkSchema(
+        spark.sparkContext.hadoopConfiguration, f)).toOption.flatten)
+      .map(d => StructType(d.fields ++ index.partitionSchema.fields))
+  }
 
   def write(df: DataFrame, layer: String, name: String,
       partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil,
@@ -278,7 +307,7 @@ final class ModelStore(val root: String) {
     *
     * The write is the only Spark job: emptiness comes from its output
     * listing, the layout from the version's listing, the columns from
-    * one footer ([[ParquetStats.sparkSchema]]). */
+    * one footer ([[readSchema]]). */
   def appendBatch(rows: DataFrame, layer: String, name: String,
       batchCol: String, batchId: Long,
       meta: Map[String, String] = Map.empty): Unit = {
@@ -312,19 +341,13 @@ final class ModelStore(val root: String) {
   }
 
   /** [[appendBatch]]'s compatibility test, from listings and one
-    * footer. */
+    * footer ([[readSchema]], the schema a read of the version gets). */
   private def appendable(spark: SparkSession, layer: String,
       name: String, cur: Int, batchCol: String, batch: DataFrame)
       : Boolean =
     hasPartitionLayout(spark, layer, name, Seq(batchCol)) && {
-      val base = new Path(versionDir(layer, name, cur))
-      val fs = fsFor(spark, base)
       def cols(s: StructType) = StructType(s.filter(_.name != batchCol))
-      fs.listStatus(base).iterator.filter(_.isDirectory)
-        .flatMap(d => fs.listStatus(d.getPath))
-        .find(_.getPath.getName.endsWith(".parquet"))
-        .flatMap(f => ParquetStats.sparkSchema(
-          spark.sparkContext.hadoopConfiguration, f.getPath))
+      readSchema(spark, new Path(versionDir(layer, name, cur)))
         .exists(have => ModelStore.compatibleColumns(cols(have),
           cols(batch.schema)))
     }

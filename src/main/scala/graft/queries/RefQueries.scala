@@ -426,8 +426,7 @@ object RefQueries {
   }
 
   // ------------------------------------------------- event-time windows
-  // Tumbling 1-hour event-time aggregation (streaming-upgrade path of
-  // §2.9); batch form is date_trunc-hour groupBy.
+  // Tumbling 1-hour event-time aggregation: a date_trunc-hour groupBy.
   val q16EventWindows: Q = Q(
     "q16_event_windows",
     s"""SELECT CAST(date_trunc('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP)

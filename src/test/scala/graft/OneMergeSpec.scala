@@ -9,13 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * `MergeWriter.merge`; every table upsert goes through
   * `MergeWriter.upsert`. Also keeps out the retired private schema
   * gate and the AnnIndex sink's replay stamp.
-  * The third case keeps the deleted streaming surface and its rules out. */
+  * The third case keeps the deleted streaming surface and its rules out.
+  * The fourth keeps store reads on ModelStore's job-free path: a
+  * `read.parquet(` infers the schema with a Spark job. */
 class OneMergeSpec extends AnyFunSuite {
 
   private val frameMerge = """MergeWriter\.merge\(""".r
   private val retired = """sameColumns|ann_last_batch""".r
   private val streaming = ("""graft\.streaming|foreachBatch|deleteWhen|""" +
     """keepBatches|serve_last_batch|stream_batch_id""").r
+  private val inferringRead = """read\.parquet\(""".r
 
   private def sources(dir: File): Seq[File] =
     Option(dir.listFiles).toSeq.flatten.flatMap { f =>
@@ -55,5 +58,16 @@ class OneMergeSpec extends AnyFunSuite {
   test("src/main has no streaming package, sink or stream-only rule") {
     val hits = offenders(main, streaming)
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main infers a parquet schema only for the sources, the " +
+      "delta-log checkpoint and ModelStore's fallback") {
+    val hits = offenders(main.filterNot(
+      _.getPath.endsWith("io/Tables.scala")), inferringRead)
+    val allowed = Seq("io/DeltaLogExport.scala", "io/ModelStore.scala")
+    val stray = hits.filterNot(h => allowed.exists(a => h.contains(s"$a:")))
+    assert(stray.isEmpty, stray.mkString("\n"))
+    allowed.foreach(a =>
+      assert(hits.count(_.contains(s"$a:")) == 1, hits.mkString("\n")))
   }
 }

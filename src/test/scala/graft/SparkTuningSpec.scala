@@ -28,4 +28,23 @@ class SparkTuningSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.parquet.outputTimestampType") ===
       "TIMESTAMP_MICROS")
   }
+
+  test("the generated-code cache holds 1000 classes") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+  }
+
+  test("the generated-code cache keeps a class across 120 others") {
+    // a static conf set too late is ignored without a word, so pin the
+    // behaviour: long literals are inlined, so each `id + i` plan
+    // compiles its own classes; the first plan's must survive the other
+    // 119 and run again without a compile
+    def run(i: Int): Unit =
+      spark.range(3).selectExpr(s"id + $i AS x").collect(): Unit
+    (1 to 120).foreach(run)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    run(1)
+    assert(compiles.getCount === before)
+  }
 }

@@ -44,10 +44,6 @@ class MergeWriterSpec extends AnyFunSuite {
       MergeWriter.merge(existing, updates, "k").collect()
     }
     assert(ex.getMessage.contains("duplicate merge key"))
-    // opt-out for callers that pre-dedup: no failure, both rows land
-    val unchecked = MergeWriter.merge(existing, updates, "k",
-      checkUniqueKeys = false)
-    assert(unchecked.count() == 3)
   }
 
   test("NULL merge key: the update REPLACES the stored NULL-key row " +

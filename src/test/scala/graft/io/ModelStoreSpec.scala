@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{JobCount, TestSpark}
 
 /** Versioned store semantics: pointer swap, time travel, vacuum. */
 class ModelStoreSpec extends AnyFunSuite {
@@ -457,28 +457,14 @@ class ModelStoreSpec extends AnyFunSuite {
   test("appendBatch decides without a Spark job: an append over a " +
       "three-batch table runs the same jobs as the first append") {
     val store = appendStore("jobs")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    def jobsOf(body: => Unit): Int = {
-      org.apache.spark.sql.GraftListenerBridge.flush(spark)
-      jobs.set(0)
-      body
-      org.apache.spark.sql.GraftListenerBridge.flush(spark)
-      jobs.get
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val first = jobsOf(store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L))
-      store.appendBatch(kv(2 -> "b"), "s", "t", "b", 1L)
-      store.appendBatch(kv(3 -> "c"), "s", "t", "b", 2L)
-      val later = jobsOf(store.appendBatch(kv(4 -> "d"), "s", "t", "b", 3L))
-      assert(first > 0 && later == first)
-      assert(rowsByBatch(store, "t").map(_._3) == Set(0L, 1L, 2L, 3L))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val first = JobCount(spark)(
+      store.appendBatch(kv(1 -> "a"), "s", "t", "b", 0L))
+    store.appendBatch(kv(2 -> "b"), "s", "t", "b", 1L)
+    store.appendBatch(kv(3 -> "c"), "s", "t", "b", 2L)
+    val later = JobCount(spark)(
+      store.appendBatch(kv(4 -> "d"), "s", "t", "b", 3L))
+    assert(first > 0 && later == first)
+    assert(rowsByBatch(store, "t").map(_._3) == Set(0L, 1L, 2L, 3L))
   }
 
   test("appendBatch migrates an unpartitioned table: one full rewrite " +
@@ -523,6 +509,69 @@ class ModelStoreSpec extends AnyFunSuite {
       "s", "t", "b", 3L)
     assert(partitionFiles(store, "t", 4, "b=2").forall(nlink(_) == 1))
     assert(store.read(spark, "s", "t").get.count() == 4)
+  }
+
+  // ---- reads: the schema comes from the driver, not an inference job
+
+  test("store.read runs no Spark job, partitioned or not") {
+    val store = appendStore("readjobs")
+    val df = Seq((1, "a", 2024), (2, "b", 2025)).toDF("k", "v", "y")
+    store.write(df, "s", "flat")
+    store.write(df, "s", "parted", partitionBy = Seq("y"))
+    for (t <- Seq("flat", "parted")) {
+      assert(JobCount(spark)(store.read(spark, "s", t).get) == 0, t)
+      assert(store.read(spark, "s", t).get.count() == 2, t)
+    }
+  }
+
+  test("store.read's schema and rows are spark.read.parquet's") {
+    val store = appendStore("readschema")
+    def same(name: String): Unit = {
+      val dir = store.versionDir("s", name,
+        store.currentVersion(spark, "s", name))
+      val ours = store.read(spark, "s", name).get
+      val spark0 = spark.read.parquet(dir)
+      assert(ours.schema == spark0.schema, name)
+      assert(ours.collect().toSet == spark0.collect().toSet, name)
+    }
+    // a long batch column reads back as int (partition inference)
+    store.appendBatch(kv(1 -> "a"), "s", "batch", "b", 3L)
+    same("batch")
+    assert(store.read(spark, "s", "batch").get.schema("b").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    // NULL and empty-string partition values (both the default dir)
+    store.write(Seq((1, "x"), (2, null), (3, "")).toDF("k", "p"), "s",
+      "nulls", partitionBy = Seq("p"))
+    same("nulls")
+    // two levels, as orders_cleaned's order_year/order_month
+    store.write(Seq((1, 2024, 1), (2, 2024, 12), (3, 2025, 3))
+        .toDF("k", "order_year", "order_month"), "s", "twolevel",
+      partitionBy = Seq("order_year", "order_month"))
+    same("twolevel")
+    // a date partition
+    store.write(Seq((1, java.sql.Date.valueOf("2024-03-01")),
+        (2, java.sql.Date.valueOf("2024-03-02"))).toDF("k", "d"),
+      "s", "dated", partitionBy = Seq("d"))
+    same("dated")
+    // unpartitioned
+    store.write(kv(1 -> "a", 2 -> "b"), "s", "flat")
+    same("flat")
+    // a drifted appendBatch: the full rewrite's version
+    store.appendBatch(kv(1 -> "a"), "s", "drift", "b", 0L)
+    store.appendBatch(Seq((2, "b", 2.5)).toDF("k", "v", "w"),
+      "s", "drift", "b", 1L)
+    same("drift")
+    // zero rows: unpartitioned keeps a schema-only file; partitioned
+    // leaves no data file, and the read fails as spark.read's does
+    store.write(kv(1 -> "a").filter("k < 0"), "s", "empty")
+    same("empty")
+    store.write(kv(1 -> "a").filter("k < 0"), "s", "emptyparts",
+      partitionBy = Seq("v"))
+    val ours = intercept[org.apache.spark.sql.AnalysisException](
+      store.read(spark, "s", "emptyparts"))
+    val theirs = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(store.versionDir("s", "emptyparts", 1)))
+    assert(ours.getCondition == theirs.getCondition)
   }
 }
 

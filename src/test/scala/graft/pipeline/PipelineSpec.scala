@@ -419,6 +419,8 @@ class PipelineSpec extends AnyFunSuite {
       "customers_cdc" -> CdcFixtures.customersBatch1(),
       "orders_cdc" -> CdcFixtures.ordersBatch1()))
     p.run(spark, RunMode.Bootstrap)
+    // driver-side metadata only: store reads take no schema job
+    assert(graft.JobCount(spark)(p.catalog(spark)) == 0)
     val cat = p.catalog(spark).collect()
       .map(r => r.getAs[String]("model") -> r).toMap
     assert(cat.keySet ==
