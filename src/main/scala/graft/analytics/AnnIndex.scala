@@ -1313,30 +1313,6 @@ object AnnIndex {
     }
   }
 
-  /** Iterate NN-descent until no neighborhood improves (the paper's
-    * stopping rule, stated as edge-set fixpoint: a round that returns
-    * the same (vec_id, nbr_id, rnk) graph as its input cannot change
-    * any later round — candidates are a pure function of the edge
-    * set) or `maxRounds`. Returns (graph, roundsRun). The
-    * per-round change probe is one anti-join over two k·n-row edge
-    * sets — cheap relative to the round itself. */
-  private[analytics] def knnDescentConverged(s: SparkSession,
-      d: String, maxRounds: Int): (DataFrame, Int) = {
-    val step = descentStep(s, d, pinned)
-    var g: DataFrame = knnGraphStored(s, d, pinned)
-      .select("vec_id", "nbr_id", "rnk").localCheckpoint()
-    var r = 0
-    var converged = false
-    while (r < maxRounds && !converged) {
-      val next = step(g).localCheckpoint()
-      val unchanged = next.select("vec_id", "nbr_id", "rnk")
-        .exceptAll(g.select("vec_id", "nbr_id", "rnk")).isEmpty
-      if (unchanged) converged = true else r += 1
-      g = next
-    }
-    (g, r)
-  }
-
   // ------------------------------------- graph-diversity sampling
   /** Per-cell selection denominator of the diversity sample: keep
     * ceil(|cell| / DiversityDen) vectors per cell — integer

@@ -199,10 +199,9 @@ object Bpe {
 
   /** Session-memoized training keyed by (corpus dir, k): q78/q79/q81
     * all train the SAME tokenizer for their corpus — production trains
-    * once and every downstream job loads the artifact
-    * ([[saveMerges]]/[[loadMerges]]); within one engine session this
-    * memo is that artifact. Training is deterministic, so the memo can
-    * never change a result. */
+    * once and every downstream job loads the artifact; within one
+    * engine session this memo is that artifact. Training is
+    * deterministic, so the memo can never change a result. */
   private val mergeMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Int), Seq[Merge]]()
   private[graft] def trainedMerges(s: SparkSession, d: String, k: Int)
@@ -294,34 +293,6 @@ object Bpe {
     import s.implicits._
     trainedMerges(s, d, k = QueryMerges).toDF()
       .orderBy("rank")
-  }
-
-  // --------------------------------------- persisted tokenizer artifact
-  /** Persist trained merges as a store-versioned TOKENIZER ARTIFACT —
-    * the same build-once-reuse-everywhere pattern as the ANN and
-    * near-dup indexes: production trains the tokenizer once per
-    * corpus snapshot and every downstream job (token counting,
-    * packing, budget planning) loads the SAME ranked merges instead
-    * of retraining. Versioning makes tokenizer upgrades atomic, and a
-    * run that resolved the merge table it packs with still reads it
-    * across ONE upgrade (the store keeps the previous version until
-    * the next commit, [[graft.io.ModelStore.RetainVersions]]). */
-  def saveMerges(spark: SparkSession, store: graft.io.ModelStore,
-      layer: String, name: String, merges: Seq[Merge]): Unit = {
-    import spark.implicits._
-    store.write(merges.toDF(), layer, name,
-      description = "BPE tokenizer merges (rank-ordered)",
-      meta = Map("k" -> merges.size.toString))
-  }
-
-  /** Load a persisted merge table in rank order (bounded collect:
-    * k merges is a design constant, like the IVF centroids). */
-  def loadMerges(spark: SparkSession, store: graft.io.ModelStore,
-      layer: String, name: String): Seq[Merge] = {
-    import spark.implicits._
-    store.read(spark, layer, name)
-      .getOrElse(sys.error(s"tokenizer '$layer.$name' not trained"))
-      .as[Merge].collect().toSeq.sortBy(_.rank)
   }
 
   /** Subword count of a sentinel-wrapped segmentation after applying

@@ -59,8 +59,8 @@ object IncrementalDedup {
     * per-fold merge runs DRIVER-side over the collected shard map
     * (those bytes are on the driver regardless — the probe collects
     * them), so driver memory bounds total sketch size; the regime
-    * that outgrows it escalates to shard-id co-partitioning with
-    * [[BloomJoin.mergeShardedSketches]] as the distributed merge. */
+    * that outgrows it escalates to shard-id co-partitioning with a
+    * distributed per-shard OR as the merge. */
   val SketchShards = 8
 
   /** Sentinel for `estKeys`/`numBits`: size the sketch from the
@@ -227,8 +227,7 @@ object IncrementalDedup {
           // stage. The regime where this collect is too big is exactly
           // the one where the probe would be too — both escalate by
           // co-partitioning on the shard id ([[BloomJoin]] notes), with
-          // [[BloomJoin.mergeShardedSketches]] as the distributed
-          // merge for that path.
+          // a distributed per-shard OR as the merge for that path.
           val (e, b) = (storedEst.get, storedBits.get)
           val batchRows = BloomJoin.buildShardedSketch(winners,
             col(keyCol), numShards, e, b).collect()

@@ -14,11 +14,10 @@ import graft.queries.Q
   * Dataset; the Scala analog of Python's `mapInPandas` batch UDF),
   * aggregation over extracted features. Image decode is REAL for the
   * formats the JDK ships codecs for (PNG/JPEG/BMP/GIF via
-  * `javax.imageio`, see [[decodeImage]]), as is audio decode
-  * (WAV/AU/AIFF PCM via `javax.sound.sampled`, see [[decodeAudio]]);
-  * payloads that don't decode fall back to the deterministic
-  * byte-level stub [[fakeDecode]] (which also stands in for codecs
-  * this container lacks, e.g. video).
+  * `javax.imageio`, see [[decodeImage]]); payloads that don't decode
+  * fall back to the deterministic byte-level stub [[fakeDecode]]
+  * (which also stands in for codecs this container lacks, e.g.
+  * video).
   */
 object Multimodal {
 
@@ -103,83 +102,11 @@ object Multimodal {
     }
   }
 
-  /** Partition-parallel image decode over the typed Dataset — the real
-    * decoder in the same seat [[decodeFeatures]] uses for the stub. */
+  /** Partition-parallel image decode over the typed Dataset. */
   def decodeImageFeatures(spark: SparkSession, media: DataFrame)
       : DataFrame = {
     import spark.implicits._
     media.as[MediaItem].mapPartitions(_.map(decodeImage)).toDF()
-  }
-
-  /** Real decoded-audio features (or the stub fallback for payloads
-    * that aren't decodable audio). */
-  final case class AudioFeatures(doc_id: Long, source: String,
-      n_bytes: Long, decoded: Boolean, sample_rate: Int, channels: Int,
-      n_frames: Long, rms: Double, checksum: Long)
-
-  /** REAL audio decode for the formats the JDK ships codecs for
-    * (WAV/AU/AIFF PCM via `javax.sound.sampled` — zero external jars):
-    * format metadata plus RMS amplitude over the 16-bit samples, the
-    * canonical loudness feature. Non-audio payloads fall back to
-    * [[fakeDecode]]'s byte-level features, keeping the operator total
-    * over arbitrary binary columns. Per-item work is capped by a
-    * sample budget, the audio analog of the image path's stride
-    * subsampling. */
-  def decodeAudio(item: MediaItem): AudioFeatures = {
-    val decodedOpt =
-      try {
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(item.payload))
-        try {
-          val fmt = ais.getFormat
-          // Frame size may be AudioSystem.NOT_SPECIFIED (-1): guard it,
-          // else `frames += read / -1` drives the budget counter
-          // negative and the 64k-frame cap never fires.
-          if (fmt.getSampleSizeInBits != 16 || fmt.getFrameSize <= 0) None
-          else {
-            val bytesPerFrame = fmt.getFrameSize
-            val big = fmt.isBigEndian
-            // sample budget: read ≤ 64k frames no matter the duration
-            val maxFrames = 65536L
-            val buf = new Array[Byte](8192)
-            var sumSq = 0.0
-            var nSamples = 0L
-            var frames = 0L
-            var read = ais.read(buf)
-            while (read > 0 && frames < maxFrames) {
-              var i = 0
-              while (i + 1 < read) {
-                val s =
-                  if (big) ((buf(i) << 8) | (buf(i + 1) & 0xff)).toShort
-                  else ((buf(i + 1) << 8) | (buf(i) & 0xff)).toShort
-                sumSq += s.toDouble * s.toDouble
-                nSamples += 1
-                i += 2
-              }
-              frames += read / bytesPerFrame
-              read = ais.read(buf)
-            }
-            val rms =
-              if (nSamples == 0) 0.0
-              else math.sqrt(sumSq / nSamples) / 32768.0
-            Some(AudioFeatures(item.doc_id, item.source, item.n_bytes,
-              decoded = true, fmt.getSampleRate.toInt, fmt.getChannels,
-              math.max(ais.getFrameLength, 0L), rms, 0L))
-          }
-        } finally ais.close()
-      } catch { case _: Exception => None }
-    decodedOpt.getOrElse {
-      val f = fakeDecode(item)
-      AudioFeatures(item.doc_id, item.source, item.n_bytes,
-        decoded = false, 0, 0, 0L, f.feat0, f.checksum)
-    }
-  }
-
-  /** Partition-parallel audio decode over the typed Dataset. */
-  def decodeAudioFeatures(spark: SparkSession, media: DataFrame)
-      : DataFrame = {
-    import spark.implicits._
-    media.as[MediaItem].mapPartitions(_.map(decodeAudio)).toDF()
   }
 
   /** documents.text → opaque binary payload + metadata (the ingest step
@@ -189,184 +116,6 @@ object Multimodal {
       encode(col("text"), "UTF-8").as("payload"),
       lit("text/plain").as("mime"),
       octet_length(encode(col("text"), "UTF-8")).cast("long").as("n_bytes"))
-  }
-
-  /** Partition-parallel decode: typed Dataset, no driver involvement,
-    * codegen-friendly boundaries (only the decode itself is opaque). */
-  def decodeFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
-    import spark.implicits._
-    media.as[MediaItem].mapPartitions(_.map(fakeDecode)).toDF()
-  }
-
-  /** Frame sample per item (stub frame-sampler output). */
-  final case class MediaFrames(doc_id: Long, source: String,
-      n_frames: Int, frame_checksums: Seq[Long])
-
-  /** STUB resize — deterministic byte subsampling to ≤ maxBytes,
-    * standing in for an image resize / audio downsample. Keeps the
-    * payload-in→payload-out shape a real codec transform has. */
-  def resize(item: MediaItem, maxBytes: Int): MediaItem = {
-    if (item.payload == null || item.payload.length <= maxBytes) item
-    else {
-      val stride = math.ceil(item.payload.length.toDouble / maxBytes).toInt
-      val out = item.payload.indices.collect {
-        case i if i % stride == 0 => item.payload(i)
-      }.toArray
-      item.copy(payload = out, n_bytes = out.length.toLong)
-    }
-  }
-
-  /** REAL image resize via the JDK: decode (`javax.imageio`), scale
-    * the longest side down to `maxDim` with bilinear interpolation
-    * (`java.awt.Graphics2D`), re-encode as PNG — the actual
-    * payload-in→payload-out thumbnailing transform a training
-    * pipeline runs before feature extraction. Non-image payloads and
-    * images already within bounds pass through untouched (the latter
-    * byte-identically, so re-running is idempotent on processed
-    * corpora). Partition-parallel like every codec step here. */
-  def resizeImage(item: MediaItem, maxDim: Int): MediaItem = {
-    val resized =
-      try {
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(item.payload))
-        if (img == null || math.max(img.getWidth, img.getHeight) <= maxDim)
-          None // not an image, or already small enough
-        else {
-          val scale = maxDim.toDouble / math.max(img.getWidth, img.getHeight)
-          val w = math.max(1, math.round(img.getWidth * scale).toInt)
-          val h = math.max(1, math.round(img.getHeight * scale).toInt)
-          val out = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = out.createGraphics()
-          try {
-            g.setRenderingHint(
-              java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(img, 0, 0, w, h, null)
-          } finally g.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos)
-          val bytes = bos.toByteArray
-          Some(item.copy(payload = bytes, mime = "image/png",
-            n_bytes = bytes.length.toLong))
-        }
-      } catch { case _: Exception => None }
-    resized.getOrElse(item)
-  }
-
-  /** Partition-parallel real-image resize over the typed Dataset. */
-  def resizeImages(spark: SparkSession, media: DataFrame, maxDim: Int)
-      : DataFrame = {
-    import spark.implicits._
-    media.as[MediaItem].mapPartitions(_.map(resizeImage(_, maxDim))).toDF()
-  }
-
-  /** Real decoded frame-sample features (or the stub fallback). */
-  final case class FrameFeatures(doc_id: Long, source: String,
-      decoded: Boolean, n_frames: Int, n_sampled: Int,
-      frame_lumas: Seq[Double])
-
-  /** REAL frame sampling for multi-frame formats the JDK can read
-    * (animated GIF via `javax.imageio`'s sequence reader): evenly
-    * sample up to `maxFrames` frames and extract each frame's mean
-    * luma — the video-pipeline shape (decode → frame-sample →
-    * per-frame features) with a real codec. Single-frame images
-    * decode as a 1-frame "video"; non-image payloads fall back to
-    * [[sampleFrames]]'s byte-chunk checksums (as luma-less features),
-    * keeping the operator total. */
-  def decodeFrames(item: MediaItem, maxFrames: Int): FrameFeatures = {
-    val result =
-      try {
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(item.payload))
-        try {
-          val readers = javax.imageio.ImageIO.getImageReaders(iis)
-          if (!readers.hasNext) None
-          else {
-            val r = readers.next()
-            // dispose in finally: the n<=0 branch and any exception in
-            // setInput/getNumImages/read would otherwise leak the
-            // reader's internal buffers until GC (ImageIO documents
-            // dispose() as required) — millions of malformed payloads
-            // would inflate executor heap pressure
-            try {
-              r.setInput(iis)
-              val n = r.getNumImages(true)
-              if (n <= 0) None
-              else {
-                val step = math.max(1, n / maxFrames)
-                val idxs = (0 until n by step).take(maxFrames)
-                val lumas = idxs.map { i =>
-                  val im = r.read(i)
-                  val stepX = math.max(1, im.getWidth / 16)
-                  val stepY = math.max(1, im.getHeight / 16)
-                  var sum = 0L
-                  var cnt = 0L
-                  var y = 0
-                  while (y < im.getHeight) {
-                    var x = 0
-                    while (x < im.getWidth) {
-                      val rgb = im.getRGB(x, y)
-                      sum += ((rgb >> 16 & 0xff) + (rgb >> 8 & 0xff) +
-                        (rgb & 0xff)) / 3
-                      cnt += 1
-                      x += stepX
-                    }
-                    y += stepY
-                  }
-                  sum.toDouble / cnt
-                }
-                Some(FrameFeatures(item.doc_id, item.source,
-                  decoded = true, n, idxs.size, lumas))
-              }
-            } finally r.dispose()
-          }
-        } finally iis.close()
-      } catch { case _: Exception => None }
-    result.getOrElse {
-      val f = sampleFrames(item, maxFrames)
-      FrameFeatures(item.doc_id, item.source, decoded = false,
-        f.n_frames, f.n_frames, f.frame_checksums.map(_.toDouble))
-    }
-  }
-
-  /** Partition-parallel frame decode over the typed Dataset. */
-  def decodeFrameFeatures(spark: SparkSession, media: DataFrame,
-      maxFrames: Int): DataFrame = {
-    import spark.implicits._
-    media.as[MediaItem].mapPartitions(_.map(decodeFrames(_, maxFrames)))
-      .toDF()
-  }
-
-  /** STUB frame sampling — split the payload into `n` equal chunks and
-    * checksum each, standing in for video frame extraction (fixed
-    * frame count per item, one feature row per item). */
-  def sampleFrames(item: MediaItem, n: Int): MediaFrames = {
-    val payload =
-      if (item.payload == null) Array.emptyByteArray else item.payload
-    val len = payload.length
-    val checksums = (0 until n).map { f =>
-      val from = f * len / n
-      val until = (f + 1) * len / n
-      var sum = 0L
-      var i = from
-      while (i < until) {
-        sum = (sum * 31 + (payload(i) & 0xff)) & 0xffffffffL
-        i += 1
-      }
-      sum
-    }
-    MediaFrames(item.doc_id, item.source, n, checksums)
-  }
-
-  /** Partition-parallel resize → frame-sample chain over the typed
-    * Dataset (the multi-step decode pipeline shape). */
-  def resizeAndSampleFrames(spark: SparkSession, media: DataFrame,
-      maxBytes: Int, nFrames: Int): DataFrame = {
-    import spark.implicits._
-    media.as[MediaItem]
-      .mapPartitions(_.map(m => sampleFrames(resize(m, maxBytes), nFrames)))
-      .toDF()
   }
 
   // Rows-only driver check, CODEC COLUMNS ONLY (ImageIO decode output

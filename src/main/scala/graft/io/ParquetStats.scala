@@ -91,12 +91,7 @@ object ParquetStats {
   /** Per-group footer-stats MAX over labeled file groups (one parallel
     * sweep across ALL files, so 100 one-file partition dirs still read
     * at machine width instead of serially group-by-group). Groups with
-    * no files report [[NoValue]]. */
-  def groupedMax(conf: Configuration, groups: Seq[(String, Seq[Path])],
-      column: String): Map[String, DirStat] =
-    groupedMaxAll(conf, groups, Seq(column))(column)
-
-  /** Multi-column [[groupedMax]]: every footer opens ONCE and yields
+    * no files report [[NoValue]]. Every footer opens ONCE and yields
     * all requested columns' stats (a 3-column declaration must not
     * triple the metadata IO). Returns column → group → outcome. */
   def groupedMaxAll(conf: Configuration, groups: Seq[(String, Seq[Path])],

@@ -39,8 +39,7 @@ object BloomJoin {
   val NumBits = 8L * 1024 * 1024
 
   /** OR-union two serialized Bloom filters (identical parameters).
-    * Byte-level building block shared by the distributed per-shard
-    * reduce ([[mergeShardedSketches]]) and the driver-side merge of an
+    * Byte-level building block of the driver-side merge of an
     * already-collected shard map ([[graft.analytics.IncrementalDedup]]). */
   def orSketchBytes(x: Array[Byte], y: Array[Byte]): Array[Byte] = {
     val f = org.apache.spark.util.sketch.BloomFilter
@@ -137,24 +136,6 @@ object BloomJoin {
         .toAggregateExpression())
     df.groupBy(shardOf(key, numShards).as("shard"))
       .agg(agg.as("sketch"))
-  }
-
-  /** Merge two sharded sketch tables (Bloom OR per shard) — a
-    * DISTRIBUTED per-shard reduce: each shard's union happens on an
-    * executor, so merge memory scales with executors, never with the
-    * total sketch. Parameters must match across the inputs (the
-    * [[buildShardedSketch]] sizing discipline). */
-  def mergeShardedSketches(a: DataFrame, b: DataFrame): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.unionByName(b)
-      .select(col("shard").cast("int"), col("sketch"))
-      .as[(Int, Array[Byte])]
-      .groupByKey(_._1)
-      .mapGroups { (shard, rows) =>
-        (shard, rows.map(_._2).reduce(orSketchBytes))
-      }
-      .toDF("shard", "sketch")
   }
 
   /** Scan-local membership probe against a collected shard map: a

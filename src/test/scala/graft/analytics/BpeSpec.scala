@@ -110,33 +110,6 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
-  test("persisted tokenizer artifact round-trips: loaded merges " +
-      "tokenize exactly like the in-memory ones") {
-    import org.apache.spark.sql.functions._
-    val docs = Seq("low lower lowest low low",
-      "newer newest new low wider", "abab abab ab abab").toDF("text")
-    val merges = Bpe.trainMerges(spark, Bpe.wordTable(docs, "text"), 6)
-    val store = new graft.io.ModelStore(
-      java.nio.file.Files.createTempDirectory("graft-bpe").toString)
-    Bpe.saveMerges(spark, store, "tok", "merges", merges)
-    val loaded = Bpe.loadMerges(spark, store, "tok", "merges")
-    assert(loaded == merges) // full structural round-trip, rank order
-    // and the APPLY path under the loaded artifact is bit-identical
-    val words = docs.select(explode(split(col("text"), "\\s+")).as("w"))
-      .filter(length(col("w")) > 0)
-      .withColumn("seg", Bpe.charSeg(col("w")))
-    val nIn = words.select(
-      sum(Bpe.subwordCount(col("seg"), merges))).head().getLong(0)
-    val nLoaded = words.select(
-      sum(Bpe.subwordCount(col("seg"), loaded))).head().getLong(0)
-    assert(nIn == nLoaded)
-    // versioning: retraining with more merges commits a NEW version
-    val merges2 = Bpe.trainMerges(spark, Bpe.wordTable(docs, "text"), 8)
-    Bpe.saveMerges(spark, store, "tok", "merges", merges2)
-    assert(Bpe.loadMerges(spark, store, "tok", "merges") == merges2)
-    assert(store.currentVersion(spark, "tok", "merges") == 2)
-  }
-
   test("apply side: subword counts match the reference segmentation") {
     import org.apache.spark.sql.functions._
     val docs = Seq("low lower lowest low low",

@@ -161,20 +161,6 @@ class KnnScaleSpec extends AnyFunSuite {
     base.unpersist(); posts.unpersist(): Unit
   }
 
-  test("knnDescentConverged stops at an edge-set fixpoint: one more " +
-      "round changes nothing") {
-    // the sf0.001 corpus reaches its fixpoint in 11 productive rounds
-    // (measured); a cap hit would mean non-convergence, so assert
-    // strictly under it
-    val (g, rounds) = AnnIndex.knnDescentConverged(spark, Dir, 20)
-    assert(rounds < 20, s"descent did not converge in $rounds rounds")
-    val (_, posts) = AnnIndex.tierArtifacts(spark, Dir, AnnIndex.pinned)
-    val again = AnnIndex.descentRound(g.select("vec_id", "nbr_id"),
-      AnnIndex.ringSeed(posts), posts.select("vec_id", "qv", "n2"))
-    assert(again.select("vec_id", "nbr_id", "rnk")
-      .exceptAll(g.select("vec_id", "nbr_id", "rnk")).isEmpty)
-  }
-
   test("graph diversity: per-cell quota is ceil(|cell|/4), picks are " +
       "the least-redundant members, and the selection runs unchanged " +
       "over the derived-K tier") {

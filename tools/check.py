@@ -25,6 +25,7 @@ import json
 import math
 import os
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -118,7 +119,18 @@ def lint(name: str, path: str) -> list:
 
 
 def main(sf_dir: str, out_dir: str) -> int:
-    con = duckdb.connect()
+    with tempfile.TemporaryDirectory(prefix="check-duckdb-") as spill:
+        return check(duckdb.connect(), spill, sf_dir, out_dir)
+
+
+def check(con, spill: str, sf_dir: str, out_dir: str) -> int:
+    # DuckDB spills past its memory limit; by default into `.tmp` under
+    # the working directory, here into a directory removed afterwards.
+    # Row order is never compared (to_strings sorts both sides), so
+    # insertion order need not be kept, which lets DuckDB use less
+    # memory on some plans.
+    con.execute(f"SET temp_directory = '{spill}'")
+    con.execute("SET preserve_insertion_order = false")
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
         # Spark-written tables (e.g. tools/ScaleUp output) are
