@@ -19,11 +19,13 @@ import graft.queries.Q
   * shuffles while the batch is under the broadcast bounds):
   *  1. batch signatures — one shuffle on the doc id (the codegen'd
   *     explode→min-agg form of q25);
-  *  2. history probe — the stored signature table is scanned ONCE per
-  *     ingest, its band hashes derived scan-locally (8 xxhash64 per
-  *     row, codegen'd — cheaper than persisting and re-shuffling a
-  *     band table), and hash-joined against the BROADCAST batch band
-  *     rows. History-side work is a scan, never an exchange (the
+  *  2. history probe — the stored signature table is scanned TWICE
+  *     per ingest: once for its band hashes, derived scan-locally (8
+  *     xxhash64 per row, codegen'd — cheaper than persisting and
+  *     re-shuffling a band table) and hash-joined against the
+  *     BROADCAST batch band rows, and once for the candidates'
+  *     signatures in the verify join (step 4). History-side work is a
+  *     scan, never an exchange (the
   *     [[IncrementalDedup]] "history never shuffles" discipline) only
   *     below the [[graft.ops.BroadcastGate]] byte budget: the batch's
   *     band rows ([[IdRowBytes]] wide), and its worst-case candidate
@@ -51,7 +53,7 @@ import graft.queries.Q
   */
 object NearDupIndex {
 
-  import NearDup.{NumBands, NumHashes, RowsPerBand}
+  import NearDup.{NumBands, NumHashes}
 
   /** Signature-agreement fraction that declares a verified near-dup
     * (q25's estimator over the same 32-hash signatures). */
@@ -68,9 +70,8 @@ object NearDupIndex {
     * different families NEVER collide in bands or agree positionally,
     * so probing pre-upgrade history would silently classify every
     * re-crawl as novel — permanent corpus duplication with no error.
-    * The stamp makes that failure LOUD instead (the same
-    * stored-meta-pins-the-layout discipline as
-    * [[IncrementalDedup]]'s `ps_keys`/`ps_bits` sketch parameters). */
+    * The stamp makes that failure LOUD instead: the stored meta pins
+    * the layout, and a probe of any other family fails. */
   val SigFamily: String =
     s"minhash2-k${NearDup.NumHashes}-b${NearDup.NumBands}"
 
@@ -138,7 +139,8 @@ object NearDupIndex {
     val gateCand = BroadcastGate(nSigs * MaxCandidatesPerDoc,
       SigRowBytes, broadcastCap)
 
-    // ---- history probe: ONE column-pruned scan of the stored sigs,
+    // ---- history probe: two column-pruned scans of the stored sigs
+    // (histBands for the band probe, oldSigs for the verify join),
     // band hashes derived scan-locally, batch side broadcast under the
     // gate (the history is hash-probed in place, never exchanged) and
     // shuffle-hash above it

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
@@ -38,24 +38,10 @@ object BloomJoin {
   val EstKeys = 1000000L
   val NumBits = 8L * 1024 * 1024
 
-  /** OR-union two serialized Bloom filters (identical parameters).
-    * Byte-level building block of the driver-side merge of an
-    * already-collected shard map ([[graft.analytics.IncrementalDedup]]). */
-  def orSketchBytes(x: Array[Byte], y: Array[Byte]): Array[Byte] = {
-    val f = org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(x))
-    f.mergeInPlace(org.apache.spark.util.sketch.BloomFilter
-      .readFrom(new java.io.ByteArrayInputStream(y)))
-    val out = new java.io.ByteArrayOutputStream()
-    f.writeTo(out)
-    out.toByteArray
-  }
-
   /** Clamp requested sketch parameters to Catalyst's
     * `BloomFilterAggregate` limits (the runtime-filter confs). A clamp
     * only LOWERS capacity — the false-positive rate rises and costs
-    * verify work, never correctness; capacity beyond the per-aggregate
-    * limit is what sharding is for (raise `numShards`). */
+    * verify work, never correctness. */
   private def clamp(df: DataFrame, estKeys: Long, numBits: Long)
       : (Long, Long) = {
     val conf = df.sparkSession.conf
@@ -70,8 +56,7 @@ object BloomJoin {
 
   /** Build the Bloom sketch of `keys` (a LongType column) and return
     * it as a binary scalar. One job; the result is sketch-sized, not
-    * data-sized. Sketch parameters must match across sketches that
-    * will be merged ([[graft.analytics.IncrementalDedup]]). */
+    * data-sized. */
   def buildSketch(df: DataFrame, key: Column,
       estKeys0: Long = EstKeys, numBits0: Long = NumBits): Array[Byte] = {
     val (estKeys, numBits) = clamp(df, estKeys0, numBits0)
@@ -87,70 +72,6 @@ object BloomJoin {
     GraftColumnBridge.column(BloomFilterMightContain(
       Literal(sketch),
       GraftColumnBridge.expression(xxhash64(key))))
-
-  // ------------------------------------------- sharded sketches
-  // A monolithic sketch stops scaling when the key population outgrows
-  // what one byte array (and the driver that merges it) can hold: at
-  // 10¹¹ keys a useful filter is tens of GB. Sharding by key-hash range
-  // fixes both ends: the sketch LIVES as `numShards` table rows (each
-  // shard covering keys with pmod(xxhash64(key), numShards) == shard),
-  // and MERGING is a per-shard distributed aggregation — no single
-  // byte array ever materializes on the driver. Capacity grows by
-  // raising numShards at constant per-shard size. The scan-local probe
-  // below covers the regime where the collected shard map is broadcast-
-  // sized; beyond that, co-partition the probe side on the shard id
-  // and join shard rows to their key slices.
-
-  /** Shard id of a key under the SAME hash the sketch stores. */
-  def shardOf(key: Column, numShards: Int): Column =
-    pmod(xxhash64(key), lit(numShards.toLong)).cast("int")
-
-  /** The EFFECTIVE per-shard parameters [[buildShardedSketch]] will
-    * use for a given request: requested totals divided across shards,
-    * then clamped to the session's runtime-bloomFilter conf limits.
-    * Public so sketch MAINTAINERS ([[graft.analytics.IncrementalDedup]])
-    * can persist and compare the post-clamp values — two sketches
-    * built from the same REQUEST under different conf limits are not
-    * mergeable, and comparing requested values would miss that. */
-  def perShardParams(df: DataFrame, numShards: Int,
-      estKeys0: Long, numBits0: Long): (Long, Long) = {
-    val (clampedKeys, clampedBits) = clamp(df,
-      math.max(1L, estKeys0 / numShards),
-      math.max(8L, numBits0 / numShards))
-    (math.max(1L, clampedKeys), math.max(8L, clampedBits))
-  }
-
-  /** Build the sharded sketch table `(shard INT, sketch BINARY)` of
-    * `keys`: one map-side-combined aggregation, `numShards` output
-    * rows. Per-shard capacity is sized to `estKeys / numShards` at
-    * `numBits / numShards` bits, so total size and false-positive rate
-    * match the monolithic filter over the same population. */
-  def buildShardedSketch(df: DataFrame, key: Column, numShards: Int,
-      estKeys0: Long = EstKeys, numBits0: Long = NumBits): DataFrame = {
-    val (perShardKeys, perShardBits) =
-      perShardParams(df, numShards, estKeys0, numBits0)
-    val agg = GraftColumnBridge.column(
-      new BloomFilterAggregate(
-        GraftColumnBridge.expression(xxhash64(key)),
-        Literal(perShardKeys), Literal(perShardBits))
-        .toAggregateExpression())
-    df.groupBy(shardOf(key, numShards).as("shard"))
-      .agg(agg.as("sketch"))
-  }
-
-  /** Scan-local membership probe against a collected shard map: a
-    * codegen'd `CASE shard OF` over per-shard [[mightContain]]
-    * literals — same plan-size footprint as the monolithic literal
-    * (total bits are conserved), still zero extra jobs at probe time.
-    * A key whose shard has no sketch row (nothing ever stored there)
-    * is definitely absent. */
-  def mightContainSharded(shards: Map[Int, Array[Byte]], key: Column,
-      numShards: Int): Column = {
-    val shard = shardOf(key, numShards)
-    shards.foldLeft(lit(false)) { case (acc, (id, bytes)) =>
-      when(shard === lit(id), mightContain(bytes, key)).otherwise(acc)
-    }
-  }
 
   /** Bloom-prefiltered exact semi-join of `fact` against `dim` keys. */
   def semiJoin(fact: DataFrame, factKey: Column,

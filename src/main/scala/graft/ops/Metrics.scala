@@ -2,9 +2,8 @@ package graft.ops
 
 import java.sql.Date
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Gold-layer customer rollup — the engine's flagship query, re-expressing
   * the reference's `models/gold/customers/dim_customer.sql` semantics

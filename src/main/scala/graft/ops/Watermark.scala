@@ -2,7 +2,7 @@ package graft.ops
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** High-watermark incremental gate (reference

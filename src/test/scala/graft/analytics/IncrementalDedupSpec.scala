@@ -3,10 +3,11 @@ package graft.analytics
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Actions, TestSpark}
 import graft.io.ModelStore
 
 class IncrementalDedupSpec extends AnyFunSuite {
@@ -79,73 +80,45 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(keptIds(st.read(spark, "d", "fps").get) === Set(1L, 11L))
   }
 
-  test("correctness survives a pathological all-colliding sketch") {
-    // 8-bit sketch: every fingerprint collides, so EVERY winner routes
-    // through exact verification — novel docs must still be kept (a
-    // Bloom false positive may only cost work, never a drop)
+  test("duplicate-heavy folds equal one-shot first-copy dedup") {
+    // most winners of the later folds are already in history: each is
+    // verified against the history column and dropped, and the folded
+    // corpus is exactly one-shot dedup over the batches in order
     val st = store()
-    IncrementalDedup.applyBatch(spark, st, "d", "fps",
-      docs(1L -> "one"), 0L, estKeys = 1L, numBits = 8L): Unit
-    val out = IncrementalDedup.applyBatch(spark, st, "d", "fps",
-      docs(2L -> "two", 3L -> "one"), 1L, estKeys = 1L, numBits = 8L)
-    assert(keptIds(out) === Set(2L))
+    val batches = Seq(
+      Seq(1L -> "a", 2L -> "b", 3L -> "c"),
+      Seq(10L -> "a", 11L -> "b", 12L -> "d"), // one novel key
+      Seq(20L -> "c", 21L -> "d")) // all duplicates
+    val kept = batches.zipWithIndex.map { case (b, i) =>
+      keptIds(IncrementalDedup.applyBatch(spark, st, "d", "fps",
+        docs(b: _*), i.toLong))
+    }
+    assert(kept === Seq(Set(1L, 2L, 3L), Set(12L), Set.empty[Long]))
+    val oneShot = docs(batches.flatten: _*)
+      .groupBy("content_fp").agg(min("doc_id").as("doc_id"))
+    assert(keptIds(st.read(spark, "d", "fps").get) === keptIds(oneShot))
   }
 
-  test("half-explicit sizing derives the missing twin at 8 bits/key") {
-    // estKeys alone used to leave numBits at the AutoSize sentinel
-    // (0), which the explicit path took literally — a degenerate
-    // 8-bit-per-shard filter. The missing parameter must derive.
+  test("a sketch table left by an older layout is neither read nor " +
+      "written") {
+    // older folds kept a `<name>_sketch` Bloom side-table next to the
+    // history; a fold over such a store verifies against the history
+    // column alone and leaves that table as it found it
     val st = store()
-    IncrementalDedup.applyBatch(spark, st, "d", "fps",
-      docs(1L -> "one"), 0L, estKeys = 4096L): Unit
-    def meta(k: String) =
-      st.meta(spark, "d", "fps_sketch", k).flatMap(_.toLongOption)
-    assert(meta("est_keys") === Some(4096L))
-    assert(meta("num_bits") === Some(8L * 4096L))
-    // and the other direction
-    val st2 = store()
-    IncrementalDedup.applyBatch(spark, st2, "d", "fps",
-      docs(1L -> "one"), 0L, numBits = 65536L): Unit
-    def meta2(k: String) =
-      st2.meta(spark, "d", "fps_sketch", k).flatMap(_.toLongOption)
-    assert(meta2("est_keys") === Some(65536L / 8))
-    assert(meta2("num_bits") === Some(65536L))
-  }
-
-  test("n_keys meta tracks the true distinct population across " +
-      "duplicate-heavy folds") {
-    // the capacity estimate counts KEPT keys, not batch winners: a
-    // mostly-duplicate workload must not inflate n_keys (which would
-    // trigger geometric rebuilds over the full history long before the
-    // real population warrants one)
-    val st = store()
-    IncrementalDedup.applyBatch(spark, st, "d", "fps",
-      docs(1L -> "a", 2L -> "b", 3L -> "c"), 0L): Unit
-    // 3 winners, but only one novel key
-    IncrementalDedup.applyBatch(spark, st, "d", "fps",
-      docs(10L -> "a", 11L -> "b", 12L -> "d"), 1L): Unit
-    // all duplicates: population unchanged
-    IncrementalDedup.applyBatch(spark, st, "d", "fps",
-      docs(20L -> "c", 21L -> "d"), 2L): Unit
-    val nKeys = st.meta(spark, "d", "fps_sketch", "n_keys")
-      .flatMap(_.toLongOption)
-    assert(nKeys === Some(4L)) // {a, b, c, d}
-  }
-
-  test("a deleted sketch degrades to verify-everything, not data loss") {
-    val rootDir = Files.createTempDirectory("graft-incdedup-nosketch")
-    val st = new ModelStore(rootDir.toString)
     IncrementalDedup.applyBatch(spark, st, "d", "fps",
       docs(1L -> "one", 2L -> "two"), 0L): Unit
-    // simulate sketch loss: the fps table survives, the sketch is gone
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(s"$rootDir/d/fps_sketch"))
+    // a stale sketch that claims nothing is stored: trusting it would
+    // re-admit "one"
+    st.write(Seq((0, Array.emptyByteArray)).toDF("shard", "sketch"),
+      "d", "fps_sketch", meta = Map("num_shards" -> "8"))
+    def sketchState = (st.currentVersion(spark, "d", "fps_sketch"),
+      st.read(spark, "d", "fps_sketch").get.count())
+    val before = sketchState
     val out = IncrementalDedup.applyBatch(spark, st, "d", "fps",
       docs(3L -> "one", 4L -> "three"), 1L)
     assert(keptIds(out) === Set(4L))
+    assert(keptIds(st.read(spark, "d", "fps").get) === Set(1L, 2L, 4L))
+    assert(sketchState === before)
   }
 
   test("history append links prior batch partitions (O(batch) writes)") {
@@ -174,31 +147,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // partition the replay's empty write carried over)
     assert(keptIds(replay) === first)
     assert(keptIds(st.read(spark, "d", "fps").get) === Set(1L, 2L))
-  }
-
-  test("sharded sketch: ≥4-shard folding equals the single-shard fold; " +
-      "the sketch lives as one row per populated shard") {
-    val all = Seq(
-      1L -> "alpha", 2L -> "beta", 3L -> "ALPHA", 4L -> "gamma",
-      5L -> "beta ", 6L -> "delta", 7L -> "gamma", 8L -> "epsilon",
-      9L -> "delta", 10L -> "zeta", 11L -> "alpha", 12L -> "eta")
-    def fold(shards: Int): (Set[Long], Long) = {
-      val st = store()
-      all.grouped(4).zipWithIndex.foreach { case (b, i) =>
-        IncrementalDedup.applyBatch(spark, st, "d", "fps",
-          docs(b: _*), i.toLong, numShards = shards): Unit
-      }
-      (keptIds(st.read(spark, "d", "fps").get),
-        st.read(spark, "d", "fps_sketch").get.count())
-    }
-    val (kept4, sketchRows4) = fold(4)
-    val (kept1, sketchRows1) = fold(1)
-    assert(kept4 === kept1) // shard layout can never change decisions
-    assert(kept4 === Set(1L, 2L, 4L, 6L, 8L, 10L, 12L))
-    // the sharded sketch is TABLE rows, not one driver byte array:
-    // >1 row at 4 shards (12 distinct fps hash across several shards)
-    assert(sketchRows4 > 1L && sketchRows4 <= 4L)
-    assert(sketchRows1 === 1L)
   }
 
   test("forced-large batch (broadcast gate 0) takes the shuffle arm " +
@@ -253,24 +201,60 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("an all-duplicate batch and a replayed delivery commit no " +
-      "sketch version") {
+      "version and create no sketch table") {
     val st = store()
-    def sketchVersion = st.currentVersion(spark, "d", "fps_sketch")
+    def version = st.currentVersion(spark, "d", "fps")
     IncrementalDedup.applyBatch(spark, st, "d", "fps",
       docs(1L -> "one", 2L -> "two"), 0L): Unit
-    assert(sketchVersion == 1)
+    assert(version == 1)
     IncrementalDedup.applyBatch(spark, st, "d", "fps",
       docs(3L -> "one", 4L -> "TWO"), 1L): Unit
-    assert(sketchVersion == 1)
+    assert(version == 1)
     val replay = IncrementalDedup.applyBatch(spark, st, "d", "fps",
       docs(1L -> "one", 2L -> "two"), 0L)
     assert(keptIds(replay) === Set(1L, 2L))
-    assert(sketchVersion == 1)
-    // a batch that keeps a row still merges into the sketch
+    assert(version == 1)
+    // a batch that keeps a row commits the next version
     IncrementalDedup.applyBatch(spark, st, "d", "fps",
       docs(5L -> "five", 6L -> "one"), 2L): Unit
-    assert(sketchVersion == 2)
-    assert(st.meta(spark, "d", "fps_sketch", "n_keys").contains("3"))
+    assert(version == 2)
+    assert(st.read(spark, "d", "fps_sketch").isEmpty)
+  }
+
+  test("a fold over existing history runs exactly 3 Spark actions") {
+    // the winners count, the append write (the history verify runs
+    // inside it) and the read-back checkpoint
+    val st = store()
+    IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(1L -> "one", 2L -> "two"), 0L): Unit
+    val ran = Actions(spark)(IncrementalDedup.applyBatch(spark, st, "d",
+      "fps", docs(3L -> "one", 4L -> "three"), 1L))
+    assert(ran.map(_._1) === Seq("count", "command", "localCheckpoint"))
+  }
+
+  test("a first fold (no history yet) runs exactly 3 Spark actions") {
+    val st = store()
+    val ran = Actions(spark)(IncrementalDedup.applyBatch(spark, st, "d",
+      "fps", docs(1L -> "one", 2L -> "two", 3L -> "ONE"), 0L))
+    assert(ran.map(_._1) === Seq("count", "command", "localCheckpoint"))
+    assert(keptIds(st.read(spark, "d", "fps").get) === Set(1L, 2L))
+  }
+
+  test("the verify reads only the history's fingerprint column and " +
+      "broadcasts the batch keys") {
+    val st = store()
+    IncrementalDedup.applyBatch(spark, st, "d", "fps",
+      docs(1L -> "one", 2L -> "two"), 0L): Unit
+    val ran = Actions(spark)(IncrementalDedup.applyBatch(spark, st, "d",
+      "fps", docs(3L -> "one", 4L -> "three"), 1L))
+    val plans = ran.map(_._2.explainString(FormattedMode))
+    val verify = plans.filter(_.contains("LeftSemi"))
+    assert(verify.size == 1, "the verify runs in one action")
+    // AQE prints its initial and final plans: each scan shows twice
+    val readSchemas = "ReadSchema: (\\S+)".r
+      .findAllMatchIn(verify.head).map(_.group(1)).toSeq.distinct
+    assert(readSchemas === Seq("struct<content_fp:string>"))
+    assert(verify.head.contains("BroadcastHashJoin LeftSemi"))
   }
 
   private def filesUnder(dir: String): Set[String] = {

@@ -144,7 +144,6 @@ class QuantilesSpec extends AnyFunSuite {
   }
 
   test("MAD outliers match brute-force medians and resist an outlier") {
-    import spark.implicits._
     val rows = Quantiles.qMadOutliers.build(spark, Dir).collect()
     assert(rows.nonEmpty)
     // brute-force recompute of one group

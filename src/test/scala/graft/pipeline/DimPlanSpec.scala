@@ -2,7 +2,6 @@ package graft.pipeline
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
