@@ -48,7 +48,7 @@ object AnnIndex {
     * full corpus, and persist both tables as a new index version.
     * `extraMeta` merges into the postings commit (e.g. a caller's
     * corpus content fingerprint for staleness checks). */
-  def build(spark: SparkSession, store: ModelStore, name: String,
+  def build(store: ModelStore, name: String,
       vectors: DataFrame, k: Int = VectorOps.NumCentroids,
       iters: Int = VectorOps.KmeansIters,
       extraMeta: Map[String, String] = Map.empty): Unit = {
@@ -505,7 +505,7 @@ object AnnIndex {
     val store = dirStore(d)
     graft.io.ArtifactStore.ensure(s, store, Layer,
       postingsTable(t.name), t.sig) {
-      build(s, store, t.name, Tables.load(s, d, "embeddings"), k = t.k,
+      build(store, t.name, Tables.load(s, d, "embeddings"), k = t.k,
         extraMeta = graft.io.ArtifactStore.stamp(t.sig))
     }
     store
@@ -1685,7 +1685,7 @@ object AnnIndex {
         col("embedding")))
     val sig = incKnnSig(fp)
     graft.io.ArtifactStore.ensure(s, store, Layer, knnTable("inc"), sig) {
-      build(s, store, "inc", hist,
+      build(store, "inc", hist,
         extraMeta = graft.io.ArtifactStore.stamp(sig))
       buildKnn(s, store, "inc",
         extraMeta = graft.io.ArtifactStore.stamp(sig))

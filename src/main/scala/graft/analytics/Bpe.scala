@@ -83,7 +83,7 @@ object Bpe {
     * Semantics are unchanged (BpeSpec pins them against the textbook
     * implementation): argmax by (count desc, then lexicographic pair),
     * greedy-left merge application per word. */
-  def trainMerges(spark: SparkSession, words: DataFrame, k: Int,
+  def trainMerges(words: DataFrame, k: Int,
       maxVocabBytes: Long = MaxVocabBytes): Seq[Merge] = {
     // Extreme-vocab guard: the driver-resident loop is safe only
     // because the word table is vocabulary-bound (~10⁷ rows for a
@@ -207,7 +207,7 @@ object Bpe {
   private[graft] def trainedMerges(s: SparkSession, d: String, k: Int)
       : Seq[Merge] =
     mergeMemo.computeIfAbsent((d, k), _ =>
-      trainMerges(s, wordTable(Tables.load(s, d, "documents"), "text"), k))
+      trainMerges(wordTable(Tables.load(s, d, "documents"), "text"), k))
 
   /** The k used by the q78/q79/q81 carriers (one tokenizer per
     * corpus, trained once, memoized). Small by design: each merge

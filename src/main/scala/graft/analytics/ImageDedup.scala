@@ -185,7 +185,7 @@ object ImageDedup {
   // planted real images. The band/verify/cluster half runs verbatim
   // in q128, where it is oracle-certified.
   val qImgDhash: Q = Q.noOracle("q127_img_dhash") { (s, d) =>
-    val media = Multimodal.asMedia(s, Tables.load(s, d, "documents"))
+    val media = Multimodal.asMedia(Tables.load(s, d, "documents"))
     val hashed = dHashes(s, media)
     hammingClusters(hashed
         .select(col("doc_id").as("id"), col("dhash").as("hash")))

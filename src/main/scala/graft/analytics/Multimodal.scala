@@ -111,7 +111,7 @@ object Multimodal {
 
   /** documents.text → opaque binary payload + metadata (the ingest step
     * a real pipeline does for images/audio blobs). */
-  def asMedia(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def asMedia(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"), col("source"),
       encode(col("text"), "UTF-8").as("payload"),
       lit("text/plain").as("mime"),
@@ -126,7 +126,7 @@ object Multimodal {
   // determinism + schema + per-item features + a real PNG decode.
   val qMultimodalPipeline: Q = Q.noOracle("q31_multimodal_features") {
     (s, d) =>
-      val media = asMedia(s, Tables.load(s, d, "documents"))
+      val media = asMedia(Tables.load(s, d, "documents"))
       decodeImageFeatures(s, media)
         .groupBy("source")
         .agg(sum(when(col("decoded"), 1L).otherwise(0L)).as("n_decoded"),
@@ -157,7 +157,7 @@ object Multimodal {
     // divergence (the round-6 q101/q103 class); mime in the ORDER BY
     // keeps the order total the day asMedia grows a real mime sniff
     (s, d) =>
-      asMedia(s, Tables.load(s, d, "documents"))
+      asMedia(Tables.load(s, d, "documents"))
         .groupBy("source", "mime")
         .agg(count(lit(1)).as("n_items"),
           count(col("payload")).as("n_payloads"),

@@ -361,13 +361,16 @@ object NearDup {
   }
 
   /** `(id, band_idx, band_hash)` — slim banded bucket rows (3 longs a
-    * row; the signature payload never rides the candidate shuffle). */
-  def minhashBandRows(sigs: DataFrame, id: String): DataFrame =
-    sigs.select(col(id),
+    * row; the signature payload never rides the candidate shuffle).
+    * `carry` columns ride along between the id and the band columns,
+    * for a caller that consumes each band row in the same stage. */
+  def minhashBandRows(sigs: DataFrame, id: String,
+      carry: Column*): DataFrame =
+    sigs.select((col(id) +: carry) :+
       posexplode(array((0 until NumBands).map { b =>
         xxhash64((Seq(lit(b): Column) ++ (1 to RowsPerBand).map(r =>
           element_at(col("sig"), b * RowsPerBand + r))): _*)
-      }: _*)).as(Seq("band_idx", "band_hash")))
+      }: _*)).as(Seq("band_idx", "band_hash")): _*)
 
   /** Fraction of agreeing signature positions — the Jaccard
     * estimator verified pairs are thresholded on. */

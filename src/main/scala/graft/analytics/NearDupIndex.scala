@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,33 +12,36 @@ import graft.queries.Q
   * ALL prior crawls — the fuzzy companion of [[IncrementalDedup]]
   * (exact fingerprints). Each arriving crawl is checked against every
   * crawl ever ingested without recomputing historical signatures:
-  * the index stores each surviving document's minhash signature and
-  * its banded bucket rows in versioned [[ModelStore]] tables.
+  * the index stores each surviving document's minhash signature in a
+  * versioned [[ModelStore]] table (band rows are derived at probe
+  * time).
   *
   * Scale shape (history never recomputes signatures, and never
   * shuffles while the batch is under the broadcast bounds):
   *  1. batch signatures — one shuffle on the doc id (the codegen'd
   *     explode→min-agg form of q25);
-  *  2. history probe — the stored signature table is scanned TWICE
-  *     per ingest: once for its band hashes, derived scan-locally (8
-  *     xxhash64 per row, codegen'd — cheaper than persisting and
-  *     re-shuffling a band table) and hash-joined against the
-  *     BROADCAST batch band rows, and once for the candidates'
-  *     signatures in the verify join (step 4). History-side work is a
-  *     scan, never an exchange (the
-  *     [[IncrementalDedup]] "history never shuffles" discipline) only
-  *     below the [[graft.ops.BroadcastGate]] byte budget: the batch's
-  *     band rows ([[IdRowBytes]] wide), and its worst-case candidate
-  *     frame (`MaxCandidatesPerDoc` rows per doc, [[SigRowBytes]]
+  *  2. history probe — ONE column-pruned scan of the stored signature
+  *     table per ingest: each stored row derives its band hashes
+  *     scan-locally (8 xxhash64 per row, codegen'd — cheaper than
+  *     persisting and re-shuffling a band table), hash-probes the
+  *     BROADCAST batch band rows, looks up the matched doc's BROADCAST
+  *     signature and verifies the pair (step 4) in that same stage;
+  *     only `(doc_id, old_id, ok)` rows leave it. History-side work is
+  *     a scan, never an exchange (the [[IncrementalDedup]] "history
+  *     never shuffles" discipline) only below the
+  *     [[graft.ops.BroadcastGate]] byte budget: the batch's band rows
+  *     ([[IdRowBytes]] wide) and its signatures ([[SigRowBytes]]
   *     wide). Above it the probe is a shuffle-hash join and AQE
-  *     chooses the verify join; either way the history side may then
-  *     be exchanged;
-  *  3. per-doc candidate cap before verification (window row_number,
-  *     smallest historical id first — deterministic) bounds the
-  *     verify fan-out on degenerate buckets, the [[NearDup.MaxBucket]]
-  *     discipline with the same documented recall caveat;
+  *     chooses the signature lookup; the history side may then be
+  *     exchanged;
+  *  3. per-doc candidate cap (window row_number over the distinct
+  *     candidate pairs, smallest historical id first — deterministic)
+  *     bounds which verified pairs count on degenerate buckets, the
+  *     [[NearDup.MaxBucket]] discipline with the same documented
+  *     recall caveat;
   *  4. verification is signature agreement (`est ≥ threshold`) — a
-  *     zip_with over two already-joined arrays, no text re-read;
+  *     zip_with over the stored signature the scan carries and the
+  *     batch signature it looked up, no text re-read;
   *  5. within-batch pairs cluster via [[NearDup.clusterPairs]]
   *     (batch-sized fixpoint); a cluster with ANY member matching
   *     history anchors the WHOLE cluster to that historical doc
@@ -77,8 +80,9 @@ object NearDupIndex {
 
   /** [[graft.ops.BroadcastGate]] row widths: id-only sides carry at
     * most three id/hash fields (the band row: band_idx, band_hash,
-    * doc_id); sig-carrying sides at most two ids and the
-    * NumHashes-long sig (the candidate row: doc_id, old_id, sig). */
+    * doc_id); sig-carrying sides (a batch signature row: doc_id and
+    * sig, or its renames) are budgeted at the same three fields plus
+    * the NumHashes-long sig. */
   val IdRowBytes: Long = 8L * 3 + 8
   val SigRowBytes: Long = 8L * 3 + 8 + (8 + 8L * NumHashes)
 
@@ -93,8 +97,9 @@ object NearDupIndex {
   /** Fold one crawl batch into the index at `layer`.`name`; returns
     * the batch's dedup decisions `(doc_id, is_dup, dup_of, batch_id)`
     * — `dup_of` is the kept historical/batch doc the duplicate
-    * collapses onto (NULL for survivors). Survivors' signatures and
-    * band rows append to the index. */
+    * collapses onto (NULL for survivors). Survivors' signatures
+    * append to the index. `id` keys `docs`: one decision, and one
+    * signature, per doc. */
   def ingest(spark: SparkSession, store: ModelStore, layer: String,
       name: String, docs: DataFrame, id: String, text: Column,
       batchId: Long, threshold: Double = SigAgreeThreshold,
@@ -123,27 +128,21 @@ object NearDupIndex {
     // materializes the sigs cache; the signed-doc count bounds every
     // gated side below
     val nSigs = timed(spark, "sig-count")(sigs.count())
-    // Four gates, by what bounds the gated side:
+    // Three gates, by what bounds the gated side:
     //  - gateProbe: the band rows, exactly NumBands per doc (uniform);
     //  - gate / gateSig: signed-doc-bounded sides (≤ one row per
     //    signed doc), id-only (labels, anchors, histMin, dups) or
-    //    carrying a sig (sigs and the sa/sb lookups);
-    //  - gateCand: the candidate-verify frame, which can inflate to
-    //    MaxCandidatesPerDoc sig-carrying rows per doc — a
-    //    degenerate-bucket batch must not pin a multi-GB broadcast
-    //    that AQE's sized plan would have avoided.
+    //    carrying a sig (the history probe's and the sa/sb lookups).
     val gateProbe = BroadcastGate(nSigs * NumBands, IdRowBytes,
       broadcastCap, uniform = true)
     val gate = BroadcastGate(nSigs, IdRowBytes, broadcastCap)
     val gateSig = BroadcastGate(nSigs, SigRowBytes, broadcastCap)
-    val gateCand = BroadcastGate(nSigs * MaxCandidatesPerDoc,
-      SigRowBytes, broadcastCap)
 
-    // ---- history probe: two column-pruned scans of the stored sigs
-    // (histBands for the band probe, oldSigs for the verify join),
-    // band hashes derived scan-locally, batch side broadcast under the
-    // gate (the history is hash-probed in place, never exchanged) and
-    // shuffle-hash above it
+    // ---- history probe: one column-pruned scan of the stored sigs.
+    // Each stored row derives its band hashes, probes the batch band
+    // rows and verifies against the matched doc's sig in the scan's
+    // own stage (batch sides broadcast under the gates, so the history
+    // is hash-probed in place, never exchanged; shuffle-hash above)
     val histPairs = store.read(spark, layer, s"${name}_sigs").map { hist =>
       val fam = store.meta(spark, layer, s"${name}_sigs", "sig_family")
       require(fam.contains(SigFamily),
@@ -151,26 +150,25 @@ object NearDupIndex {
           s"family ${fam.getOrElse("<unstamped>")} but this engine " +
           s"computes $SigFamily; cross-family probing would silently " +
           "miss every historical match — rebuild the index from text")
-      val histBands = bandRows(
-        hist.select(col("doc_id").as("old_id"), col("sig")), "old_id")
-      val cands = histBands.join(
-          gateProbe(bands.select(col("band_idx"), col("band_hash"),
+      bandRows(hist.select(col("doc_id").as("old_id"), col("sig")),
+          "old_id", col("sig").as("old_sig"))
+        .join(gateProbe(bands.select(col("band_idx"), col("band_hash"),
             col("doc_id"))),
           Seq("band_idx", "band_hash"))
-        .select(col("doc_id"), col("old_id")).distinct()
-        // deterministic per-doc cap: smallest historical ids first
+        .join(gateSig(sigs), Seq("doc_id"))
+        .select(col("doc_id"), col("old_id"),
+          (sigAgree(col("sig"), col("old_sig")) >= threshold).as("ok"))
+        // the one exchange: doc_id clusters the pair aggregate, the
+        // per-doc window and the minimum alike
+        .repartition(col("doc_id"))
+        // one row per candidate pair: it agrees if any stored row of
+        // old_id does (an id stored twice, e.g. by a replayed batch)
+        .groupBy("doc_id", "old_id").agg(max("ok").as("ok"))
+        // deterministic per-doc cap over the candidates, verified or
+        // not: smallest historical ids first
         .withColumn("__rn", row_number().over(
           Window.partitionBy("doc_id").orderBy("old_id")))
-        .filter(col("__rn") <= MaxCandidatesPerDoc).drop("__rn")
-      val oldSigs = hist
-        .select(col("doc_id").as("old_id"), col("sig").as("old_sig"))
-      // the verify join: batch sigs broadcast under the sig gate; the
-      // candidate frame (≤ MaxCandidatesPerDoc × batch rows, each
-      // carrying a sig array) broadcasts only under its OWN bound —
-      // above it the history-side join is left to AQE's sized plan
-      gateCand(cands.join(gateSig(sigs), Seq("doc_id")))
-        .join(oldSigs, Seq("old_id"))
-        .filter(sigAgree(col("sig"), col("old_sig")) >= threshold)
+        .filter(col("__rn") <= MaxCandidatesPerDoc).filter(col("ok"))
         .groupBy("doc_id").agg(min("old_id").as("h_dup"))
     }
 
@@ -198,13 +196,11 @@ object NearDupIndex {
     // a cluster is anchored to history if ANY member matched it; the
     // anchor (smallest historical dup) then claims the whole cluster.
     // histMin is persisted: it is candidate-sized (≤ batch rows) and
-    // appears TWICE in decided's plan (anchors + the direct join) —
-    // without the persist the "history scanned once" discipline would
-    // hang on AQE exchange reuse instead of being structural.
+    // appears TWICE in decided's plan (anchors + the direct join), so
+    // the decision checkpoint computes it, and scans the history, once.
     val histMin = histPairs.getOrElse(
       sigs.select(col("doc_id"), lit(null).cast("long").as("h_dup"))
         .limit(0)).persist()
-    timed(spark, "histmin-materialize")(histMin.count())
     val anchors = labels.join(gate(histMin), Seq("doc_id"), "left")
       .groupBy("keep_id").agg(min("h_dup").as("cluster_h"))
 
@@ -232,22 +228,29 @@ object NearDupIndex {
           .as("dup_of"))
       .withColumn("is_dup", col("dup_of").isNotNull)
       .withColumn("batch_id", lit(batchId))
-    val decidedCp = timed(spark, "decide-checkpoint")(decided0.localCheckpoint())
+    val dupCount = Observation()
+    val decidedCp = timed(spark, "decide-checkpoint")(decided0
+      .observe(dupCount, count_if(col("is_dup")).as("n_dup"))
+      .localCheckpoint())
     histMin.unpersist()
 
     // ---- survivors extend the index as the batch's partition
-    // (ModelStore.appendBatch). A batch with NO signed survivors (fully
-    // duplicate, or a replayed delivery) commits nothing there.
-    // Survivor sigs = signed docs minus dups: every dup is signed (an
-    // unsigned doc is in no pair and no history match), so the gated
-    // side is bounded by the signed-doc count. A null doc_id matches no
-    // decision, so it is dropped (the anti-join keeps it).
-    val dups = decidedCp.filter(col("is_dup")).select("doc_id")
-    val survivorSigs = sigs.filter(col("doc_id").isNotNull)
-      .join(gate(dups), Seq("doc_id"), "left_anti")
-    timed(spark, "sig-append-write") {
-      store.appendBatch(survivorSigs, layer, s"${name}_sigs",
-        "ingest_batch", batchId, meta = Map("sig_family" -> SigFamily))
+    // (ModelStore.appendBatch). Survivor sigs = signed docs minus dups:
+    // every dup is signed (an unsigned doc is in no pair and no history
+    // match), so the gated side is bounded by the signed-doc count, and
+    // a batch with as many dups as signed docs (fully duplicate, or a
+    // replayed delivery) has no signed survivor: it skips the write.
+    // A null doc_id matches no decision, so it is dropped (the anti-join
+    // keeps it); its sig row counts in nSigs, so such a batch writes.
+    // The observed count arrives on the listener bus; get waits for it.
+    if (dupCount.get("n_dup").asInstanceOf[Long] != nSigs) {
+      val dups = decidedCp.filter(col("is_dup")).select("doc_id")
+      val survivorSigs = sigs.filter(col("doc_id").isNotNull)
+        .join(gate(dups), Seq("doc_id"), "left_anti")
+      timed(spark, "sig-append-write") {
+        store.appendBatch(survivorSigs, layer, s"${name}_sigs",
+          "ingest_batch", batchId, meta = Map("sig_family" -> SigFamily))
+      }
     }
     decidedCp.select("doc_id", "is_dup", "dup_of", "batch_id")
   }

@@ -47,7 +47,7 @@ class RetentionPolicySpec extends AnyFunSuite {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("vec_id"), col("embedding"))
     val slot = pmod(col("vec_id"), lit(10L))
-    AnnIndex.build(spark, store, "e", emb.filter(slot >= 4L))
+    AnnIndex.build(store, "e", emb.filter(slot >= 4L))
     AnnIndex.buildPq(spark, store, "e")
     AnnIndex.buildKnn(spark, store, "e")
     (0L until 4L).foreach(b =>

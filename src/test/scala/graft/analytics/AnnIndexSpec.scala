@@ -19,7 +19,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-annidx").toString
     val store = new ModelStore(root)
     val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     val got = AnnIndex.search(spark, store, "e",
       emb.filter(col("vec_id") < VectorOps.NumQueries)
         .select(col("vec_id").as("q_id"), col("embedding")))
@@ -36,7 +36,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-annidx2").toString
     val store = new ModelStore(root)
     val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     val before = store.read(spark, AnnIndex.Layer, "e_postings").get
     val nBefore = before.count()
     // exact clone of vector 0 under a fresh id — its quantized form is
@@ -164,7 +164,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val tmp = Files.createTempDirectory("ann-pq-prod").toString
     val store = new ModelStore(tmp)
     val emb = Tables.load(spark, d, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     AnnIndex.buildPq(spark, store, "e",
       numSub = 16, subDim = 4, numCodes = 256, iters = 2)
     val q = emb.filter(col("vec_id") < 4)
@@ -213,7 +213,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("ann-pq-append")
     val store = new ModelStore(tmp.toString)
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     AnnIndex.buildPq(spark, store, "e")
     // append a near-copy of vector 3 under a fresh id
     val copy = emb.filter(col("vec_id") === 3L)
@@ -243,7 +243,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("ann-pq-appgeom")
     val store = new ModelStore(tmp.toString)
     val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     AnnIndex.buildPq(spark, store, "e",
       numSub = 16, subDim = 4, numCodes = 256, iters = 2)
     val copy = emb.filter(col("vec_id") === 3L)
@@ -274,7 +274,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-annidx3").toString
     val store = new ModelStore(root)
     val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     val one = emb.filter(col("vec_id") === 1L)
       .select(col("vec_id").as("q_id"), col("embedding"))
     val df = AnnIndex.search(spark, store, "e", one)
@@ -469,7 +469,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // fresh reference build over the identical slice
     val ref = new ModelStore(
       Files.createTempDirectory("graft-incref").toString)
-    AnnIndex.build(spark, ref, "inc", hist)
+    AnnIndex.build(ref, "inc", hist)
     AnnIndex.buildKnn(spark, ref, "inc")
     def key(st: ModelStore, t: String) = st
       .read(spark, AnnIndex.Layer, t).get
@@ -505,7 +505,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-annkmix").toString
     val store = new ModelStore(root)
     val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     AnnIndex.buildKnn(spark, store, "e")
     // simulate a constants drift: the stored graph claims a different
     // k (raw write; drop the local-FS .crc sidecar the bypass stales)
@@ -530,7 +530,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-anndup").toString
     val store = new ModelStore(root)
     val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     AnnIndex.buildKnn(spark, store, "e")
     val clone = emb.filter(col("vec_id") === 0L)
       .select(lit(900000L).as("vec_id"), col("embedding"))
@@ -555,7 +555,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-annknn").toString
     val store = new ModelStore(root)
     val emb = Tables.load(spark, Dir, "embeddings")
-    AnnIndex.build(spark, store, "e", emb)
+    AnnIndex.build(store, "e", emb)
     AnnIndex.buildKnn(spark, store, "e")
     // exact clone of vector 0 under a fresh id: its cell-mates'
     // neighborhoods must change too (the clone is a perfect neighbor)
@@ -618,7 +618,7 @@ class AnnIndexSpec extends AnyFunSuite {
     def freshStore(tag: String): ModelStore = {
       val s = new ModelStore(
         Files.createTempDirectory(s"graft-knnappend-$tag").toString)
-      AnnIndex.build(spark, s, "g", hist)
+      AnnIndex.build(s, "g", hist)
       AnnIndex.buildKnn(spark, s, "g")
       s
     }

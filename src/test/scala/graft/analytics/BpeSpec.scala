@@ -46,7 +46,7 @@ class BpeSpec extends AnyFunSuite {
     val docs = Seq("low lower lowest low low",
       "newer newest new low wider", "abab abab ab abab").toDF("text")
     val words = Bpe.wordTable(docs, "text")
-    val got = Bpe.trainMerges(spark, words, 6)
+    val got = Bpe.trainMerges(words, 6)
       .map(m => (m.left, m.right, m.pair_count))
 
     val wc = docs.as[String].collect()
@@ -62,12 +62,12 @@ class BpeSpec extends AnyFunSuite {
     // a synthetic over-budget limit: even this tiny vocab's estimate
     // (per-row overhead + seg chars) exceeds a 100-byte budget
     val e = intercept[IllegalArgumentException] {
-      Bpe.trainMerges(spark, words, 2, maxVocabBytes = 100L)
+      Bpe.trainMerges(words, 2, maxVocabBytes = 100L)
     }
     assert(e.getMessage.contains("vocabulary too large"))
     assert(e.getMessage.contains("100-byte budget"))
     // same vocab under the default budget trains fine
-    assert(Bpe.trainMerges(spark, words, 2).size == 2)
+    assert(Bpe.trainMerges(words, 2).size == 2)
   }
 
   test("merges on testdata are deterministic and well-formed") {
@@ -115,7 +115,7 @@ class BpeSpec extends AnyFunSuite {
     val docs = Seq("low lower lowest low low",
       "newer newest new low wider", "abab abab ab abab").toDF("text")
     val words = Bpe.wordTable(docs, "text")
-    val merges = Bpe.trainMerges(spark, words, 6)
+    val merges = Bpe.trainMerges(words, 6)
 
     // reference apply: greedy-left merge loop per word
     def refApply(w: String): Int = {

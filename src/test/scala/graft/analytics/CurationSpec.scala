@@ -176,7 +176,7 @@ class CurationSpec extends AnyFunSuite {
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     }
-    sub.groupBy(_._1).foreach { case (src, ps) =>
+    sub.groupBy(_._1).foreach { case (_, ps) =>
       val lastPack = ps.map(_._2).max
       ps.filter(_._2 < lastPack).foreach { case (s, p, n, t) =>
         assert(full((s, p)) == ((n, t)),

@@ -17,7 +17,7 @@ class MultimodalSpec extends AnyFunSuite {
     .toDF("doc_id", "text", "lang", "source", "n_chars")
 
   test("asMedia: binary payload + typed metadata schema") {
-    val media = Multimodal.asMedia(spark, docs)
+    val media = Multimodal.asMedia(docs)
     val schema = media.schema.map(f => f.name -> f.dataType.typeName).toMap
     assert(schema("payload") == "binary")
     assert(schema("n_bytes") == "long")
@@ -30,7 +30,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("media metadata aggregate (q110 relational half): per-source " +
       "counts and UTF-8 byte totals") {
-    val out = Multimodal.asMedia(spark, docs)
+    val out = Multimodal.asMedia(docs)
       .groupBy("source", "mime")
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n_items"),
@@ -80,7 +80,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("decodeFeatures: deterministic, schema stable, per-item correct") {
     // text payloads are not images: q31's decoder serves every item
     // through the fakeDecode fallback
-    val media = Multimodal.asMedia(spark, docs)
+    val media = Multimodal.asMedia(docs)
     val d1 = Multimodal.decodeImageFeatures(spark, media)
     val d2 = Multimodal.decodeImageFeatures(spark, media)
     assert(d1.schema == d2.schema)

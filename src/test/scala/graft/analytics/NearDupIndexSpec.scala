@@ -2,10 +2,14 @@ package graft.analytics
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{Actions, TestSpark}
 import graft.io.{ModelStore, Tables}
 
 class NearDupIndexSpec extends AnyFunSuite {
@@ -128,14 +132,62 @@ class NearDupIndexSpec extends AnyFunSuite {
       "doc_id", col("text"), 0L).count()
     val before = store.read(spark, "nd", "idx_sigs").get.count()
     val beforeV = store.currentVersion(spark, "nd", "idx_sigs")
-    val replay = NearDupIndex.ingest(spark, store, "nd", "idx", base,
-      "doc_id", col("text"), 1L)
+    lazy val replay = NearDupIndex.ingest(spark, store, "nd", "idx",
+      base, "doc_id", col("text"), 1L)
+    // its observed dup count equals the signed-doc count: no write runs
+    val ran = Actions(spark)(replay)
+    assert(ran.map(_._1) === Seq("count", "collect", "localCheckpoint"))
     // identical docs: signature agreement is 1.0 — all flagged
     assert(replay.filter(!col("is_dup")).count() == 0)
     assert(store.read(spark, "nd", "idx_sigs").get.count() == before)
     // a zero-survivor batch commits NOTHING: no version churn whose
     // vacuum could delete versions concurrent readers still hold
     assert(store.currentVersion(spark, "nd", "idx_sigs") == beforeV)
+  }
+
+  /** Every file scan a physical plan runs, through AQE stages and
+    * cached relations (a cached plan is one object however often it
+    * is referenced). */
+  private def scansOf(plan: SparkPlan): Seq[FileSourceScanExec] =
+    plan match {
+      case a: AdaptiveSparkPlanExec => scansOf(a.executedPlan)
+      case q: QueryStageExec => scansOf(q.plan)
+      case m: InMemoryTableScanExec => scansOf(m.relation.cachedPlan)
+      case f: FileSourceScanExec => Seq(f)
+      case p => p.children.flatMap(scansOf)
+    }
+
+  test("an ingest over existing history runs exactly 4 Spark actions " +
+      "and scans the stored signatures once, pruned to doc_id and sig") {
+    val store = new ModelStore(
+      Files.createTempDirectory("graft-ndidx7").toString)
+    NearDupIndex.ingest(spark, store, "nd", "idx",
+      docs.filter(col("doc_id") < 40), "doc_id", col("text"), 0L).count()
+    // 40 new docs and near-copies of 10 history docs
+    val batch = docs.filter(col("doc_id") >= 40 && col("doc_id") < 80)
+      .unionByName(docs.filter(col("doc_id") < 10).select(
+        (col("doc_id") + 1000000L).as("doc_id"),
+        concat(col("text"), lit(" extra")).as("text")))
+    lazy val decided = NearDupIndex.ingest(spark, store, "nd", "idx",
+      batch, "doc_id", col("text"), 1L)
+    val ran = Actions(spark)(decided)
+    // the signed-doc count, the batch clustering collect, the decision
+    // checkpoint (the history probe and verify run inside it) and the
+    // survivors' append write
+    assert(ran.map(_._1) ===
+      Seq("count", "collect", "localCheckpoint", "command"))
+    // the probe found history: near-copies collapse onto stored docs
+    assert(decided.filter(col("dup_of") < 40).count() > 0)
+    val sigScans = ran.flatMap(r => scansOf(r._2.executedPlan))
+      .filter(_.relation.location.rootPaths.exists(
+        _.toString.contains("idx_sigs")))
+    // distinct by identity: the cached histMin plan is shared by the
+    // plans that reference it
+    val distinct = sigScans.foldLeft(List.empty[FileSourceScanExec]) {
+      (acc, s) => if (acc.exists(_ eq s)) acc else s :: acc }
+    assert(distinct.size == 1, s"${distinct.size} scans of idx_sigs")
+    assert(distinct.head.requiredSchema.catalogString ===
+      "struct<doc_id:bigint,sig:array<bigint>>")
   }
 
   test("signature appends: a zero-survivor batch stages no version " +

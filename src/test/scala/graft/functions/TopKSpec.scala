@@ -47,7 +47,7 @@ class TopKSpec extends AnyFunSuite {
       val nGroups = 1 + rnd.nextInt(5)
       val rows = for {
         g <- 1 to nGroups
-        i <- 1L to (k + rnd.nextInt(3 * k + 20)).toLong
+        _ <- 1L to (k + rnd.nextInt(3 * k + 20)).toLong
       } yield (g, rnd.nextInt(7) / 7.0, rnd.nextLong(1000000L))
       // distinct ids per group: ties on score must break by id alone
       val df = rows.distinct.toDF("g", "score", "id")

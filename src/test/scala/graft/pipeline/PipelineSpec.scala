@@ -446,7 +446,7 @@ class PipelineSpec extends AnyFunSuite {
     import graft.model.{BuildCtx, ModelDef}
     import org.apache.spark.sql.functions.lit
     def leaf(n: String) = ModelDef(name = n, layer = "l",
-      build = (ctx: BuildCtx) =>
+      build = (_: BuildCtx) =>
         spark.range(3).withColumn("src", lit(n)))
     val boom = ModelDef(name = "boom", layer = "l",
       build = (_: BuildCtx) => sys.error("synthetic model failure"))
