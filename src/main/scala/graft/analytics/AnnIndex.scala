@@ -262,12 +262,12 @@ object AnnIndex {
       .select(col("c_id"), col("vec_id"), col("nbr_id"),
         col("cos_sim"), col("rnk"))
 
-  /** Multi-probe top-k search over the persisted index. `queries` is
+  /** Multi-probe top-k search over the persisted index
+    * ([[VectorOps.NumProbes]] cells per query). `queries` is
     * (`q_id`, `embedding`); output matches [[VectorOps.qAnnIvf]]:
     * (q_id, vec_id, cos_sim, rnk). */
   def search(spark: SparkSession, store: ModelStore, name: String,
-      queries: DataFrame, nprobe: Int = VectorOps.NumProbes)
-      : DataFrame = {
+      queries: DataFrame): DataFrame = {
     val cents = store.read(spark, Layer, centroidsTable(name)).getOrElse(
       sys.error(s"ANN index '$name' has no centroids — build() first"))
     val postings = store.read(spark, Layer, postingsTable(name)).getOrElse(
@@ -280,7 +280,7 @@ object AnnIndex {
           col("embedding")))
         .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
           col("n2").as("q_n2")),
-      cents, nprobe).localCheckpoint()
+      cents, VectorOps.NumProbes).localCheckpoint()
     // bounded collect (≤ K cells): the literal IN-list partition-prunes
     // the postings scan down to the probed inverted lists
     val cells = q.select("c_id").distinct().collect().map(_.getLong(0))
@@ -368,7 +368,7 @@ object AnnIndex {
     * collect is bounded by K (a design constant); its literal IN-list
     * is what partition-prunes the artifact scans. */
   private def adcInputs(spark: SparkSession, store: ModelStore,
-      name: String, queries: DataFrame, nprobe: Int)
+      name: String, queries: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame, Array[Long]) = {
     val cents = store.read(spark, Layer, centroidsTable(name)).getOrElse(
       sys.error(s"ANN index '$name' has no centroids — build() first"))
@@ -381,46 +381,43 @@ object AnnIndex {
           col("embedding")))
         .select(col("vec_id").as("q_id"), col("qv").as("q_qv"),
           col("n2").as("q_n2")),
-      cents, nprobe).localCheckpoint()
+      cents, VectorOps.NumProbes).localCheckpoint()
     val cells = probes.select("c_id").distinct().collect()
       .map(_.getLong(0))
     (cents, cb, codes.filter(col("c_id").isin(cells.toSeq: _*)),
       probes, cells)
   }
 
-  /** Multi-probe ADC top-k search over the persisted PQ artifacts:
+  /** Multi-probe ADC top-k search over the persisted PQ artifacts
+    * ([[VectorOps.NumProbes]] cells, top [[VectorOps.TopK]]):
     * the postings' raw vectors are never read — candidates are scored
     * from their stored codes via the per-query distance table. Output
     * matches [[Pq.adcSearch]]: (q_id, vec_id, adc_dist, rnk). */
   def searchAdc(spark: SparkSession, store: ModelStore, name: String,
-      queries: DataFrame, nprobe: Int = VectorOps.NumProbes,
-      topK: Int = VectorOps.TopK): DataFrame = {
+      queries: DataFrame): DataFrame = {
     val (cents, cb, codes, probes, _) =
-      adcInputs(spark, store, name, queries, nprobe)
+      adcInputs(spark, store, name, queries)
     val (numSub, subDim) = pqGeom(spark, store, name)
-    Pq.adcRank(probes, cents, cb, codes, topK, numSub, subDim)
+    Pq.adcRank(probes, cents, cb, codes, VectorOps.TopK, numSub, subDim)
   }
 
   /** Two-stage ADC search over the persisted artifacts: ADC shortlist
     * from codes only ([[searchAdc]]'s plan), then an exact re-rank of
     * just the shortlist against the raw postings — the one point the
     * posting vectors are read, partition-pruned to the probed cells
-    * and O(shortlist) rows per query. Output matches [[Pq.adcRerank]]:
-    * (q_id, vec_id, d2, rnk). */
+    * and O([[Pq.RerankDepth]]) rows per query. Output matches
+    * [[Pq.adcRerank]]: (q_id, vec_id, d2, rnk). */
   def searchAdcRerank(spark: SparkSession, store: ModelStore,
-      name: String, queries: DataFrame,
-      nprobe: Int = VectorOps.NumProbes,
-      shortlistR: Int = Pq.RerankDepth,
-      topK: Int = VectorOps.TopK): DataFrame = {
+      name: String, queries: DataFrame): DataFrame = {
     val (cents, cb, codes, probes, cells) =
-      adcInputs(spark, store, name, queries, nprobe)
+      adcInputs(spark, store, name, queries)
     val postings = store.read(spark, Layer, postingsTable(name)).getOrElse(
       sys.error(s"ANN index '$name' has no postings — build() first"))
     val (numSub, subDim) = pqGeom(spark, store, name)
     Pq.adcRerank(probes, cents, cb, codes,
       postings.filter(col("c_id").isin(cells.toSeq: _*))
         .select("vec_id", "qv", "n2"),
-      shortlistR, topK, numSub, subDim)
+      Pq.RerankDepth, VectorOps.TopK, numSub, subDim)
   }
 
   /** The /tmp store keyed by the canonical corpus dir (full-path MD5 —

@@ -475,13 +475,9 @@ object Curation {
       .withColumn("th", lower(lpad(hex(col("rate256")), 2, "0")))
   }
 
-  /** The kept (downsampled) documents under the computed rates. */
-  def rebalance(docs: DataFrame, shares: Map[String, Long]): DataFrame =
-    rebalanceWith(docs, rebalanceRates(docs, shares))
-
-  /** Same, against an already-computed rates table — callers that also
-    * report the rates (q87) pass one shared instance instead of
-    * re-running the count aggregations. */
+  /** The kept (downsampled) documents under an already-computed rates
+    * table — callers that also report the rates (q87) pass one shared
+    * instance instead of re-running the count aggregations. */
   def rebalanceWith(docs: DataFrame, rates: DataFrame): DataFrame =
     docs.join(broadcast(rates.select("lang", "rate256", "th")), "lang")
       .filter(col("rate256") >= 256 ||

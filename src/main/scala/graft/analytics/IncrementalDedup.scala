@@ -37,11 +37,10 @@ import graft.queries.Q
   * and the read-back checkpoint. A Bloom side-table of history keys
   * could skip step 2's scan only on a fold with no true duplicate and
   * no false positive, and cost a collect, a build and a commit on
-  * every fold, so the fold keeps none (a `<name>_sketch` table an
-  * older layout left in the store is neither read nor written).
+  * every fold, so the fold keeps none.
   *
   * Contract: batches arrive in keep-priority order (earlier batch
-  * wins; within a batch the smallest `orderCol` wins) — one-shot
+  * wins; within a batch the smallest [[OrderCol]] wins) — one-shot
   * first-copy dedup over the batches in arrival order.
   */
 object IncrementalDedup {
@@ -55,18 +54,21 @@ object IncrementalDedup {
     * of exact verification at that batch size). */
   val KeyRowBytes: Long = 8L + 8 + 32
 
+  /** A batch's content fingerprint column (the history's key), and its
+    * within-batch keep-priority column. */
+  val KeyCol = "content_fp"
+  val OrderCol = "doc_id"
+
   /** Fold one batch into the fingerprint history at `layer`.`name`;
-    * returns the kept (first-copy) rows. `batch` must carry `keyCol`
-    * (the content fingerprint) and `orderCol` (the within-batch
-    * keep-priority, e.g. doc id). */
+    * returns the kept (first-copy) rows. `batch` must carry [[KeyCol]]
+    * and [[OrderCol]]. */
   def applyBatch(spark: SparkSession, store: ModelStore, layer: String,
       name: String, batch: DataFrame, batchId: Long,
-      keyCol: String = "content_fp", orderCol: String = "doc_id",
       broadcastCap: Long = BroadcastGate.MaxBytes): DataFrame = {
-    require(batch.columns.contains(keyCol), s"batch lacks $keyCol")
+    require(batch.columns.contains(KeyCol), s"batch lacks $KeyCol")
 
     // 1. batch-internal first copy per fingerprint (one batch shuffle)
-    val w = Window.partitionBy(keyCol).orderBy(col(orderCol))
+    val w = Window.partitionBy(KeyCol).orderBy(col(OrderCol))
     val winners = batch
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
@@ -83,9 +85,9 @@ object IncrementalDedup {
           // 2. exact verify — batch fps against the column-pruned
           // history scan: broadcast under the gate (history hash-probed
           // in place, never shuffled), shuffle-hash above it
-          val existing = hist.select(keyCol)
-            .join(gate(winners.select(keyCol)), Seq(keyCol), "left_semi")
-          winners.join(gate(existing), Seq(keyCol), "left_anti")
+          val existing = hist.select(KeyCol)
+            .join(gate(winners.select(KeyCol)), Seq(KeyCol), "left_semi")
+          winners.join(gate(existing), Seq(KeyCol), "left_anti")
       }
       // 3. append as the batch's partition (ModelStore.appendBatch)
       store.appendBatch(kept, layer, name, "ingest_batch", batchId)

@@ -128,7 +128,7 @@ object NearDup {
 
   /** The df-capped posting lists alone: one sorted doc-id array per
     * kept shingle (stop-shingles past `maxDf` dropped map-side). */
-  private[analytics] def postingLists(sh: DataFrame, id: String,
+  private[graft] def postingLists(sh: DataFrame, id: String,
       maxDf: Int = MaxDf): DataFrame = {
     val boundedSet = udaf(new graft.functions.BoundedSetAgg(maxDf),
       org.apache.spark.sql.Encoders.scalaLong)
@@ -140,7 +140,7 @@ object NearDup {
   /** Pair/size extraction over already-built posting lists —
     * consumers of the STORED lists ([[postingListsStored]]) run only
     * this part per query. */
-  private[analytics] def pairCountsFromLists(lists: DataFrame,
+  private[graft] def pairCountsFromLists(lists: DataFrame,
       id: String): (DataFrame, DataFrame) = {
     val pairs = lists
       .filter(size(col("docs")) >= 2)
@@ -227,21 +227,13 @@ object NearDup {
     * as CONTAINED in B — the sub-document/boilerplate/quotation case
     * resemblance (q24's symmetric Jaccard) structurally misses: a
     * short doc fully embedded in a long one has high containment but
-    * low Jaccard. Same df-capped inverted-index candidate generation
-    * as q24 (never all-pairs); both directions of each candidate pair
-    * are tested in exact integer space (τ = 0.8 as ·10000 ≥ ·8000). */
-  def containmentPairs(docs: DataFrame): DataFrame = {
-    val sh = shingleIndex(docs, "doc_id", col("text"))
-    val (pairs, sizes, sized, _) = invertedPairCounts(sh, "doc_id")
-    containmentFromCounts(pairs, sizes, sized)
-  }
-
-  /** The directional containment tests alone, over already-computed
-    * pair/size counts — consumers of the stored posting lists run
-    * only this part per query. `sized` is the gated broadcast wrapper
-    * ([[SizesRowBytes]]) for the two per-doc sizes lookup joins; specs
-    * force it both ways and assert identical pair sets. */
-  private[analytics] def containmentFromCounts(pairs: DataFrame,
+    * low Jaccard. Over already-computed pair/size counts from the same
+    * df-capped inverted index as q24 (never all-pairs), both
+    * directions of each candidate pair are tested in exact integer
+    * space (τ = 0.8 as ·10000 ≥ ·8000). `sized` is the gated broadcast
+    * wrapper ([[SizesRowBytes]]) for the two per-doc sizes lookup
+    * joins; specs force it both ways and assert identical pair sets. */
+  private[graft] def containmentFromCounts(pairs: DataFrame,
       sizes: DataFrame, sized: DataFrame => DataFrame): DataFrame = {
     val sa = sized(sizes.as("sa"))
     val sb = sized(sizes.as("sb"))
@@ -669,14 +661,19 @@ object NearDup {
     * distributed fixpoint runs as before. */
   val SmallGraphEdges = 100000
 
+  /** Round cap of the distributed fixpoint in [[clusterPairs]]: a
+    * runaway backstop, not a diameter cap — pointer jumping converges
+    * in rounds logarithmic in component diameter, and 2^20-diameter
+    * chains don't occur in dedup graphs. */
+  val MaxRounds = 20
+
   /** Collapse a pair list into keep/drop decisions: connected
     * components by min-label propagation iterated TO A FIXPOINT, with
     * pointer jumping (each round a doc adopts the smallest label
     * reachable over one edge, then adopts its label's label — so
     * convergence is logarithmic in component diameter, and the loop
-    * stops at the first round with zero label changes). `maxRounds` is
-    * a runaway backstop, not a diameter cap: 2^20-diameter chains
-    * don't occur in dedup graphs.
+    * stops at the first round with zero label changes, or after
+    * [[MaxRounds]]).
     * Returns (doc_id, keep_id); `doc_id != keep_id` ⇒ drop as duplicate.
     *
     * Graphs of at most `smallGraphLimit` pairs resolve by driver
@@ -689,7 +686,7 @@ object NearDup {
     * key-partitioned aggregations with a one-count convergence check
     * per round. The pair plan is persisted first, so candidate
     * generation runs ONCE whichever path is taken. */
-  def clusterPairs(pairs: DataFrame, maxRounds: Int = 20,
+  def clusterPairs(pairs: DataFrame,
       smallGraphLimit: Int = SmallGraphEdges): DataFrame = {
     val pr = pairs.select(col("a_id"), col("b_id")).persist()
     try {
@@ -721,14 +718,14 @@ object NearDup {
         return nodes.map(n => (n, find(n))).toSeq
           .toDF("doc_id", "keep_id")
       }
-      clusterPairsDistributed(pr, maxRounds)
+      clusterPairsDistributed(pr)
     } finally pr.unpersist(): Unit
   }
 
   /** The distributed fixpoint (see [[clusterPairs]]); `pairs` should
     * be persisted by the caller — each round re-reads the edge list. */
-  private[analytics] def clusterPairsDistributed(pairs: DataFrame,
-      maxRounds: Int): DataFrame = {
+  private[analytics] def clusterPairsDistributed(pairs: DataFrame)
+      : DataFrame = {
     // undirected edge list, both directions — ONE pass over the pair
     // plan (a union of two selects would compute the whole upstream
     // candidate-generation plan once per branch)
@@ -750,7 +747,7 @@ object NearDup {
       .localCheckpoint()
     var converged = labels.isEmpty
     var round = 0
-    while (!converged && round < maxRounds) {
+    while (!converged && round < MaxRounds) {
       val viaEdge = edges
         .join(labels.withColumnRenamed("doc_id", "dst"), Seq("dst"))
         .groupBy(col("src").as("doc_id"))
@@ -904,15 +901,11 @@ object NearDup {
   // The argmax is two-phase (per-cluster max, then min id among the
   // maxima) because a single-pass max_by has no deterministic tie-break
   // in either engine.
-  def canonicalPerCluster(docs: DataFrame): DataFrame =
-    canonicalSelection(dedupCorpus(docs, "doc_id", col("text")), docs)
-
-  /** The selection half alone, over an already-computed cluster
-    * decision (doc_id → keep_id): two hash aggregations and a
-    * cluster-keyed join — cheap, cluster-sized work, so consumers of
-    * the STORED decision ([[clusterDecisionStored]]) re-run only this
-    * part per query. */
-  private[analytics] def canonicalSelection(decision: DataFrame,
+  /** The selection over an already-computed cluster decision
+    * (doc_id → keep_id): consumers of the STORED decision
+    * ([[clusterDecisionStored]]) re-run only this cheap part per
+    * query. */
+  private[graft] def canonicalSelection(decision: DataFrame,
       docs: DataFrame): DataFrame = {
     val g = decision
       .join(docs.select(col("doc_id"),
@@ -1173,52 +1166,16 @@ object NearDup {
   }
 
   // ----------------------- canonical-first similarity composition
-  /** The tiered composition q107's scale envelope calls for: collapse
-    * every dup cluster to its canonical representative (q95) FIRST,
-    * then run the lossless prefix join on representatives only.
-    *
-    * q107 alone is exact-and-complete but inherently O(cluster²) in
-    * its OUTPUT on dup-heavy corpora — a 1000-copy cluster emits
-    * ~500k pairs that say nothing a dedup pass hasn't already said.
-    * Curation pipelines consume the similarity relation BETWEEN
-    * distinct contents, so the production shape is dedup → canonical
-    * → similarity-join-on-representatives: the rep set shrinks by the
-    * duplication factor and the join output is linear in the
-    * POST-dedup pair count. On the 10× dedup-amplified probe this
-    * turns q107's output-bound blowup into output-linear work; on a
-    * dup-free corpus it degrades gracefully to q107 plus one
-    * clustering pass. Per-pair semantics are IDENTICAL to
-    * [[prefixSimJoin]] restricted to canonical docs (spec-pinned
-    * against the brute-force join on representatives).
-    *
-    * The default τ = 1/20 sits WELL BELOW the clustering threshold
-    * (0.5) on purpose: pairs above the cluster threshold collapse
-    * into one representative by construction, so the interesting
-    * relation on the rep tier is related-but-distinct content — the
-    * low-similarity band a curation pipeline consumes for diversity
-    * sampling, topic grouping, and template/boilerplate discovery.
-    * (At τ ≥ the cluster threshold the rep tier is near-empty by
-    * definition — that similarity range already became clusters. A
-    * low τ weakens the prefix filter itself — prefixes keep
-    * ~(1 − τ) of the index — which is affordable precisely BECAUSE
-    * the dedup tier already shrank the input to representatives.) */
-  def canonicalSimJoin(docs: DataFrame, tauNum: Int = 1,
-      tauDen: Int = 20): DataFrame = {
-    val reps = canonicalPerCluster(docs)
-      .select(col("canonical_id").as("doc_id"))
-    simJoinByTau(docs.join(reps, "doc_id"), tauNum, tauDen)
-  }
-
-  /** Plan by τ: prefix filtering prunes a τ-fraction of the index, so
-    * below τ = 1/2 its ranking/candidate machinery costs more than it
-    * saves and the plain inverted-index exact join (one self-join +
-    * one aggregation, the oracle's own shape) wins — measured 9.4 s →
-    * 6.3 s end-to-end at sf0.1 for the τ = 1/20 default. Both plans
-    * are lossless; the spec pins them to the same pair set. */
-  def simJoinByTau(docs: DataFrame, tauNum: Int, tauDen: Int)
-      : DataFrame =
-    if (tauNum * 2 < tauDen) invertedSimJoin(docs, tauNum, tauDen)
-    else prefixSimJoin(docs, tauNum, tauDen)
+  // q109's tiering: collapse every dup cluster to its canonical
+  // representative (q95) FIRST, then run the exact similarity join on
+  // representatives only. q107 alone is exact-and-complete but
+  // O(cluster²) in its OUTPUT on dup-heavy corpora (a 1000-copy
+  // cluster emits ~500k pairs a dedup pass already said); on the rep
+  // tier the join output is linear in the POST-dedup pair count.
+  // q109's τ = 1/20 sits well below the clustering threshold (0.5) on
+  // purpose: pairs above it already collapsed into one representative,
+  // so the relation left on the rep tier is related-but-distinct
+  // content (diversity sampling, template/boilerplate discovery).
 
   /** The FULL cluster decision (doc_id → keep_id, q35's output) as a
     * store-versioned artifact: production dedup runs once per corpus
@@ -1421,10 +1378,14 @@ object NearDup {
     // consumes the stored decision. Deterministic, so artifact ≡ the
     // in-memory composition (spec-pinned); the oracle replays the full
     // chain either way.
+    // At τ = 1/20 prefix filtering prunes too little to pay for its
+    // ranking and candidate machinery, so the plain inverted-index join
+    // (the oracle's own shape) runs: measured 9.4 s → 6.3 s end to end
+    // at sf0.1 against the prefix plan. Both plans are lossless.
     val docs = T(s, d, "documents")
     val reps = canonicalRepsStored(s, d, docs)
       .select(col("canonical_id").as("doc_id"))
-    simJoinByTau(docs.join(reps, "doc_id"), 1, 20)
+    invertedSimJoin(docs.join(reps, "doc_id"), 1, 20)
       .orderBy("a_id", "b_id")
   }.copy(sideEffecting = true)
 

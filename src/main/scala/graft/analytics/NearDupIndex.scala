@@ -39,9 +39,10 @@ import graft.queries.Q
   *     bounds which verified pairs count on degenerate buckets, the
   *     [[NearDup.MaxBucket]] discipline with the same documented
   *     recall caveat;
-  *  4. verification is signature agreement (`est ≥ threshold`) — a
-  *     zip_with over the stored signature the scan carries and the
-  *     batch signature it looked up, no text re-read;
+  *  4. verification is signature agreement
+  *     (`est ≥ [[SigAgreeThreshold]]`) — a zip_with over the stored
+  *     signature the scan carries and the batch signature it looked
+  *     up, no text re-read;
   *  5. within-batch pairs cluster via [[NearDup.clusterPairs]]
   *     (batch-sized fixpoint); a cluster with ANY member matching
   *     history anchors the WHOLE cluster to that historical doc
@@ -102,13 +103,13 @@ object NearDupIndex {
     * signature, per doc. */
   def ingest(spark: SparkSession, store: ModelStore, layer: String,
       name: String, docs: DataFrame, id: String, text: Column,
-      batchId: Long, threshold: Double = SigAgreeThreshold,
-      broadcastCap: Long = BroadcastGate.MaxBytes): DataFrame = {
+      batchId: Long, broadcastCap: Long = BroadcastGate.MaxBytes)
+      : DataFrame = {
     val sigs = signatures(docs, id, text)
       .withColumnRenamed(id, "doc_id").persist()
     try {
       ingestWithSigs(spark, store, layer, name, docs, id, sigs,
-        batchId, threshold, broadcastCap)
+        batchId, broadcastCap)
     } finally sigs.unpersist(): Unit
   }
 
@@ -122,8 +123,7 @@ object NearDupIndex {
 
   private def ingestWithSigs(spark: SparkSession, store: ModelStore,
       layer: String, name: String, docs: DataFrame, id: String,
-      sigs: DataFrame, batchId: Long, threshold: Double,
-      broadcastCap: Long): DataFrame = {
+      sigs: DataFrame, batchId: Long, broadcastCap: Long): DataFrame = {
     val bands = bandRows(sigs, "doc_id")
     // materializes the sigs cache; the signed-doc count bounds every
     // gated side below
@@ -157,7 +157,8 @@ object NearDupIndex {
           Seq("band_idx", "band_hash"))
         .join(gateSig(sigs), Seq("doc_id"))
         .select(col("doc_id"), col("old_id"),
-          (sigAgree(col("sig"), col("old_sig")) >= threshold).as("ok"))
+          (sigAgree(col("sig"), col("old_sig")) >= SigAgreeThreshold)
+            .as("ok"))
         // the one exchange: doc_id clusters the pair aggregate, the
         // per-doc window and the minimum alike
         .repartition(col("doc_id"))
@@ -188,7 +189,7 @@ object NearDupIndex {
         col("sig").as("sa"))), Seq("a_id"))
       .join(gateSig(sigs.select(col("doc_id").as("b_id"),
         col("sig").as("sb"))), Seq("b_id"))
-      .filter(sigAgree(col("sa"), col("sb")) >= threshold)
+      .filter(sigAgree(col("sa"), col("sb")) >= SigAgreeThreshold)
       .select("a_id", "b_id")
     val labels = timed(spark, "batch-cluster")(
       NearDup.clusterPairs(batchPairs)) // (doc_id, keep_id)

@@ -34,8 +34,30 @@ object MergeWriter {
     * The check is an inline window count on the updates side (no extra
     * job, no recomputation of the updates plan). */
   def merge(existing: DataFrame, updates: DataFrame, key: String)
-      : DataFrame =
-    mergeRows(existing, updates, key)
+      : DataFrame = {
+    val perKey = count(lit(1)).over(Window.partitionBy(col(key)))
+    val checked = updates
+      .withColumn("__merge_dup_chk", assert_true(perKey <= 1,
+        lit(s"duplicate merge key '$key' in updates batch " +
+          "(MERGE requires one source row per target key)")))
+      .filter(col("__merge_dup_chk").isNull)
+      .drop("__merge_dup_chk")
+    // Null-safe (<=>) anti-join: a NULL-key update must REPLACE the
+    // stored NULL-key row. Plain equality never matches NULL, so a
+    // malformed-envelope row with a null key would append once per
+    // incremental run — N duplicate null-key rows after N runs, and
+    // the per-batch uniqueness check above can't see it (it only
+    // counts within one batch). EqualNullSafe still hash-joins.
+    val kept = existing.join(
+      checked.select(col(key).as("__merge_k")),
+      col(key) <=> col("__merge_k"), "left_anti")
+    val target = checked.schema
+    val keptSynced = kept.unionByName(checked.limit(0),
+      allowMissingColumns = true)   // null-backfill new columns
+    val aligned = keptSynced.select(target.fields.map(f =>
+      col(f.name).cast(f.dataType)): _*)
+    aligned.unionByName(checked)
+  }
 
   /** The store's one MERGE commit: upsert `updates` on `key` into the
     * table `layer.name`, whose current version the caller read as
@@ -103,7 +125,7 @@ object MergeWriter {
                 }.reduce(_ && _))
               .reduceOption(_ || _)
               .getOrElse(lit(false))
-            val merged = mergeRows(ex.filter(pred), u, key)
+            val merged = merge(ex.filter(pred), u, key)
             timed("pruned-merge-write") {
               // the declared touched set also empties a partition whose
               // only row moved away; the collected tuples pass
@@ -116,34 +138,8 @@ object MergeWriter {
           }
         } else if (!(compatible && timed("empty-check")(u.isEmpty)))
           timed("merge-write") {
-            write(mergeRows(ex, u, key))
+            write(merge(ex, u, key))
           }
     } finally { u.unpersist(); () }
-  }
-
-  private def mergeRows(existing: DataFrame, updates: DataFrame,
-      key: String): DataFrame = {
-    val perKey = count(lit(1)).over(Window.partitionBy(col(key)))
-    val checked = updates
-      .withColumn("__merge_dup_chk", assert_true(perKey <= 1,
-        lit(s"duplicate merge key '$key' in updates batch " +
-          "(MERGE requires one source row per target key)")))
-      .filter(col("__merge_dup_chk").isNull)
-      .drop("__merge_dup_chk")
-    // Null-safe (<=>) anti-join: a NULL-key update must REPLACE the
-    // stored NULL-key row. Plain equality never matches NULL, so a
-    // malformed-envelope row with a null key would append once per
-    // incremental run — N duplicate null-key rows after N runs, and
-    // the per-batch uniqueness check above can't see it (it only
-    // counts within one batch). EqualNullSafe still hash-joins.
-    val kept = existing.join(
-      checked.select(col(key).as("__merge_k")),
-      col(key) <=> col("__merge_k"), "left_anti")
-    val target = checked.schema
-    val keptSynced = kept.unionByName(checked.limit(0),
-      allowMissingColumns = true)   // null-backfill new columns
-    val aligned = keptSynced.select(target.fields.map(f =>
-      col(f.name).cast(f.dataType)): _*)
-    aligned.unionByName(checked)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
-import org.apache.spark.sql.functions.{col, lit, struct, when}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Materialized-model storage with Delta-style versioning:
@@ -31,11 +31,15 @@ import org.apache.spark.sql.types.StructType
   * Layer maps a dbt custom schema used verbatim (reference
   * `macros/generate_schema_name.sql:4–11`).
   *
-  * ZORDER post-hook analog (`OPTIMIZE … ZORDER BY`, reference
+  * `OPTIMIZE … ZORDER BY` post-hook analog (reference
   * `orders_cleaned.sql:15`): clustering sort before write so parquet
   * row-group min/max stats give the same data-skipping reads ZORDER
   * targets — partitioned tables repartition on the partition columns
   * (one file per partition per owning task) and sort in-partition.
+  * The bin-packing half needs no separate pass: the write's
+  * repartition carries no partition count, so AQE sizes its files to
+  * the data, and every commit writes whole partitions or whole tables
+  * fresh — small files never accumulate across commits.
   */
 final class ModelStore(val root: String) {
 
@@ -110,90 +114,10 @@ final class ModelStore(val root: String) {
     val next = currentVersion(spark, layer, name) + 1
     val dest = new Path(versionDir(layer, name, next))
     writeData(df, dest, partitionBy, zorderBy)
-    // full rewrite: every partition is fresh, nothing linked.
-    // layoutMeta is written unconditionally (empty included) so an
-    // explicit re-layout OVERWRITES the carried-forward declaration —
-    // carry-forward must never resurrect a dropped partitioning.
+    // full rewrite: every partition is fresh, nothing linked
     commit(spark, layer, name, next, description,
-      meta ++ layoutMeta(partitionBy, zorderBy) ++
-        statsMeta(spark, layer, name, dest, partitionBy,
-          statsCols, linkedRels = Set.empty))
-  }
-
-  /** Commit-meta declaration of the version's physical layout, read
-    * back by [[compact]] so a routine maintenance rewrite preserves
-    * the table's partitioning/clustering instead of silently
-    * flattening it (Delta's OPTIMIZE never re-layouts). */
-  private def layoutMeta(partitionBy: Seq[String],
-      zorderBy: Seq[String]): Map[String, String] = Map(
-    "layout_partition_by" -> ModelStore.renderCols(partitionBy),
-    "layout_zorder_by" -> ModelStore.renderCols(zorderBy))
-
-  /** Small-file compaction — the bin-packing half of the reference's
-    * `OPTIMIZE` post-hook (`orders_cleaned.sql:15`; the ZORDER half is
-    * the clustering sort in [[write]] / `functions.ZOrder`). Rewrites
-    * the CURRENT version into a new one through the normal clustered
-    * write path, whose AQE-coalesced repartition sizes output files to
-    * the data — collapsing the many tiny files an incremental
-    * ingestion accumulates. A no-op for missing tables. Readers are
-    * unaffected (pointer commit); old versions age out on commit. The
-    * commit carries no description, so the table comment carries
-    * forward. */
-  def compact(spark: SparkSession, layer: String, name: String,
-      partitionBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil): Unit =
-    read(spark, layer, name).foreach { df =>
-      // Layout is PRESERVED by default: an empty argument means "keep
-      // the stored layout" (read from commit meta; directory-discovered
-      // for tables that predate the meta), never "flatten" — a routine
-      // compact() used to rewrite a partitioned table unpartitioned,
-      // permanently demoting every later incremental merge to a full
-      // rewrite (hasPartitionLayout false) and breaking the delta-log
-      // export's partitionColumns invariant. A deliberate re-layout is
-      // write()'s job, not a maintenance op's.
-      val pb =
-        if (partitionBy.nonEmpty) partitionBy
-        else meta(spark, layer, name, "layout_partition_by")
-          .map(ModelStore.parseCols)
-          .getOrElse(discoveredPartitionColumns(spark, layer, name))
-      val zb =
-        if (zorderBy.nonEmpty) zorderBy
-        else meta(spark, layer, name, "layout_zorder_by")
-          .map(ModelStore.parseCols).getOrElse(Nil)
-      // re-derive whatever stats the table tracks: compaction preserves
-      // data but rewrites every file, so the per-partition stat entries
-      // must be recomputed (a stats-less write would tombstone them)
-      write(df, layer, name, pb, zb,
-        statsCols = statsColsOf(spark, layer, name))
-    }
-
-  /** Partition columns of the CURRENT version as evidenced by its
-    * `col=value` directory tree — the fallback layout source for
-    * tables committed before layout meta existed. Empty for
-    * unpartitioned layouts (or a tree Spark's writer could not have
-    * produced — mixed column names at one level). */
-  private def discoveredPartitionColumns(spark: SparkSession,
-      layer: String, name: String): Seq[String] = {
-    val v = currentVersion(spark, layer, name)
-    if (v == 0) return Nil
-    val base = new Path(versionDir(layer, name, v))
-    val fs = fsFor(spark, base)
-    if (!fs.exists(base)) return Nil
-    val out = scala.collection.mutable.Buffer.empty[String]
-    var p = base
-    var descend = true
-    while (descend) {
-      val dirs = fs.listStatus(p).toSeq.filter(s =>
-        s.isDirectory && s.getPath.getName.contains("="))
-      if (dirs.isEmpty) descend = false
-      else {
-        val names = dirs.map(_.getPath.getName.takeWhile(_ != '='))
-          .distinct
-        if (names.size != 1) return Nil // not a Spark-written layout
-        out += names.head
-        p = dirs.head.getPath
-      }
-    }
-    out.toSeq
+      meta ++ statsMeta(spark, layer, name, dest, partitionBy,
+        statsCols, linkedRels = Set.empty))
   }
 
   /** Partition-pruned incremental write (the Delta-MERGE file-pruning
@@ -255,7 +179,7 @@ final class ModelStore(val root: String) {
           }
       }
     }
-    linkAndCommit(spark, layer, name, cur, dest, partitionBy, zorderBy,
+    linkAndCommit(spark, layer, name, cur, dest, partitionBy,
       description, meta, statsCols, carry = rel => !fresh(rel))
   }
 
@@ -268,8 +192,8 @@ final class ModelStore(val root: String) {
     * that partition's entry) at O(touched files) cost. */
   private def linkAndCommit(spark: SparkSession, layer: String,
       name: String, cur: Int, dest: Path, partitionBy: Seq[String],
-      zorderBy: Seq[String], description: String,
-      meta: Map[String, String], statsCols: Seq[String],
+      description: String, meta: Map[String, String],
+      statsCols: Seq[String],
       carry: String => Boolean): Unit = {
     val fs = fsFor(spark, dest)
     val src = new Path(versionDir(layer, name, cur))
@@ -280,9 +204,8 @@ final class ModelStore(val root: String) {
     linkedRels.foreach(rel =>
       linkOrCopyDir(fs, new Path(src, rel), new Path(dest, rel)))
     commit(spark, layer, name, cur + 1, description,
-      meta ++ layoutMeta(partitionBy, zorderBy) ++
-        statsMeta(spark, layer, name, dest, partitionBy,
-          statsCols, linkedRels))
+      meta ++ statsMeta(spark, layer, name, dest, partitionBy,
+        statsCols, linkedRels))
   }
 
   /** Append `rows` as the table's `batchCol=<batchId>` partition: the
@@ -326,8 +249,8 @@ final class ModelStore(val root: String) {
     val fs = fsFor(spark, dest)
     val fresh = partitionRelPaths(fs, dest, 1).toSet
     if (fresh.nonEmpty)
-      linkAndCommit(spark, layer, name, cur, dest, partitionBy, Nil, "",
-        meta, Nil, rel => !fresh(rel))
+      linkAndCommit(spark, layer, name, cur, dest, partitionBy, "", meta,
+        Nil, rel => !fresh(rel))
     else {
       // `dest` is a committed version if another writer got there
       // first: raise as commit would, and delete nothing
@@ -353,7 +276,8 @@ final class ModelStore(val root: String) {
     }
 
   /** Columns with recorded (or tombstoned) stats meta on the current
-    * version — what a data-preserving rewrite (compact) re-derives. */
+    * version — what [[statsMeta]] tombstones when a write stops
+    * declaring them. */
   private def statsColsOf(spark: SparkSession, layer: String,
       name: String): Seq[String] = {
     val v = currentVersion(spark, layer, name)
@@ -389,8 +313,7 @@ final class ModelStore(val root: String) {
     *
     * A write that does NOT declare statsCols on a table that HAS
     * stats meta tombstones all of it — an undeclared data change must
-    * never inherit the old maxima. [[compact]] (data-preserving by
-    * construction) re-derives instead. */
+    * never inherit the old maxima. */
   private def statsMeta(spark: SparkSession, layer: String, name: String,
       dest: Path, partitionBy: Seq[String], statsCols: Seq[String],
       linkedRels: Set[String]): Map[String, String] = {
@@ -612,7 +535,7 @@ final class ModelStore(val root: String) {
     val dest = new Path(versionDir(layer, name, next))
     val fs = fsFor(spark, dest)
     // O7 persist_docs analog: table comment persisted beside the data.
-    // Arbitrary metadata (layout, column stats, staleness stamps) is
+    // Arbitrary metadata (column stats, staleness stamps) is
     // written into the version dir BEFORE the pointer swap, so data +
     // metadata commit atomically together.
     val metaAll =
@@ -623,7 +546,7 @@ final class ModelStore(val root: String) {
       try out.write(v.getBytes("UTF-8")) finally out.close()
     }
     // Carry prior-version metadata forward (Delta table-properties
-    // semantics: a property persists until overwritten). compact()
+    // semantics: a property persists until overwritten). appendBatch
     // commits no description, so this is what keeps the table comment
     // across it; and it is why statsMeta must write EMPTY tombstones
     // for stats a write no longer declares — omitting them would carry
@@ -657,34 +580,6 @@ final class ModelStore(val root: String) {
     // never as the ConcurrentWriteException a lost race raises
     dropVersions(fs, tableDir(layer, name), next,
       ModelStore.RetainVersions)
-  }
-
-  /** Keyed diff of two retained versions — the CDC-audit operator
-    * time travel exists for ("what changed between the run the
-    * 2024-03 training job read and today's?"). Full outer join on the
-    * key, rows classified ADDED / REMOVED / CHANGED (any non-key
-    * column differs; NULL-safe compare) — unchanged rows drop out.
-    * One shuffle on the key, prunable like any join; output is
-    * change-volume-sized, not table-sized. */
-  def diffVersions(spark: SparkSession, layer: String, name: String,
-      key: String, fromV: Int, toV: Int): DataFrame = {
-    val a = readVersion(spark, layer, name, fromV)
-    val b = readVersion(spark, layer, name, toV)
-    val cols = a.columns.filter(_ != key).toSeq
-    require(cols.toSet == b.columns.filter(_ != key).toSet,
-      s"diffVersions: schemas differ between v$fromV and v$toV")
-    val oldSide = a.select(col(key).as("__k"),
-      struct(cols.map(col): _*).as("__old"))
-    val newSide = b.select(col(key).as("__k"),
-      struct(cols.map(col): _*).as("__new"))
-    oldSide.join(newSide, Seq("__k"), "full_outer")
-      .withColumn("change_type",
-        when(col("__old").isNull, "ADDED")
-          .when(col("__new").isNull, "REMOVED")
-          .when(!(col("__old") <=> col("__new")), "CHANGED"))
-      .filter(col("change_type").isNotNull)
-      .select(col("__k").as(key), col("change_type"),
-        col("__old").as("old_row"), col("__new").as("new_row"))
   }
 
   /** Hard-link the CURRENT version of `layer.name` into `target` as
@@ -806,16 +701,6 @@ object ModelStore {
     have.keySet == want.keySet &&
       have.forall { case (c, t) => DataTypeUtils.sameType(t, want(c)) }
   }
-
-  /** Serialize a column list for layout meta (URL-encoding keeps a
-    * comma inside an exotic column name unambiguous). Empty list ⇔
-    * empty string. */
-  private[io] def renderCols(cols: Seq[String]): String =
-    cols.map(java.net.URLEncoder.encode(_, "UTF-8")).mkString(",")
-
-  private[io] def parseCols(s: String): Seq[String] =
-    s.split(",").toSeq.filter(_.nonEmpty)
-      .map(java.net.URLDecoder.decode(_, "UTF-8"))
 
   /** Serialize per-partition stat maxima: kind header, then one
     * URL-encoded `rel \t value` line per partition (URL-encoding keeps

@@ -122,7 +122,8 @@ class PropertySpec extends AnyFunSuite {
       val parts = (0 :: cuts).zip(cuts :+ 100).map { case (a, b) => b - a }
       val shares = langs.zip(parts.map(_.toLong)).toMap
       val df = docs.toDF("doc_id", "lang")
-      val kept = graft.analytics.Curation.rebalance(df, shares)
+      import graft.analytics.Curation
+      val kept = Curation.rebalanceWith(df, Curation.rebalanceRates(df, shares))
         .select("doc_id").collect().map(_.getLong(0)).toSet
       // independent JVM reference of the whole threshold pipeline
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -166,7 +167,11 @@ class PropertySpec extends AnyFunSuite {
         ni = (sa intersect sb).size.toLong
         if ni * 10000 >= sa.size.toLong * 8000 && ni > 0
       } yield (a, b, ni, sa.size.toLong)).toSet
-      val got = NearDup.containmentPairs(docs.toDF("doc_id", "text"))
+      // q98's path: posting lists → pair counts → directional tests
+      val (pairs, sizes) = NearDup.pairCountsFromLists(NearDup.postingLists(
+        NearDup.shingleIndex(docs.toDF("doc_id", "text"), "doc_id",
+          col("text")), "doc_id"), "doc_id")
+      val got = NearDup.containmentFromCounts(pairs, sizes, identity)
         .collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
@@ -188,7 +193,8 @@ class PropertySpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val words = docs.map { case (id, t) =>
         id -> t.split("\\s+").length.toLong }.toMap
-      val rows = NearDup.canonicalPerCluster(df).collect()
+      val rows = NearDup.canonicalSelection(
+          NearDup.dedupCorpus(df, "doc_id", col("text")), df).collect()
         .map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
       // one row per distinct cluster label; sizes sum to the corpus

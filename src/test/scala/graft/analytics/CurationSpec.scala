@@ -208,17 +208,17 @@ class CurationSpec extends AnyFunSuite {
     assert(audit.values.exists(_._3 >= 256))
     assert(audit.values.exists(_._3 < 256))
     // the audit's n_kept IS the kept set's size (operator ≡ report)
-    val keptCounts = Curation.rebalance(docs, Curation.TargetShares)
+    def keptDocs = Curation.rebalanceWith(docs,
+      Curation.rebalanceRates(docs, Curation.TargetShares))
+    val keptCounts = keptDocs
       .groupBy("lang").agg(count(lit(1)).as("k")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     audit.foreach { case (lang, (_, _, _, kept)) =>
       assert(keptCounts.getOrElse(lang, 0L) == kept)
     }
     // determinism: a second evaluation returns the identical kept ids
-    val ids1 = Curation.rebalance(docs, Curation.TargetShares)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val ids2 = Curation.rebalance(docs, Curation.TargetShares)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val ids1 = keptDocs.select("doc_id").collect().map(_.getLong(0)).toSet
+    val ids2 = keptDocs.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids1 == ids2)
   }
 

@@ -84,7 +84,11 @@ class NearDupSpec extends AnyFunSuite {
     val other = (200 to 230).map(i => s"u$i").mkString(" ")
     val docs = Seq((1L, big), (2L, slice), (3L, other))
       .toDF("doc_id", "text")
-    val rows = NearDup.containmentPairs(docs).collect()
+    // q98's path: posting lists → pair counts → directional tests
+    val (pairs, sizes) = NearDup.pairCountsFromLists(NearDup.postingLists(
+      NearDup.shingleIndex(docs, "doc_id", col("text")), "doc_id"), "doc_id")
+    val rows = NearDup.containmentFromCounts(pairs, sizes, identity)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getString(4))))
       .toMap
@@ -93,8 +97,6 @@ class NearDupSpec extends AnyFunSuite {
     assert(nContained == 8L && nInter == 8L)   // 10 tokens → 8 shingles
     assert(c == "1.0000")
     // and the Jaccard pair set at the 0.5 gate really misses it
-    val sh = NearDup.shingleIndex(docs, "doc_id", col("text"))
-    val (pairs, sizes, _, _) = NearDup.invertedPairCounts(sh, "doc_id")
     val ns = sizes.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val jac = pairs.collect().map { r =>
       val (a, b, ni) = (r.getLong(0), r.getLong(1), r.getLong(2))
@@ -115,7 +117,8 @@ class NearDupSpec extends AnyFunSuite {
       (30L, "p q r s t"),
       (31L, "p q r s t"))     // exact-dup pair, equal length → tie on id
       .toDF("doc_id", "text")
-    val byCluster = NearDup.canonicalPerCluster(docs).collect()
+    val byCluster = NearDup.canonicalSelection(
+        NearDup.dedupCorpus(docs, "doc_id", col("text")), docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(byCluster(10L) == ((11L, 3L, 62L)))   // longest member wins
@@ -247,15 +250,18 @@ class NearDupSpec extends AnyFunSuite {
       .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
     val df = docs.toDF("doc_id", "text")
 
-    val got = NearDup.canonicalSimJoin(df)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    // brute force ON THE REPRESENTATIVES: canonical selection (already
-    // spec/oracle-certified on its own), then the unfiltered exact
-    // pair join restricted to those docs
-    val reps = NearDup.canonicalPerCluster(df)
+    // q109's composition: canonical selection (already
+    // spec/oracle-certified on its own), then the inverted-index join
+    // at τ = 1/20 on the representatives
+    val reps = NearDup.canonicalSelection(
+        NearDup.dedupCorpus(df, "doc_id", col("text")), df)
       .select(col("canonical_id").as("doc_id"))
     val rdf = df.join(reps, "doc_id")
+    val got = NearDup.invertedSimJoin(rdf, 1, 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+    // brute force ON THE REPRESENTATIVES: the unfiltered exact pair
+    // join restricted to those docs
     val sh = NearDup.shingleIndex(rdf, "doc_id", col("text"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -294,7 +300,8 @@ class NearDupSpec extends AnyFunSuite {
     val docs = graft.io.Tables.load(spark, d, "documents")
     val stored = NearDup.canonicalRepsStored(spark, d, docs)
       .collect().map(_.getLong(0)).toSet
-    val fresh = NearDup.canonicalPerCluster(docs)
+    val fresh = NearDup.canonicalSelection(
+        NearDup.dedupCorpus(docs, "doc_id", col("text")), docs)
       .select("canonical_id").collect().map(_.getLong(0)).toSet
     assert(stored == fresh && stored.nonEmpty)
     // second call is a pure artifact read (fingerprint unchanged)

@@ -116,65 +116,6 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(store.read(spark, "silver", "t").get.head().getInt(0) == 4)
   }
 
-  test("compact collapses many tiny files into few, data unchanged") {
-    val store = new ModelStore(
-      Files.createTempDirectory("graft-store-compact").toString)
-    // simulate accumulated tiny-file state: a 32-way repartitioned write
-    val df = spark.range(1000).selectExpr("id AS k", "id * 2 AS v")
-      .repartition(32)
-    store.write(df, "silver", "t")
-    def parquetFiles(v: Int): Int = {
-      val dir = new java.io.File(store.versionDir("silver", "t", v))
-      Option(dir.listFiles).map(_.count(_.getName.endsWith(".parquet")))
-        .getOrElse(0)
-    }
-    val before = parquetFiles(1)
-    assert(before > 8, s"setup should fan out files, got $before")
-
-    store.compact(spark, "silver", "t")
-    assert(store.currentVersion(spark, "silver", "t") == 2)
-    val after = parquetFiles(2)
-    assert(after < before / 2, s"compact: $before → $after files")
-    // byte-identical content
-    val a = store.readVersion(spark, "silver", "t", 1)
-    val b = store.read(spark, "silver", "t").get
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    // compacting a missing table is a no-op
-    store.compact(spark, "silver", "nope")
-    assert(store.currentVersion(spark, "silver", "nope") == 0)
-  }
-
-  test("compact preserves the stored partition layout by default") {
-    val store = new ModelStore(
-      Files.createTempDirectory("graft-store-compact-layout").toString)
-    val df = spark.range(300).selectExpr(
-      "id AS k", "id % 3 AS p", "id * 2 AS v")
-    store.write(df, "silver", "t", partitionBy = Seq("p"),
-      zorderBy = Seq("k"))
-    assert(store.hasPartitionLayout(spark, "silver", "t", Seq("p")))
-    // a routine maintenance compact (no layout args) used to rewrite
-    // the table UNPARTITIONED, permanently demoting every later
-    // incremental merge to a full rewrite — it must re-apply the
-    // stored layout instead
-    store.compact(spark, "silver", "t")
-    assert(store.currentVersion(spark, "silver", "t") == 2)
-    assert(store.hasPartitionLayout(spark, "silver", "t", Seq("p")),
-      "compact flattened the partition layout")
-    assert(store.meta(spark, "silver", "t", "layout_zorder_by")
-      .contains("k"), "compact dropped the zorder layout")
-    // the layout declaration survives the compact commit too (meta
-    // carry-forward + explicit rewrite), so a SECOND compact still
-    // preserves it
-    store.compact(spark, "silver", "t")
-    assert(store.hasPartitionLayout(spark, "silver", "t", Seq("p")))
-    val a = df.select("k", "p", "v")
-    val b = store.read(spark, "silver", "t").get.select("k", "p", "v")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    // an explicit layout argument is still honored (deliberate op)
-    store.compact(spark, "silver", "t", partitionBy = Seq("v"))
-    assert(store.hasPartitionLayout(spark, "silver", "t", Seq("v")))
-  }
-
   test("missing table reads as None, version 0") {
     val store = new ModelStore(
       Files.createTempDirectory("graft-store3").toString)
@@ -215,14 +156,14 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(store.read(spark, "silver", "t").get.count() == 4)
   }
 
-  test("metadata persists across writes until overwritten — compact " +
-      "cannot erase streaming exactly-once markers") {
+  test("metadata persists across writes until overwritten — a " +
+      "meta-less rewrite cannot erase streaming exactly-once markers") {
     val store = new ModelStore(
       Files.createTempDirectory("graft-store-meta").toString)
     // markers a caller's own stream driver stamps through write(meta)
     store.write(Seq((1, "a")).toDF("k", "v"), "silver", "m",
       meta = Map("stream_batch_id" -> "42", "stream_query_id" -> "q1"))
-    store.compact(spark, "silver", "m")
+    store.write(store.read(spark, "silver", "m").get, "silver", "m")
     assert(store.meta(spark, "silver", "m", "stream_batch_id")
       .contains("42"))
     assert(store.meta(spark, "silver", "m", "stream_query_id")
@@ -234,20 +175,6 @@ class ModelStoreSpec extends AnyFunSuite {
       .contains("43"))
     assert(store.meta(spark, "silver", "m", "stream_query_id")
       .contains("q1"))
-  }
-
-  test("diffVersions classifies added/removed/changed, drops unchanged") {
-    val store = new ModelStore(
-      Files.createTempDirectory("graft-store").toString)
-    store.write(Seq((1, "a", 10), (2, "b", 20), (3, "c", 30))
-      .toDF("k", "v", "n"), "silver", "t")
-    store.write(Seq((1, "a", 10), (2, "B", 20), (4, "d", 40))
-      .toDF("k", "v", "n"), "silver", "t")
-    val diff = store.diffVersions(spark, "silver", "t", "k", 1, 2)
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-    assert(diff == Map(2 -> "CHANGED", 3 -> "REMOVED", 4 -> "ADDED"))
-    // self-diff is empty
-    assert(store.diffVersions(spark, "silver", "t", "k", 2, 2).isEmpty)
   }
 
   test("stat-parts serialization round-trips adversarial rels/values") {
@@ -327,12 +254,12 @@ class ModelStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("compact keeps the table comment") {
+  test("a description-less rewrite keeps the table comment") {
     val store = new ModelStore(
       Files.createTempDirectory("graft-store-comment").toString)
     store.write(Seq((1, "a")).toDF("k", "v"), "silver", "c",
       description = "one row per customer")
-    store.compact(spark, "silver", "c")
+    store.write(store.read(spark, "silver", "c").get, "silver", "c")
     assert(store.currentVersion(spark, "silver", "c") == 2)
     assert(store.comment(spark, "silver", "c")
       .contains("one row per customer"))
@@ -372,7 +299,6 @@ class ModelStoreSpec extends AnyFunSuite {
     assert(store.currentVersion(spark, "s", "t") == 1)
     assert(store.hasPartitionLayout(spark, "s", "t", Seq("b")))
     assert(rowsByBatch(store, "t") == Set((1, "a", 7L), (2, "b", 7L)))
-    assert(store.meta(spark, "s", "t", "layout_partition_by").contains("b"))
     // the footer stores the batch's own columns; b lives in the dir name
     val footer = ParquetStats.sparkSchema(
       spark.sparkContext.hadoopConfiguration,
